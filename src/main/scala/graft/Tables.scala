@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata (TESTDATA.md). One parquet per
   * table; `events.ts` is nanosecond-precision and needs an explicit cast.
@@ -13,7 +14,34 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** The one parquet reader. Bare `spark.read.parquet` runs a schema-
+    * inference job (a footer read) on every call; here a regular file's
+    * schema is inferred once and later reads pass it explicitly, so they
+    * run no job. The cache key is (session, canonical path, length,
+    * lastModified): inference depends on session settings (`nanosAsLong`
+    * types `events.ts`), and a rewritten file changes its length or mtime,
+    * so it misses and is inferred again. Directories are not cached. Only
+    * the schema is cached: every call builds a fresh relation with fresh
+    * expression ids, so self-joins resolve as with a bare read.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Long, Long), StructType]()
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path).getCanonicalFile
+    if (!f.isFile) spark.read.parquet(path)
+    else {
+      val key = (spark, f.getPath, f.length, f.lastModified)
+      val cached = schemas.get(key)
+      if (cached != null) spark.read.schema(cached).parquet(path)
+      else {
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+      }
+    }
+  }
 
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (surfacing as Long
     * under spark.sql.legacy.parquet.nanosAsLong=true) and as TIMESTAMP(µs)
@@ -24,7 +52,7 @@ object Tables {
     * to what DuckDB's reader produces; oracle comparisons line up exactly.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -62,10 +90,11 @@ object Tables {
   }
 
   /** Register every table as a temp view so shared ANSI SQL (run by both
-    * spark.sql and the DuckDB oracle) resolves the same relations. View
-    * registration is metadata-only but costs a schema-inference footer read
-    * per table, so cache per (session, dir) — re-registering 10 tables per
-    * query inflated every shared query's latency in r1's bench.
+    * spark.sql and the DuckDB oracle) resolves the same relations. Views
+    * are cached per (session, dir): re-registering 10 tables per query
+    * inflated every shared query's latency in r1's bench. Registration is
+    * metadata-only; through [[parquet]] only a session's first read of a
+    * table pays its schema-inference footer read.
     */
   private val registeredDir = new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
   def registerAll(spark: SparkSession, dir: String): Unit =

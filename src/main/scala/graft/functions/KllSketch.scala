@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -37,20 +36,6 @@ object KllOps {
     val s = heapify(a)
     s.merge(heapify(b))
     s.toByteArray
-  }
-
-  /** Equi-height bin boundaries: the (numBins+1) quantiles at ranks
-    * i/numBins, deduplicated (a heavy value can own several ranks —
-    * collapsing keeps bins strictly ordered, fewer-but-honest).
-    */
-  def equiHeightBounds(bytes: Array[Byte], numBins: Int): Array[Double] = {
-    val s = heapify(bytes)
-    if (s.isEmpty) return Array.empty
-    val ranks = (0 to numBins).map(_.toDouble / numBins).toArray
-    val qs = s.getQuantiles(ranks, QuantileSearchCriteria.INCLUSIVE)
-    val out = new scala.collection.mutable.ArrayBuffer[Double](qs.length)
-    qs.foreach { q => if (out.isEmpty || out.last < q) out += q }
-    out.toArray
   }
 
   def n(bytes: Array[Byte]): Long = heapify(bytes).getN

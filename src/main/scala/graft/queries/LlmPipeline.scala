@@ -91,8 +91,6 @@ object LlmPipeline {
       (tf + lit(1.2) * (lit(0.25) + lit(0.75) * len / avgdl))
       ).cast("decimal(18,6)")
 
-  /** Fixed probe terms exposed for the q201 index probe. */
-  private[graft] def bm25Terms: Seq[String] = Q196Terms
   private def bm25Scores(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))

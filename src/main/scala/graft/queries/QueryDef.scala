@@ -35,10 +35,4 @@ object QueryDef {
     */
   def df(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  /** Not SQL-expressible in DuckDB → driver records a weaker rows-only
-    * check. Keep these deterministic anyway.
-    */
-  def unoracled(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -169,8 +169,6 @@ object Relational {
     } finally edges.unpersist(blocking = false)
   }
   private def davg(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double") / count(lit(1))
-  private val SUM = "CAST(sum(CAST(%s AS DECIMAL(18,6))) AS DOUBLE)"
-  private def dsumSql(e: String) = SUM.format(e)
 
   val defs: Seq[QueryDef] = Seq(
     // ───── q01: TPC-H Q1 shape — scan-heavy partial+final aggregation ────

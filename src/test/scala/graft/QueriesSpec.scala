@@ -11,6 +11,39 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it starts from this thread. Jobs
+    * are tagged with a local property; a marker job run afterwards in the
+    * same tag flushes the asynchronous listener bus, so a body that starts
+    * jobs cannot be counted as starting none.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(key)).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == s"$tag:marker" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = body
+      sc.setLocalProperty(key, s"$tag:marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Executes every registered query end-to-end on sf0.001. Value-level
@@ -33,6 +66,17 @@ class QueriesSpec extends AnyFunSuite {
       .select("l_returnflag", "l_linestatus").distinct().count()
     assert(rows.length == expected)
     assert(rows.map(_.getString(0)).distinct.sorted.sameElements(Array("A", "N", "R")))
+  }
+
+  test("warm construction of q01/q07/q13/q20 starts no Spark job") {
+    // the first construction may infer table schemas; after it, building a
+    // query's DataFrame is metadata-only (Tables caches each schema)
+    Seq("q01_pricing_summary", "q07_supplier_part_rank", "q13_promo_share",
+      "q20_string_funcs").foreach { q =>
+      SparkEntry.queries(q)(spark, sf)
+      val (_, jobs) = jobsDuring(SparkEntry.queries(q)(spark, sf))
+      assert(jobs == 0, s"$q construction started $jobs jobs")
+    }
   }
 
   test("entry returns rows") {
