@@ -27,6 +27,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((session, delegate) =>
       new graft.catalog.EqualityMergeParser(session, delegate))
 
+    // a merge-on-read MERGE from a small local source scans only the target
+    // files its ON keys can hit (pre-CBO: see MergeSourceKeys for why)
+    ext.injectPreCBORule(_ => graft.catalog.MergeSourceKeys)
+
     // CDC changelog as a SQL table-valued function:
     //   SELECT * FROM table_changes('cat.ns.t', start_id[, end_id])
     // (the Delta table_changes / Iceberg changelog-scan shape). The spliced

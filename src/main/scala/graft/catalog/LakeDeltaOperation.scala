@@ -3,12 +3,17 @@ package graft.catalog
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GenericInternalRow, In, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.optimizer.CombineFilters
+import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project, WriteDelta}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -91,7 +96,9 @@ final class LakeDeltaOperation(
       eqDeletes = table.meta.currentEqDeleteFiles,
       eqKeySchema = table.meta.upsertKeySchema,
       // DELETE/UPDATE/MERGE WHERE key = x IS the point-lookup case: the
-      // find-matching-rows scan bloom-prunes like any read
+      // find-matching-rows scan bloom-prunes like any read. A MERGE from
+      // a small local source gets the same: [[MergeSourceKeys]] turns its
+      // ON keys into `key IN (...)` filters that reach pushFilters here
       bloomFor = table.bloomLookupFor(
         table.meta.snapshot(table.meta.currentSnapshotId)))
 
@@ -100,6 +107,79 @@ final class LakeDeltaOperation(
       override def build(): DeltaWrite =
         new LakeDeltaWrite(table, cmd, info, store, hadoopConf, foldOnCommit)
     }
+}
+
+/** Key pruning for a delta MERGE whose source is a small local relation
+  * (`USING (VALUES ...)`, a literal DataFrame): in an inner or right-outer
+  * join with the target on the left, a target row whose ON key is not
+  * among the source's keys can match nothing, so reading it is waste.
+  * Spark's dynamic partition pruning does not fire here (a VALUES list
+  * has no selective predicate), and without this rule the find-matching
+  * scan reads and shuffles the whole table. For every `target.a =
+  * source.b` conjunct with equal, exactly comparable types, the rule puts
+  * `a IN (distinct non-null b)` directly over the target relation; it runs
+  * as a pre-CBO rule, after OptimizeIn and before V2 scan pushdown, so the
+  * list stays an `In` and reaches [[LakeScanBuilder.pushFilters]], where
+  * manifest, bucket, min/max and bloom pruning apply as for any read.
+  *
+  * Left alone: `WHEN NOT MATCHED BY SOURCE` (left/full outer joins need
+  * every target row), copy-on-write ReplaceData plans (they carry
+  * unmatched rows through), casted keys, non-equi conjuncts, and sources
+  * over [[MergeSourceKeys.MaxSourceRows]] rows (the list is evaluated per
+  * scanned row).
+  */
+object MergeSourceKeys extends Rule[LogicalPlan] with PredicateHelper {
+  val MaxSourceRows = 256
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case wd @ WriteDelta(target: DataSourceV2Relation, _, query, _, _, _)
+        if wd.operation.isInstanceOf[LakeDeltaOperation] =>
+      wd.copy(query = query.transformUp {
+        case j @ Join(left, Local(rows, src), Inner | RightOuter, Some(cond), _)
+            if rows.size <= MaxSourceRows =>
+          left.collect { case r: DataSourceV2Relation => r } match {
+            case Seq(rel) if rel.table eq target.table =>
+              val keys = splitConjunctivePredicates(cond).flatMap {
+                case EqualTo(a: Attribute, b: Attribute) =>
+                  keyIn(rel, a, rows, src, b).orElse(keyIn(rel, b, rows, src, a))
+                case _ => None
+              }
+              if (keys.isEmpty) j
+              else j.copy(left = CombineFilters(left.transformUp {
+                case r: DataSourceV2Relation => Filter(keys.reduce(And), r)
+              }))
+            case _ => j
+          }
+      })
+  }
+
+  /** `t IN (source column s's distinct non-null values)`, when `t` is a
+    * target column and `s` a source column of the same type. */
+  private def keyIn(rel: DataSourceV2Relation, t: Attribute, rows: Seq[InternalRow],
+      src: Seq[Attribute], s: Attribute): Option[Expression] = {
+    val i = src.indexWhere(_.exprId == s.exprId)
+    if (i < 0 || !rel.outputSet.contains(t) || t.dataType != s.dataType || !exact(t.dataType)) None
+    else Some(In(t, rows.map(_.get(i, s.dataType)).filter(_ != null).distinct
+      .map(Literal(_, s.dataType))))
+  }
+
+  // types whose equality is value equality on Catalyst's internal values
+  // and on the writer's min/max stats (no collations, no -0.0/NaN)
+  private def exact(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+        TimestampType | TimestampNTZType | StringType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** A local relation, possibly under a projection of its attributes. */
+  private object Local {
+    def unapply(p: LogicalPlan): Option[(Seq[InternalRow], Seq[Attribute])] = p match {
+      case l: LocalRelation => Some((l.data, l.output))
+      case Project(list, l: LocalRelation) if list.forall(_.isInstanceOf[Attribute]) =>
+        Some((l.data, l.output))
+      case _ => None
+    }
+  }
 }
 
 /** The delta write: no required distribution (tombstones and inserts flow

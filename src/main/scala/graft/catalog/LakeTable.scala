@@ -497,10 +497,11 @@ private[catalog] object FilterToColumn {
 
 /** Copy-on-write row-level operation (UPDATE / MERGE INTO). The scan side
   * records which snapshot files it read; the write side's commit swaps
-  * exactly those files for the rewritten ones. Without runtime group
-  * filtering the scan covers the whole current snapshot (full-table COW) —
-  * correct always; file-level pruning for row-level commands is the
-  * SupportsRuntimeV2Filtering follow-up.
+  * exactly those files for the rewritten ones. The scan prunes by the
+  * command's pushed filters and, through Spark's runtime group filtering,
+  * by the partition and bloom values of the rows the command matches
+  * (`runtimeFilterCols` below), so the commit rewrites only the files
+  * holding a matched row.
   */
 final class LakeRowLevelOperation(
     table: LakeTable,
@@ -1105,6 +1106,8 @@ final class LakeScan(
       pqDeleteFilesC = null
     }
     delegate = null // rebuild the parquet scan over the pruned list
+    keyGroupsV = null // and the storage-partitioned batch
+    keyedBatchV = null
     // the row estimate and column stats fold over files/deleteFilesV/
     // eqDeletesV — a stale cache here would report pre-pruning rows next
     // to post-pruning sizeInBytes (internally inconsistent stats)
@@ -1156,8 +1159,17 @@ final class LakeScan(
 
   /** (key row, files) per partition value — None if any file is not cleanly
     * single-valued on the partition columns (then no SPJ, regular planning).
+    * Cached until [[filter]] prunes `files`: a grouping frozen before a
+    * runtime filter reads every pre-filter file, and a copy-on-write
+    * commit, which replaces only the filtered files, would then re-add
+    * the rows of the files it keeps.
     */
-  private lazy val keyGroups: Option[Seq[(InternalRow, Seq[DataFileMeta])]] =
+  @transient private var keyGroupsV: Option[Seq[(InternalRow, Seq[DataFileMeta])]] = null
+  private def keyGroups: Option[Seq[(InternalRow, Seq[DataFileMeta])]] = {
+    if (keyGroupsV == null) keyGroupsV = computeKeyGroups
+    keyGroupsV
+  }
+  private def computeKeyGroups: Option[Seq[(InternalRow, Seq[DataFileMeta])]] =
     // no SPJ when metadata columns are requested or tombstones are pending:
     // those files read through positional partitions, which don't carry keys
     if (partitionCols.isEmpty || files.isEmpty || metaCols.nonEmpty ||
@@ -1175,9 +1187,12 @@ final class LakeScan(
         })
     }
 
-  private lazy val keyedBatch: Option[LakeKeyGroupedBatch] =
-    keyGroups.map(gs => new LakeKeyGroupedBatch(ident, tableSchema, requiredSchema,
-      exprs, options, gs, l2p))
+  @transient private var keyedBatchV: Option[LakeKeyGroupedBatch] = null
+  private def keyedBatch: Option[LakeKeyGroupedBatch] = {
+    if (keyedBatchV == null) keyedBatchV = keyGroups.map(gs =>
+      new LakeKeyGroupedBatch(ident, tableSchema, requiredSchema, exprs, options, gs, l2p))
+    keyedBatchV
+  }
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
     keyedBatch match {
