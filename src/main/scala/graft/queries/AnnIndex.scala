@@ -27,13 +27,9 @@ object AnnIndex {
     */
   def buildSrpIndex(s: SparkSession, emb: DataFrame, indexTable: String,
       bands: Int = 16, bitsPerBand: Int = 4): Unit = {
-    val ns = indexTable.split('.').dropRight(1).mkString(".")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $ns")
-    s.sql(s"DROP TABLE IF EXISTS $indexTable")
-    s.sql(
-      s"""CREATE TABLE $indexTable
-         |  (band INT, bv INT, vec_id BIGINT, label INT, embedding ARRAY<FLOAT>)
-         |  PARTITIONED BY (band, bv)""".stripMargin)
+    Ann.createIndex(s, indexTable,
+      "(band INT, bv INT, vec_id BIGINT, label INT, embedding ARRAY<FLOAT>) PARTITIONED BY (band, bv)",
+      Nil)
     emb.select(col("vec_id"), col("label").cast("int").as("label"), col("embedding"),
         posexplode(srpBands(col("embedding"), bands, bitsPerBand)).as(Seq("band", "bv")))
       .select("band", "bv", "vec_id", "label", "embedding")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialized inverted index for BM25 retrieval (q201) — the lexical
-  * twin of the ANN index tables (AnnIndex/PqAnn): postings live in a
+  * twin of the ANN index tables (AnnIndex/Ann): postings live in a
   * catalog table `(tok, doc_id, tf, len)` PARTITIONED BY bucket(16, tok)
   * — doc length DENORMALIZED into each posting — with a companion length
   * table and the corpus statistics (N, Σlen) pinned in TBLPROPERTIES at

@@ -1,21 +1,21 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
-import graft.functions.{PqOps, TextHashing}
+import graft.functions.PqOps
 import graft.functions.TextHashing.cosineSim
 
-/** The ANN k-means family under the DuckDB ORACLE (VERDICT r11 #1): the
-  * trained parameters — coarse IVF centroids, PQ codebook, and the probe
-  * vector — are FROZEN as literals (trained once on sf0.01 by [[FrozenAnnFreeze]],
-  * the q92 phash64-literal precedent), so cell assignment, PQ encoding, the
-  * ADC scan, and the cosine re-rank all replay bit-for-bit in DuckDB and
-  * ride the hash gate. Training itself stays value-pinned in
-  * AnnIndexSpec/PqSpec (k-means tie-break order has no SQL equivalent);
-  * these queries gate everything AFTER training — which is also the shape
-  * of every production ANN probe: the index parameters are fixed at build
-  * time, queries arrive as external vectors.
+/** The float ANN family under the DuckDB ORACLE: the trained parameters —
+  * coarse IVF centroids, PQ codebook, and the probe vector — are FROZEN as
+  * literals (the q92 phash64-literal precedent). They are fixed oracle
+  * fixtures, never retrained: cell assignment, PQ encoding, the ADC scan,
+  * and the cosine re-rank all replay bit-for-bit in DuckDB and ride the
+  * hash gate. These queries gate everything AFTER training — which is also
+  * the shape of every production ANN probe: the index parameters are fixed
+  * at build time, queries arrive as external vectors. The steps themselves
+  * are [[Ann]]'s, under its [[Ann.FloatCodec]].
   *
   * Replay contract with the codegen expressions (PqOps):
   *  - distances accumulate left-to-right in DOUBLE over float-widened
@@ -44,8 +44,7 @@ object FrozenAnn {
   private val NprobeIvf = 2   // q190, mirrors q51
   private val NprobeIvfPq = 4 // q192, mirrors q72
 
-  // ── frozen parameters (regenerate: `runMain graft.queries.FrozenAnnFreeze
-  // /root/testdata/sf0.01`, paste the three printed lines) ────────────────
+  // ── frozen parameters: fixed fixtures the oracle SQL is generated from ──
   private val FrozenCoarseB64: String =
     "PwITPWz5xrrSidM8OK2wvFjc77zWOgE9d0fBvd2Gmr2Bqt87tvaFvL7CVbwuliG8m1GzvWdYSDwBu0O98P6iPKcEJz" +
     "3J5BE9J1xyPQLhgzxAVh29A8FqPQzkebvZPmW7YCS5u2xBjL3eVoo8n+nYuy4AYjtNnqW80PTbPC2dDD2twci8jgbX" +
@@ -176,9 +175,10 @@ object FrozenAnn {
     "vj3E/juWNg69M8oNvO0cujyEKUg8FFowPSyBrj2j/WS8uD4UviBrFb3V2sk8iwffPccvfj3jqwy+UtwSPms0A769S6" +
     "s8Sfl2PhgAoD0XZAC+WzVfPbEY0Dsoqj49gGQdPSoqNL46xwC+96RevejKQjyL1dc9jR2Evg=="
 
-  private lazy val coarse: Array[Float] = PqAnn.unpackFloats(FrozenCoarseB64)
-  private lazy val codebook: Array[Float] = PqAnn.unpackFloats(FrozenCodebookB64)
-  private lazy val qvec: Array[Float] = PqAnn.unpackFloats(FrozenQueryB64)
+  private lazy val coarse: Array[Float] = Ann.unpackFloats(FrozenCoarseB64)
+  private lazy val codebook: Array[Float] = Ann.unpackFloats(FrozenCodebookB64)
+  private lazy val qvec: Array[Float] = Ann.unpackFloats(FrozenQueryB64)
+  private lazy val frozen = Ann.FloatCodec(codebook, coarse, M, Ksub, Cells)
   // derived, not separately frozen: the ADC lookup table and the probed
   // cells are pure functions of the frozen arrays (same driver code paths
   // a live probe runs)
@@ -188,8 +188,7 @@ object FrozenAnn {
   private[graft] def frozenParams: (Array[Float], Array[Float], Array[Float]) =
     (codebook, coarse, qvec)
   private[graft] def frozenQueryVec: Array[Float] = qvec
-  private def probedCells(nprobe: Int): Seq[Int] =
-    PqAnn.nearestCells(qvec, coarse, Cells, nprobe)
+  private def probedCells(nprobe: Int): Seq[Int] = frozen.nearest(qvec, nprobe)
 
   // ── SQL generation from the frozen floats ───────────────────────────────
   /** Exact double-widened value of a float, as a SQL literal. DuckDB
@@ -326,10 +325,8 @@ object FrozenAnn {
     // assigned cell rides in the output so the oracle pins the ASSIGNMENT,
     // not just the final ranking.
     QueryDef.df("q190_ivf_frozen", q190OracleSql) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label").cast("int").as("label"), col("embedding"))
-      emb.withColumn("cell", PqAnn.assignCell(col("embedding"), coarse, Cells))
-        .filter(col("cell").isin(probedCells(NprobeIvf).map(Integer.valueOf): _*))
+      Ann.baseOf(t(s, dir, "embeddings")).withColumn("cell", frozen.cell(col("embedding")))
+        .filter(col("cell").isin(probedCells(NprobeIvf): _*))
         .select(col("vec_id"), col("label"), col("cell"),
           cosineSim(col("embedding"), lit(qvec)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
@@ -343,19 +340,9 @@ object FrozenAnn {
     // shortlist re-ranks by exact cosine. DuckDB replays the per-subspace
     // argmin, the sub-ordered code list, and the FLOAT ADC fold.
     QueryDef.df("q191_pq_frozen", q191OracleSql) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label").cast("int").as("label"), col("embedding"))
-      val shortlist = emb
-        .select(col("vec_id"),
-          PqOps.pqAdc(PqOps.pqEncode(col("embedding"), codebook, M, Ksub), lut, Ksub).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id"))
-        .limit(Rerank)
-        .select(col("vec_id"))
-      emb.join(broadcast(shortlist), "vec_id")
-        .select(col("vec_id"), col("label"),
-          cosineSim(col("embedding"), lit(qvec)).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(K)
+      val emb = Ann.baseOf(t(s, dir, "embeddings"))
+      val shortlist = frozen.shortlist(emb, frozen.codes(col("embedding")), qvec, Rerank)
+      Ann.rerank(emb, shortlist.select("vec_id"), qvec, K)
     },
 
     // ───── q192: IVF-PQ probe of the MATERIALIZED index, frozen (q72) ────
@@ -366,6 +353,12 @@ object FrozenAnn {
     // scan of the 4 nearest cells, exact re-rank. DuckDB replays coarse
     // assignment, candidate pruning, encoding, the ADC shortlist, and the
     // re-rank from the raw parquet.
+    QueryDef.df("q192_ivfpq_frozen", q192OracleSql) { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      Ann.build(s, emb, "lake.idx.emb_ivfpq_frozen", frozen)
+      probe(s, "lake.idx.emb_ivfpq_frozen", emb)
+    },
+
     // ───── q194: batched exact KNN JOIN on int8-quantized vectors ────────
     // The hard-negative-mining / seed-set-dedup shape: EVERY seed vector
     // (vec_id < 5, the in-data query batch) gets its 5 nearest corpus
@@ -414,14 +407,6 @@ object FrozenAnn {
         .orderBy("qid", "rk")
     },
 
-    QueryDef.df("q192_ivfpq_frozen", q192OracleSql) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      PqAnn.buildIvfPqIndex(s, emb, "lake.idx.emb_ivfpq_frozen",
-        cells = Cells, m = M, ksub = Ksub, frozen = Some((codebook, coarse)))
-      PqAnn.probeIvfPqIndexVec(s, "lake.idx.emb_ivfpq_frozen", emb, qvec,
-        k = K, nprobe = NprobeIvfPq, rerank = Rerank)
-    },
-
     // ───── q199: INCREMENTAL index refresh == full rebuild (oracled) ─────
     // The ingest workflow a 100 TB vector corpus actually runs: the index
     // is built once (parameters pinned in TBLPROPERTIES), then daily
@@ -433,37 +418,19 @@ object FrozenAnn {
     // not assumed. Build over the even half, refresh with the odd half.
     QueryDef.df("q199_ann_index_refresh", q192OracleSql) { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      PqAnn.buildIvfPqIndex(s, emb.filter(col("vec_id") % 2 === 0),
-        "lake.idx.emb_ivfpq_refresh",
-        cells = Cells, m = M, ksub = Ksub, frozen = Some((codebook, coarse)))
-      PqAnn.refreshIvfPqIndex(s, "lake.idx.emb_ivfpq_refresh",
-        emb.filter(col("vec_id") % 2 === 1))
-      PqAnn.probeIvfPqIndexVec(s, "lake.idx.emb_ivfpq_refresh", emb, qvec,
-        k = K, nprobe = NprobeIvfPq, rerank = Rerank)
+      Ann.build(s, emb.filter(col("vec_id") % 2 === 0), "lake.idx.emb_ivfpq_refresh", frozen)
+      Ann.refresh(s, "lake.idx.emb_ivfpq_refresh", emb.filter(col("vec_id") % 2 === 1))
+      probe(s, "lake.idx.emb_ivfpq_refresh", emb)
     }
   )
-}
 
-/** Regenerates [[FrozenAnn]]'s frozen parameter literals: trains the coarse
-  * centroids + PQ codebook on the given sf dir with the SAME trainers the
-  * live q51/q68/q72 family uses, takes vec_id 0's embedding as the probe
-  * vector, prints the three base64 strings.
-  */
-object FrozenAnnFreeze {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = t(spark, dir, "embeddings")
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("embedding"))
-    val cb = PqAnn.train(spark, base, m = 16, ksub = 16)
-    val coarse = PqAnn.trainCoarse(spark, base, cells = 16)
-    val q = base.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getAs[scala.collection.Seq[Float]](0).toArray
-    println("FROZEN_COARSE=" + PqAnn.packFloats(coarse))
-    println("FROZEN_CB=" + PqAnn.packFloats(cb))
-    println("FROZEN_Q=" + PqAnn.packFloats(q))
-    spark.stop()
+  /** The frozen query's top-10 from an IVF-PQ index: ADC shortlist over
+    * the 4 nearest cells, exact re-rank; the assigned cell rides in the
+    * output so the oracle pins the IVF assignment, not just the ranking.
+    */
+  private def probe(s: SparkSession, table: String, emb: DataFrame): DataFrame = {
+    val (codec, rows) = Ann.scan(s, table, qvec, NprobeIvfPq)
+    val shortlist = codec.shortlist(rows, col("codes"), qvec, Rerank)
+    Ann.rerank(Ann.baseOf(emb), shortlist.select("vec_id", "cell"), qvec, K)
   }
 }

@@ -707,9 +707,9 @@ object LlmPipeline {
     // (no-oracle: float centroid sums are partition-order-dependent) onto
     // q157's integer-space Lloyd's — every cell decision is an exact
     // BIGINT, the final top-10 is exact cosine over the original floats
-    // (the q26-proven replayable op). See [[Int8Ann]].
-    QueryDef.df("q51_ann_ivf", Int8Ann.q51OracleSql) { (s, dir) =>
-      Int8Ann.ivfTopK(s, t(s, dir, "embeddings"))
+    // (the q26-proven replayable op). See [[Ann]].
+    QueryDef.df("q51_ann_ivf", Ann.q51OracleSql) { (s, dir) =>
+      Ann.materialized(s, q51Plan(s, dir))
     },
 
     // ───── q52: ANN probe against the MATERIALIZED catalog index ─────────
@@ -739,13 +739,15 @@ object LlmPipeline {
     // the floats never could, and the scan is pure sequential lookups.
     // LlmSpec pins recall@10 vs the q26 brute-force oracle. ORACLED in
     // r13: training re-pointed onto q160's integer-space per-subspace
-    // Lloyd's (m=8 × ksub=4 over dim 64) — codes and the ADC shortlist
+    // Lloyd's (m=8 × ksub=8 over dim 64) — codes and the ADC shortlist
     // are exact BIGINTs, the top-10 is exact cosine over the original
-    // floats. The float-trained [[PqAnn.topK]] stays as library surface
-    // (industry-default training; frozen-param q190-q192 gate its
-    // encode/ADC path); the LIVE registry query rides [[Int8Ann]].
-    QueryDef.df("q68_ann_pq", Int8Ann.q68OracleSql) { (s, dir) =>
-      Int8Ann.pqTopK(s, t(s, dir, "embeddings"))
+    // floats.
+    QueryDef.df("q68_ann_pq", Ann.q68OracleSql) { (s, dir) =>
+      Ann.materialized(s, Ann.live(t(s, dir, "embeddings"), cells = 0, m = 8, ksub = 8,
+          probe = 0L) { p =>
+        val shortlist = p.shortlist(p.q.filter(col("vec_id") =!= 0L), 100)
+        Ann.rerank(p.base, shortlist.select("vec_id"), p.qvec, 10)
+      })
     },
 
     // ───── q69: PQ probe against the MATERIALIZED catalog index ──────────
@@ -760,10 +762,10 @@ object LlmPipeline {
     // the catalog must answer exactly what the inline pipeline answers
     // (the q52/q38 index-parity discipline), which also hash-gates the
     // build→pin→probe round-trip of the codebook and scale properties.
-    QueryDef.df("q69_ann_pq_index", Int8Ann.q68OracleSql) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      Int8Ann.buildPqIndexI8(s, emb, "lake.idx.emb_pq_i8")
-      Int8Ann.probePqIndexI8(s, "lake.idx.emb_pq_i8", emb)
+    QueryDef.df("q69_ann_pq_index", Ann.q68OracleSql) { (s, dir) =>
+      val emb = Ann.baseOf(t(s, dir, "embeddings"))
+      Ann.build(s, emb, "lake.idx.emb_pq_i8", Ann.trained(emb, cells = 0, m = 8, ksub = 8))
+      int8IndexProbe(s, "lake.idx.emb_pq_i8", emb, nprobe = 0)
     },
 
     // ───── q76: decontamination (benchmark n-gram overlap) ───────────────
@@ -840,10 +842,10 @@ object LlmPipeline {
     // training, the 2-cell prune, the exact-ADC shortlist and the cosine
     // re-rank from scratch — so the materialized build→probe path is
     // hash-gated end to end against a from-scratch derivation.
-    QueryDef.df("q72_ann_ivfpq", Int8Ann.q72OracleSql) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      Int8Ann.buildIvfPqIndexI8(s, emb, "lake.idx.emb_ivfpq_i8")
-      Int8Ann.probeIvfPqIndexI8(s, "lake.idx.emb_ivfpq_i8", emb)
+    QueryDef.df("q72_ann_ivfpq", Ann.q72OracleSql) { (s, dir) =>
+      val emb = Ann.baseOf(t(s, dir, "embeddings"))
+      Ann.build(s, emb, "lake.idx.emb_ivfpq_i8", Ann.trained(emb, cells = 16, m = 8, ksub = 8))
+      int8IndexProbe(s, "lake.idx.emb_ivfpq_i8", emb, nprobe = 2)
     },
 
     // ───── q71: trained BPE tokenizer (the real-tokenizer upgrade) ───────
@@ -3469,18 +3471,14 @@ object LlmPipeline {
     // Two unrolled Lloyd's iterations, then an IVF probe: vector 42's cell
     // only is searched by exact integer distance. Scale shape: centroids
     // are k rows broadcast everywhere (assignment is the intrinsic O(k·n)
-    // map pass + a map-side WindowGroupLimit argmin); the recompute
+    // map pass, the pq_encode_i8 argmin); the recompute
     // shuffles (cell, dim) partial sums — k·d groups, corpus never moves;
     // at scale the cell id becomes a partition column and the probe prunes
     // to one cell's files (the q52 materialized-index path).
     QueryDef.df(
       "q157_ivf_int8",
       q157OracleSql) { (s, dir) =>
-      val (out, release) = ivfInt8WithRelease(s, dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      Ann.materialized(s, q157Plan(s, dir))
     },
 
     // ───── q162: deterministic weighted sampling (priority sampling) ─────
@@ -3807,19 +3805,15 @@ object LlmPipeline {
     // q157 — bit-identical across engines. exact_dist rides along (same
     // 256 scale) so the ADC approximation quality is visible in the
     // output. Scale shape: codebooks are M·k = 32 rows broadcast
-    // everywhere; encoding is the intrinsic O(M·k·n) map pass with a
-    // map-side WindowGroupLimit argmin; ADC probes join a BROADCAST
-    // 32-row table and hash-agg per vector — at serving scale the codes
+    // everywhere; encoding is the intrinsic O(M·k·n) map pass (the
+    // pq_encode_i8 argmin) and ADC sums a driver-computed 32-entry
+    // lookup table in the same codegen scan — at serving scale the codes
     // table (8 bytes/vector) is the only thing scanned, 32× smaller than
     // the float vectors.
     QueryDef.df(
       "q160_pq_int8",
       q160OracleSql) { (s, dir) =>
-      val (out, release) = pqInt8WithRelease(s, dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      Ann.materialized(s, q160Plan(s, dir))
     },
 
     // ───── q186: contamination SPAN (longest shared n-gram run) ──────────
@@ -4033,49 +4027,42 @@ object LlmPipeline {
     })
   }
 
-  /** q157's lazy plan plus the release callback freeing the persisted
-    * quantized working set — the plan-audit spec reads the plan without
-    * executing it; the QueryDef materializes the 5-row output then
-    * releases (the q144 bounded-output pattern).
+  /** q69/q72's probe of an int8 index: vector 0's exact-cosine top-10 over
+    * the ADC top-100 of the `nprobe` nearest cells, itself excluded.
     */
-  private[graft] def ivfInt8WithRelease(s: SparkSession, dir: String): (DataFrame, () => Unit) = {
-      val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val gs = e.agg(max(array_max(transform(col("embedding"),
-        x => abs(x.cast("double"))))).as("s"))
-      // the quantized corpus is the k-means WORKING SET — persisted once
-      // (one scan + quantize) instead of recomputed by each of the ~6
-      // consumers (both assignment rounds, the recompute, c0, probe,
-      // members); released after the 5-row output materializes, the q144
-      // bounded-output pattern, so no cache survives the query
-      val q = e.crossJoin(broadcast(gs))
-        .select(col("vec_id"),
-          graft.functions.Int8Ops.int8Quantize(col("embedding"), col("s")).as("qv"))
-        .persist()
-      // training rides Int8Ann's collected-grid Lloyd (r13): assignments
-      // are the MAP-SIDE pq_encode_i8 argmin (same exact integer
-      // distances, same ties-to-lowest-cell order the oracle's
-      // row_number replays — the operator q72's probe already proves
-      // against its hash gate), and each round shuffles only (cell, dim)
-      // partial sums; the k·d grid centroids between rounds are
-      // broadcast-build-sized driver metadata. This removes the two
-      // crossJoin + sorted-window assignment passes of the r12 chain
-      // (q157 profiled at 47 jobs / ~2.5 s; see OPTIMIZATION_r13.md).
-      val cents = Int8Ann.trainCoarseArr(q, 8, Int8Ann.seedRows(q, 8))
-      val pv = q.filter(col("vec_id") === 42).select(col("qv"))
-        .head().getSeq[Int](0).toArray
-      // probe cell = vec 42's assignment under the trained grid (same
-      // argmin, driver-side — it is query planning, as q72's probe)
-      val pcell = Int8Ann.nearestCellsI8(pv, cents, 8, 1).head
-      val cellCol = element_at(
-        graft.functions.Int8Ops.pqEncodeI8(col("qv"), cents, 1, 8), 1).cast("int")
-      val members = q.filter(cellCol === pcell)
+  private def int8IndexProbe(s: SparkSession, table: String, emb: DataFrame,
+      nprobe: Int): DataFrame = {
+    val qvec = Ann.vecOf(emb, 0L)
+    val (codec, rows) = Ann.scan(s, table, qvec, nprobe)
+    val shortlist = codec.shortlist(rows.filter(col("vec_id") =!= 0L), col("codes"), qvec, 100)
+    Ann.rerank(emb, shortlist.select("vec_id"), qvec, 10)
+  }
+
+  /** q51's lazy plan plus the release callback of its working set: the
+    * 2 cells nearest vector 0 (16 cells), exact re-rank of their members.
+    */
+  private[graft] def q51Plan(s: SparkSession, dir: String): (DataFrame, () => Unit) =
+    Ann.live(t(s, dir, "embeddings"), cells = 16, m = 0, ksub = 0, probe = 0L) { p =>
+      val cand = p.members(p.codec.nearest(p.qvec, 2)).filter(col("vec_id") =!= 0L)
+      Ann.rerank(p.base, cand.select("vec_id"), p.qvec, 10)
+    }
+
+  /** q157's lazy plan plus the release callback — the plan-audit spec reads
+    * the plan without executing it; the QueryDef materializes the 5-row
+    * output then releases. The probe searches vector 42's own cell (8
+    * cells) by exact integer distance.
+    */
+  private[graft] def q157Plan(s: SparkSession, dir: String): (DataFrame, () => Unit) =
+    Ann.live(t(s, dir, "embeddings"), cells = 8, m = 0, ksub = 0, probe = 42L) { p =>
+      val pcell = p.codec.nearest(p.qvec, 1).head
+      val members = p.members(Seq(pcell))
       val cn = members.agg(count(lit(1)).as("cell_n"))
       // exact probe distance Σ(qv−pv)²: int8_dist computes Σ(256·qv −
       // 256·pv)² = 65536·Σ(qv−pv)², and every term is divisible by 2^16,
       // so the shiftright is exact — one codegen op, no interpreted
       // zip_with
-      val pv256 = lit(pv.map(_ * 256L))
-      val out = members.filter(col("vec_id") =!= 42)
+      val pv256 = lit(p.codec.query(p.qvec).map(_ * 256L))
+      members.filter(col("vec_id") =!= 42)
         .crossJoin(broadcast(cn))
         .select(col("vec_id"),
           shiftright(graft.functions.Int8Ops.int8Dist(col("qv"), pv256), 16).as("dist"),
@@ -4083,8 +4070,7 @@ object LlmPipeline {
           col("cell_n"))
         .orderBy("dist", "vec_id")
         .limit(5)
-      (out, () => { q.unpersist(blocking = true); () })
-  }
+    }
 
   private def q160OracleSql: String =
     """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -4130,38 +4116,18 @@ object LlmPipeline {
       |ORDER BY adc_dist, adc.vec_id
       |LIMIT 10""".stripMargin
 
-  /** q160's lazy plan + release (same contract as [[ivfInt8WithRelease]]).
+  /** q160's lazy plan + release (same contract as [[q157Plan]]): the
+    * ADC top-10 against vector 42 over m=8 × ksub=4 codes; exact_dist
+    * Σ65536·(qv−pv)² = Σ(256·qv − 256·pv)² is one codegen int8_dist.
     */
-  private[graft] def pqInt8WithRelease(s: SparkSession, dir: String): (DataFrame, () => Unit) = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val gs = e.agg(max(array_max(transform(col("embedding"),
-      x => abs(x.cast("double"))))).as("s"))
-    val q = e.crossJoin(broadcast(gs))
-      .select(col("vec_id"),
-        graft.functions.Int8Ops.int8Quantize(col("embedding"), col("s")).as("qv"))
-      .persist()
-    // training rides Int8Ann's collected-grid Lloyd (r13) — map-side
-    // per-subspace encode argmin + one (subspace, cell, dim) partial-sum
-    // shuffle per round; the explode-to-subspace working set, its
-    // persist, and both sorted-window assignment passes are gone (see
-    // ivfInt8WithRelease / OPTIMIZATION_r13.md)
-    val cb = Int8Ann.trainPqArr(q, 8, 4, Int8Ann.seedRows(q, 4))
-    val pv = q.filter(col("vec_id") === 42).select(col("qv"))
-      .head().getSeq[Int](0).toArray
-    // the ADC table is driver-computed query metadata (distLut ≡ the
-    // oracle's dtab CTE, the q69-proven pair with pq_adc_i8); exact_dist
-    // Σ65536·(qv−pv)² = Σ(256·qv − 256·pv)² is one codegen int8_dist
-    val lut = graft.functions.Int8Ops.distLut(pv, cb, 8, 4)
-    val pv256 = lit(pv.map(_ * 256L))
-    val out = q.filter(col("vec_id") =!= 42)
-      .select(col("vec_id"),
-        graft.functions.Int8Ops.pqAdcI8(
-          graft.functions.Int8Ops.pqEncodeI8(col("qv"), cb, 8, 4), lut, 4).as("adc_dist"),
-        graft.functions.Int8Ops.int8Dist(col("qv"), pv256).as("exact_dist"))
-      .orderBy("adc_dist", "vec_id")
-      .limit(10)
-    (out, () => { q.unpersist(blocking = true); () })
-  }
+  private[graft] def q160Plan(s: SparkSession, dir: String): (DataFrame, () => Unit) =
+    Ann.live(t(s, dir, "embeddings"), cells = 0, m = 8, ksub = 4, probe = 42L) { p =>
+      val pv256 = lit(p.codec.query(p.qvec).map(_ * 256L))
+      val cand = p.q.filter(col("vec_id") =!= 42)
+        .withColumn("exact_dist", graft.functions.Int8Ops.int8Dist(col("qv"), pv256))
+      p.shortlist(cand, 10)
+        .select(col("vec_id"), col("adc").as("adc_dist"), col("exact_dist"))
+    }
 
   /** q154's top-word statistic, computed WITHIN the row (no token
     * shuffle): max run length over the sorted token array ≡ the max word

@@ -583,7 +583,7 @@ class ExplainAuditSpec extends AnyFunSuite {
     // must carry NO window, NO sort-merge join, and NO crossJoin+agg
     // assignment subtree; the only join left is the broadcast of the
     // 1-row cell_n count)
-    val (out, release) = graft.queries.LlmPipeline.ivfInt8WithRelease(spark, sf)
+    val (out, release) = graft.queries.LlmPipeline.q157Plan(spark, sf)
     val p = try out.queryExecution.executedPlan.toString finally release()
     assert(!p.contains("Window"),
       s"assignment must be the map-side pq_encode_i8 argmin, never a sorted window:\n$p")
@@ -595,13 +595,12 @@ class ExplainAuditSpec extends AnyFunSuite {
   }
 
   test("q160 integer PQ: encode+ADC are one codegen scan; no window, no join anywhere") {
-    val (out, release) = graft.queries.LlmPipeline.pqInt8WithRelease(spark, sf)
+    val (out, release) = graft.queries.LlmPipeline.q160Plan(spark, sf)
     val p = try out.queryExecution.executedPlan.toString finally release()
     assert(!p.contains("Window"),
       s"per-(vector, subspace) argmin must be the map-side encode, never a window:\n$p")
-    // the only join anywhere (incl. inside the cached quantize subtree) is
-    // the 1-row corpus-scale broadcast; the r12 code/dtab hash join and
-    // per-vector hash-agg must be gone
+    // no hash join anywhere (incl. inside the cached quantize subtree): a
+    // code/dtab join and per-vector hash-agg must not come back
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
       !p.contains("BroadcastHashJoin"),
       s"ADC rides the driver-computed LUT (pq_adc_i8) — no code/dtab join may remain:\n$p")

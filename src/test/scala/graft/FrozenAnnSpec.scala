@@ -48,10 +48,10 @@ class FrozenAnnSpec extends AnyFunSuite {
     val (cb, coarse, qv) = graft.queries.FrozenAnn.frozenParams
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("label").cast("int").as("label"), col("embedding"))
-    val probed = graft.queries.PqAnn.nearestCells(qv, coarse, 16, 4)
+    val codec = graft.queries.Ann.FloatCodec(cb, coarse, 16, 16, 16)
+    val probed = codec.nearest(qv, 4)
     val lut = graft.functions.PqOps.ipLut(qv, cb, 16, 16)
-    val cand = emb.withColumn("cell",
-        graft.queries.PqAnn.assignCell(col("embedding"), coarse, 16))
+    val cand = emb.withColumn("cell", codec.cell(col("embedding")))
       .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
     val short = cand.select(col("vec_id"), col("cell"),
         graft.functions.PqOps.pqAdc(

@@ -296,15 +296,14 @@ class LlmSpec extends AnyFunSuite {
 
   test("q51 IVF probe: returns 10, candidates limited to 2 cells, some recall vs brute force") {
     val df = SparkEntry.queries("q51_ann_ivf")(spark, sf)
-    // the r13 int8 re-point materializes the bounded output (q157's
-    // release pattern), so plan-shape assertions live on the lazy
-    // pipeline: assignment must stay a hash aggregation (min_by), never a
-    // sorted window — a row_number window would sort-shuffle all k·N
-    // scored rows per Lloyd pass
-    val lazyPlan = graft.queries.Int8Ann.ivfTopKPlan(spark,
-      graft.Tables.t(spark, sf, "embeddings")).queryExecution.executedPlan.toString
+    // the QueryDef materializes the bounded output, so plan-shape
+    // assertions live on its lazy plan: cell assignment must stay the
+    // map-side pq_encode_i8 argmin, never a sorted window — a row_number
+    // window would sort-shuffle all k·N scored rows
+    val (out, release) = graft.queries.LlmPipeline.q51Plan(spark, sf)
+    val lazyPlan = try out.queryExecution.executedPlan.toString finally release()
     assert(!lazyPlan.contains("Window"),
-      s"IVF assignment must use min_by hash-agg, not a row_number window:\n$lazyPlan")
+      s"IVF assignment must be the map-side pq_encode_i8 argmin, not a row_number window:\n$lazyPlan")
     val ivf = df.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(ivf.size == 10)
     val brute = SparkEntry.queries("q26_embedding_topk")(spark, sf)

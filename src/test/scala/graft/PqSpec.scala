@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.PqOps
-import graft.queries.PqAnn
+import graft.queries.{Ann, FrozenAnn}
 
 /** Product-quantization ANN: recall against the brute-force oracle,
   * materialized-index parity, codegen-vs-interpreted agreement, and the
@@ -22,10 +22,19 @@ class PqSpec extends AnyFunSuite {
   test("codebook pack/unpack through table properties is bit-exact") {
     val cb = Array.tabulate(1024)(i => (math.sin(i) * 1e3).toFloat) ++
       Array(Float.MinPositiveValue, Float.MaxValue, -0f, 1e18f)
-    val back = PqAnn.unpackFloats(PqAnn.packFloats(cb))
+    val back = Ann.unpackFloats(Ann.packFloats(cb))
     assert(back.length == cb.length)
     assert(cb.zip(back).forall { case (a, b) =>
       java.lang.Float.floatToRawIntBits(a) == java.lang.Float.floatToRawIntBits(b) })
+  }
+
+  test("both codecs reject more coarse cells than a signed byte code can name") {
+    intercept[IllegalArgumentException](
+      Ann.FloatCodec(Array.empty, Array.empty, m = 0, ksub = 0, cells = 129))
+    intercept[IllegalArgumentException](
+      Ann.Int8Codec(Array.empty, Array.empty, m = 0, ksub = 0, cells = 129, scale = 1.0))
+    assert(Ann.Int8Codec(Array.empty, Array.empty, m = 0, ksub = 0, cells = 128, scale = 1.0)
+      .cells == 128)
   }
 
   test("int8_quantize / int8_dist: codegen and interpreted agree, and match the transform chain") {
@@ -62,14 +71,14 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("pq_encode / pq_adc: codegen and interpreted agree") {
-    val cb = PqAnn.train(spark, emb.limit(100), m = 8, ksub = 8)
+    val (cb, _, _) = FrozenAnn.frozenParams
     val qvec = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getAs[scala.collection.Seq[Float]](0).toArray
-    val lut = PqOps.ipLut(qvec, cb, 8, 8)
+    val lut = PqOps.ipLut(qvec, cb, 16, 16)
     def run(): Seq[String] = emb.limit(100)
       .select(col("vec_id"),
-        PqOps.pqEncode(col("embedding"), cb, 8, 8).as("codes"))
-      .select(col("vec_id"), col("codes"), PqOps.pqAdc(col("codes"), lut, 8).as("adc"))
+        PqOps.pqEncode(col("embedding"), cb, 16, 16).as("codes"))
+      .select(col("vec_id"), col("codes"), PqOps.pqAdc(col("codes"), lut, 16).as("adc"))
       .orderBy("vec_id").collect().map(_.toString).toSeq
     val viaCodegen = run()
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
@@ -82,7 +91,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("ADC approximates the true inner product (bounded reconstruction error)") {
-    val cb = PqAnn.train(spark, emb, m = 16, ksub = 16)
+    val (cb, _, _) = FrozenAnn.frozenParams
     val qvec = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getAs[scala.collection.Seq[Float]](0).toArray
     val lut = PqOps.ipLut(qvec, cb, 16, 16)
@@ -92,8 +101,8 @@ class PqSpec extends AnyFunSuite {
         - graft.functions.TextHashing.cosineSim(col("embedding"), col("qe"))).as("err"))
       .agg(avg("err"), max("err")).head()
     val (meanErr, maxErr) = (errs.getDouble(0), errs.getDouble(1))
-    // unit vectors: true dot in [-1, 1]. 16 subspaces x 16 centroids over
-    // 64 dims reconstructs coarsely but usefully; these bounds fail on a
+    // unit vectors: true dot in [-1, 1]. The frozen 16 subspaces x 16
+    // centroids over 64 dims reconstruct coarsely but usefully; these bounds fail on a
     // broken LUT/encode (errors ~1) and pass with generous float headroom.
     assert(meanErr < 0.15, s"mean |adc - cos| = $meanErr")
     assert(maxErr < 0.5, s"max |adc - cos| = $maxErr")
@@ -121,11 +130,7 @@ class PqSpec extends AnyFunSuite {
     assert(recall >= 0.4, s"IVF-PQ recall@10 was $recall")
 
     // the ADC scan is partition-pruned: the probe's LakeScan reads only
-    // the files of the probed cells, never the whole code table (the r13
-    // int8 index — the registry's q72 path)
-    val probe = graft.queries.Int8Ann.probeIvfPqIndexI8(
-      spark, "lake.idx.emb_ivfpq_i8", emb)
-    probe.collect()
+    // the files of the probed cells, never the whole code table
     val t = spark.sessionState.catalogManager.catalog("lake")
       .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
       .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
@@ -134,7 +139,7 @@ class PqSpec extends AnyFunSuite {
     val files = t.meta.currentFiles
     assert(files.forall(f => f.minValues.get("cell") == f.maxValues.get("cell")),
       "clustered write: every file single-valued on cell")
-    val scanned = probe.queryExecution.executedPlan.collectLeaves()
+    val scanned = df.queryExecution.executedPlan.collectLeaves()
       .map(_.toString).mkString("\n")
     val m = """LakeScan\(lake\.idx\.emb_ivfpq_i8, (\d+) files\)""".r.findFirstMatchIn(scanned)
     assert(m.isDefined, s"expected a lake scan over the IVF-PQ index:\n$scanned")
@@ -150,15 +155,13 @@ class PqSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
     assert(got == inline,
       "probing the persisted codes must equal encoding on the fly (deterministic training)")
-    // the index is self-describing: a fresh probe loads the codebook from
+    // the index is self-describing: the probe loads the codebook from
     // table properties, no retraining, and its ADC shortlist scans ONLY the
-    // m-byte codes table (the r13 int8 index — the registry's q69 path)
-    val probe = graft.queries.Int8Ann.probePqIndexI8(spark, "lake.idx.emb_pq_i8", emb)
-    probe.collect()
-    val leaves = probe.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
+    // m-byte codes table
+    val leaves = viaIndex.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
     assert(leaves.contains("LakeScan(lake.idx.emb_pq_i8"),
       s"expected a lake scan over the codes table:\n$leaves")
-    val plan = probe.queryExecution.executedPlan.toString
+    val plan = viaIndex.queryExecution.executedPlan.toString
     assert(plan.contains("pq_adc_i8"), "exact integer ADC must run against the stored codes")
     assert(plan.contains("TakeOrderedAndProject"), "shortlist must be a top-k, not a global sort")
   }
