@@ -42,7 +42,7 @@ import graft.catalog._
   */
 object CommitContentionBench {
 
-  private val conf = new org.apache.hadoop.conf.Configuration()
+  private val conf = NioLocalFileSystem.register(new org.apache.hadoop.conf.Configuration())
   private val schema = StructType(Seq(StructField("k", LongType)))
   private var baseFiles: Int = 0
 

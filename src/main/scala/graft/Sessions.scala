@@ -59,6 +59,9 @@ object Sessions {
       .config("spark.sql.catalog.lake", "graft.catalog.LakeCatalog")
       .config("spark.sql.catalog.lake.warehouse", defaultWarehouse)
       .config("spark.sql.catalog.lake.jdbc.url", defaultJdbcUrl)
+      // `file:` without a `chmod` fork per written file (and per `.crc`)
+      .config(s"spark.hadoop.${catalog.NioLocalFileSystem.ImplKey}",
+        catalog.NioLocalFileSystem.Impl)
 
   /** Per-process scratch warehouse; catalog tables created by queries live
     * here. Cleaned up lazily by the OS tmp reaper.

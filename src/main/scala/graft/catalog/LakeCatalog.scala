@@ -115,19 +115,21 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
     }
     val key = display(ident)
     val cached = cache.get(key)
-    if (cached != null) {
+    val loaded = if (cached == null) None else {
       // POINTER CHECK on every cache hit: another catalog INSTANCE (a
       // second Spark app on the same store, or the session clone
       // foreachBatch runs under) may have committed since we cached —
       // serving the handle unchecked would read stale data forever.
       // Cost = one point-select per resolution, exactly the reference's
-      // own load_table round-trip (mod.rs:209-220); the metadata
-      // DOCUMENT stays cached by its immutable location either way.
+      // own load_table round-trip (mod.rs:209-220); a moved pointer's
+      // reload reuses it, and the metadata DOCUMENT stays cached by its
+      // immutable location either way.
       val loc = store.load(ns(ident.namespace()), ident.name())
       if (loc.contains(cached.metadataLocation)) return cached
       cache.remove(key)
+      loc
     }
-    val t = doLoad(ident, None)
+    val t = doLoad(ident, None, loaded)
     cache.put(key, t)
     t
   }
@@ -204,8 +206,10 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
         }
     }
 
-  private def doLoad(ident: Identifier, snapshot: Option[Long]): LakeTable = {
-    val loc = store.load(ns(ident.namespace()), ident.name())
+  /** `loaded` is the pointer the caller has just read, when it read one. */
+  private def doLoad(ident: Identifier, snapshot: Option[Long],
+      loaded: Option[String] = None): LakeTable = {
+    val loc = loaded.orElse(store.load(ns(ident.namespace()), ident.name()))
       .getOrElse(throw new NoSuchTableException(ident))
     val meta0 = TableMeta.read(loc, hadoopConf)
     // A pinned (time-travel) load presents the schema AS OF that snapshot —
@@ -595,6 +599,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
       val meta = TableMeta.read(l, hadoopConf)
       val root = new Path(meta.location)
       root.getFileSystem(hadoopConf).delete(root, true)
+      TableMeta.forgetDocs(s"${meta.location}/")
     }
     dropped
   }

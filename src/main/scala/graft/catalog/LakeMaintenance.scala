@@ -1052,6 +1052,9 @@ object LakeMaintenance {
           }
         }
       }
+    // deleted documents must not be served from the parse cache; live ones
+    // merely re-parse once
+    if (doDelete) TableMeta.forgetDocs(s"${meta.location}/")
     (deleted.value, examined.value)
   }
 
@@ -1703,8 +1706,7 @@ private[catalog] object FooterStats {
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val p = new Path(path)
     val size = p.getFileSystem(conf).getFileStatus(p).getLen
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = PositionalParquet.openFooter(p, conf)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum

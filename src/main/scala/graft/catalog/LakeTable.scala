@@ -1549,6 +1549,13 @@ final class LakeMixedBatch(
     if (allPaths.isEmpty) null else eqKeysFor(allPaths)
   }
 
+  // the Hadoop conf ships once per scan, as Spark's ParquetScan ships it:
+  // inside the factory, every positional task deserialized all of it
+  private lazy val confBroadcast = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
+
   override def planInputPartitions(): Array[InputPartition] =
     delegatePlanned.map(_._1).getOrElse(Array.empty[InputPartition]) ++
       tombstoned.flatMap { case (f, dels, eqs) =>
@@ -1592,9 +1599,7 @@ final class LakeMixedBatch(
     val enabled = !"false".equals(System.getProperty("graft.mor.columnar"))
     val columnar = enabled && flatOk && allColumnar(delegatePlanned) &&
       eqPlanned.forall(p => allColumnar(Some(p)))
-    new LakeReaderFactory(
-      new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf()),
-      delegatePlanned.map(_._2),
+    new LakeReaderFactory(confBroadcast, delegatePlanned.map(_._2),
       forceRows = !columnar && (tombstoned.nonEmpty || eqGroups.nonEmpty),
       eqDelegates = eqPlanned.map(_._2).toArray,
       eqKeys = eqBroadcast,

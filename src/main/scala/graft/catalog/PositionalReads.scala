@@ -2,7 +2,11 @@ package graft.catalog
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
@@ -139,7 +143,13 @@ object PositionalParquet {
     // our writer stamps CORRECTED rebase metadata (LakeDataWriter.writeConf)
     val corrected = RebaseSpec(LegacyBehaviorPolicy.CORRECTED, None)
     val support = new ParquetReadSupport(None, false, corrected, corrected)
-    val b = ParquetReader.builder[InternalRow](support, new Path(path)).withConf(c)
+    // built on the caller's conf: `ParquetReader.builder(support, path)`
+    // starts from a fresh default Configuration, which re-parses
+    // core-default.xml on every open
+    val b = new ParquetReader.Builder[InternalRow](
+        HadoopInputFile.fromPath(new Path(path), c), new HadoopParquetConfiguration(c)) {
+      override protected def getReadSupport(): ReadSupport[InternalRow] = support
+    }
     // NEVER set a filter on a positional DATA read (it would corrupt the
     // row counter); delete-file reads are content-only and filter freely
     filter.foreach(b.withFilter)
@@ -197,8 +207,7 @@ object PositionalParquet {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf)
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val fr = openFooter(new Path(path), conf)
     try fr.getFooter.getBlocks.asScala.toSeq.map { b =>
       val mins = Map.newBuilder[String, String]
       val maxs = Map.newBuilder[String, String]
@@ -245,6 +254,14 @@ object PositionalParquet {
           mins.result(), maxs.result(), nulls.result()))
     } finally fr.close()
   }
+
+  /** A file reader on `p` whose options come from `conf`: the one-argument
+    * `ParquetFileReader.open(in)` builds them from a fresh default
+    * Configuration, which re-parses core-default.xml on every open.
+    */
+  def openFooter(p: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
 
   /** All tombstoned positions for `dataPath`, merged over its covering
     * delete files: sorted, distinct. Small by construction — it is the
@@ -547,10 +564,11 @@ final case class EqFilteredInputPartition(
   * ones (`forceRows`), clean partitions read through the delegate's
   * ROW-based parquet reader — they keep split planning and row-group
   * pruning, only losing vectorization until compaction folds the deletes
-  * away. `eqKeys` is the once-per-scan broadcast of delete-file key arrays.
+  * away. `eqKeys` is the once-per-scan broadcast of delete-file key arrays,
+  * `conf` the once-per-scan broadcast of the Hadoop conf.
   */
 final class LakeReaderFactory(
-    conf: SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
     delegate: Option[PartitionReaderFactory],
     forceRows: Boolean,
     eqDelegates: Array[PartitionReaderFactory] = Array.empty,
@@ -569,7 +587,7 @@ final class LakeReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
     case pp: PositionalInputPartition =>
-      new PositionalRowReader(pp, conf.value,
+      new PositionalRowReader(pp, conf.value.value,
         if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
     case ep: EqFilteredInputPartition =>
       new EqFilteredRowReader(eqDelegates(ep.groupIdx).createReader(ep.inner), ep,
@@ -578,7 +596,7 @@ final class LakeReaderFactory(
   }
   override def createColumnarReader(p: InputPartition) = p match {
     case pp: PositionalInputPartition =>
-      new PositionalColumnarReader(pp, conf.value,
+      new PositionalColumnarReader(pp, conf.value.value,
         if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
     case ep: EqFilteredInputPartition =>
       new EqFilteredColumnarReader(

@@ -697,10 +697,10 @@ object ManifestIO {
   }
 
   private val maxCached = 256
-  private def lru[V](): java.util.LinkedHashMap[String, V] =
+  private[catalog] def lru[V](bound: Int = maxCached): java.util.LinkedHashMap[String, V] =
     new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
-        size() > maxCached
+        size() > bound
     }
   /** Total FULL-WIDTH entries the manifest cache may hold (settable via
     * `graft.manifest-cache.max-entries`, default 131072). The manifest-
@@ -1551,17 +1551,40 @@ object TableMeta {
   def toJson(m: TableMeta): String = mapper.writeValueAsString(m)
   def fromJson(s: String): TableMeta = mapper.readValue(s, classOf[TableMeta])
 
+  /** Parsed metadata documents by location, written through by [[write]].
+    * A document is UUID-named and never changed once written, so a rebase
+    * or a catalog load of a version this JVM wrote or read a moment ago
+    * parses nothing. Bounded like [[ManifestIO]]'s list cache; entries hold
+    * no IO conf. The delete sites (a purging DROP, remove_orphan_files)
+    * evict through [[forgetDocs]].
+    */
+  private[catalog] val DocCacheBound = 64
+  private val docCache = ManifestIO.lru[TableMeta](DocCacheBound)
+  private[catalog] def cachedDocs: Int = docCache.synchronized(docCache.size())
+
+  /** Drops every cached document whose location starts with `prefix`. */
+  private[catalog] def forgetDocs(prefix: String): Unit = docCache.synchronized {
+    docCache.keySet().removeIf(_.startsWith(prefix))
+  }
+
   /** Read a metadata document from the warehouse (Hadoop FS: local in tests,
     * S3A/HDFS in prod — same code path as the reference's object_store.get,
-    * reference: src/catalog/mod.rs:209-216).
+    * reference: src/catalog/mod.rs:209-216). Each call returns its own
+    * instance carrying `conf`.
     */
   def read(metadataLocation: String, conf: Configuration): TableMeta = {
-    val p = new Path(metadataLocation)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
+    val cached = docCache.synchronized(docCache.get(metadataLocation))
     val m =
-      try fromJson(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
+      if (cached != null) cached.copy()
+      else {
+        val p = new Path(metadataLocation)
+        val in = p.getFileSystem(conf).open(p)
+        val parsed =
+          try fromJson(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+          finally in.close()
+        docCache.synchronized(docCache.put(metadataLocation, parsed.copy()))
+        parsed
+      }
     m.ioConf = conf
     m
   }
@@ -1874,6 +1897,7 @@ object TableMeta {
     val out = fs.create(p, false)
     try out.write(toJson(meta).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    docCache.synchronized(docCache.put(loc, meta.copy()))
     loc
   }
 }
