@@ -1,16 +1,14 @@
 package graft
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. The noop sink forces full materialization of every
-  * output column (a bare .count() would let Catalyst prune the plan down to
-  * a row count, under-measuring scan+compute).
+/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
+  * through [[QueryProfile]] (build, then save to the noop sink) and prints
+  * one JSON headline. Per-query medians, spreads and construction figures
+  * go to the SPARK_GRAFT_BENCH_OUT file.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Warm the JVM/codegen once so per-query timings measure the plan, not
     // first-use classloading.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -36,13 +34,11 @@ object Bench {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown bench queries: ${unknown.mkString(", ")}")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val times = (1 to runsPer).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9) }
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map { name =>
+      val runs = (1 to runsPer).flatMap { _ =>
+        try Some(QueryProfile.run(spark, name, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); None
         }
@@ -58,22 +54,21 @@ object Bench {
           leaked.values.map(_.name).mkString(", "))
       // Any failed run reports -1 so a broken plan can't silently pass as a
       // fast one (ADVICE r1).
-      if (times.size < runsPer) name -> (-1.0, 0.0)
-      else {
-        val sorted = times.sorted
-        name -> (sorted(sorted.size / 2), sorted.last - sorted.head)
-      }
+      def median(v: Seq[Double]) = v.sorted.apply(v.size / 2)
+      val times = runs.map(_.totalMs / 1e3)
+      name -> (
+        if (runs.size < runsPer) Figures(-1.0, 0.0, -1.0, -1.0, -1.0)
+        else Figures(median(times), times.max - times.min, median(runs.map(_.constructMs)),
+          median(runs.map(_.constructJobs.toDouble)), median(runs.map(_.exec.jobs.size.toDouble))))
     }
     // explicit ROOT locale: the default-locale f"" interpolator renders
     // 0,123 under comma-decimal locales (e.g. de_DE) — invalid JSON
     def num(v: Double, dp: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-    val qs = results.map { case (k, (m, _)) => "\"" + k + "\":" + num(m, 4) }
-      .mkString("{", ",", "}")
-    val spreads = results.map { case (k, (_, s)) => "\"" + k + "\":" + num(s, 4) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    val nFailed = results.count(_._2._1 < 0)
+    def perQuery(f: Figures => Double, dp: Int) =
+      results.map { case (k, v) => "\"" + k + "\":" + num(f(v), dp) }.mkString("{", ",", "}")
+    val total = results.map(_._2.median).filter(_ >= 0).sum
+    val nFailed = results.count(_._2.median < 0)
     // ── canary + drift (VERDICT r12 #2): three queries untouched since
     // round 1 self-adjudicate box drift. r12 burned real effort proving a
     // 1.4-1.9× cross-round "regression" was the box, with four sweeps and
@@ -86,8 +81,8 @@ object Bench {
     // drift≫1 ⇒ normalize before judging regressions.
     val canaryKeys = Seq("q01", "q13", "q20")
     val canaryNow: Map[String, Double] = results.collect {
-      case (k, (med, _)) if canaryKeys.contains(k.takeWhile(_ != '_')) && med >= 0 =>
-        k.takeWhile(_ != '_') -> med
+      case (k, f) if canaryKeys.contains(k.takeWhile(_ != '_')) && f.median >= 0 =>
+        k.takeWhile(_ != '_') -> f.median
     }.toMap
     val drift: Option[Double] = {
       val prevFile = sys.env.get("SPARK_GRAFT_PREV_BENCH").orElse {
@@ -116,21 +111,17 @@ object Bench {
     val canaryJson = canaryNow.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + num(v, 3) }.mkString("{", ",", "}")
     val driftJson = drift.map(d => num(d, 3)).getOrElse("null")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"runs":$runsPer,"failed":$nFailed,"sf":"$sfDir","canary":$canaryJson,"drift":$driftJson}"""
-    // STDOUT gets a SLIM variant: the driver's artifact keeps only a byte-
-    // bounded tail of stdout, and r10's full line (queries + spreads, ~11 KB
-    // at 183 queries) truncated mid-JSON, leaving 68 of 183 per-query times
-    // in the committed artifact. Keys compress to the unambiguous qNNN
-    // prefix and the map goes LAST in the line (an archived tail keeps the
-    // END of stdout), so every per-query number survives ~2.8 KB of tail;
-    // the full-name 4-decimal + spread line still lands in the file below.
-    val slimQs = results.map { case (k, (m, _)) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + num(m, 3)
-    }.mkString("{", ",", "}")
-    // canary+drift go LAST so they survive the driver's tail truncation
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runsPer,"failed":$nFailed,"sf":"$sfDir","queries":$slimQs,"canary":$canaryJson,"drift":$driftJson}""")
-    // the driver's artifact truncates long stdout tails — also persist the
-    // full per-query medians+spreads so every round's numbers stay auditable
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(_.median, 4)},""" +
+      s""""spread":${perQuery(_.spread, 4)},"construct_ms":${perQuery(_.constructMs, 1)},""" +
+      s""""construct_jobs":${perQuery(_.constructJobs, 0)},"exec_jobs":${perQuery(_.execJobs, 0)},""" +
+      s""""runs":$runsPer,"failed":$nFailed,"sf":"$sfDir","canary":$canaryJson,"drift":$driftJson}"""
+    // STDOUT gets only the headline: the archived run (`BENCH_r*.json`)
+    // keeps a 2,000-byte tail of stdout, and any per-query map (about 2.4 KB
+    // at 201 queries) pushes the start of the line out of it, so the line
+    // no longer parses.
+    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runsPer,"failed":$nFailed,"sf":"$sfDir","canary":$canaryJson,"drift":$driftJson}""")
+    // per-query medians, spreads and construction figures go to a file so
+    // every round's numbers stay auditable
     // (SPARK_GRAFT_BENCH_OUT overrides; committed per round as BENCH_LOCAL_r*)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_round.json")
     try {
@@ -140,4 +131,8 @@ object Bench {
     } catch { case e: Exception => System.err.println(s"[bench] write $out: $e") }
     spark.stop()
   }
+
+  /** One query's medians over its runs, and the spread of its run times (s). */
+  private final case class Figures(median: Double, spread: Double, constructMs: Double,
+      constructJobs: Double, execJobs: Double)
 }

@@ -7,6 +7,16 @@ import org.apache.spark.sql.SparkSession
   * AQE settings hold at 1000 executors); `master` is only `local[N]` here.
   */
 object Sessions {
+  /** The session every main runs on: `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with as many shuffle partitions, logging at WARN.
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
@@ -35,9 +45,8 @@ object Sessions {
       // A 64 KiB floor keeps those stages parallel while leaving any
       // stage above ~64 KiB/partition (i.e. every at-scale bulk stage,
       // which AQE sizes toward advisoryPartitionSizeInBytes anyway)
-      // untouched. Env-overridable for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      // untouched.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Storage-partitioned joins: two lake tables partitioned on the same
       // key join WITHOUT shuffling either side (scans report
       // KeyGroupedPartitioning from clustered-file metadata).

@@ -39,24 +39,17 @@ object SkewBench {
     "q196_bm25_topk", "q201_bm25_index_probe", "q194_knn_join_int8")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val root = java.nio.file.Files.createTempDirectory("graft-skewbench").toString
     val uniformDir = s"$root/uniform"
     val skewDir = s"$root/skew"
     writeFixture(spark, uniformDir, skewed = false)
     writeFixture(spark, skewDir, skewed = true)
 
+    // median of 3 runs, in seconds
     def run(dir: String, name: String): Double = {
       Tables.registerAll(spark, dir)
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      times(1)
+      Seq.fill(3)(QueryProfile.run(spark, name, dir).totalMs / 1e3).sorted.apply(1)
     }
 
     // warm codegen/classloading on the uniform dir once

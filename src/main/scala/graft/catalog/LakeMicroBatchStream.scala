@@ -1,11 +1,8 @@
 package graft.catalog
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -302,12 +299,8 @@ final class LakeMicroBatchStream(
     // it over the current manifest
     innerBatch(refresh().currentFiles).createReaderFactory()
 
-  private def innerBatch(files: Seq[DataFileMeta]) = {
-    val spark = SparkSession.active
-    val pt = ParquetTable(ident, spark, options, files.map(_.path).toList,
-      Some(tableSchema), classOf[ParquetFileFormat])
-    pt.newScanBuilder(options).build().toBatch
-  }
+  private def innerBatch(files: Seq[DataFileMeta]) =
+    ParquetDelegate.scan(ident, options, files.map(_.path), tableSchema, Nil, None).toBatch
 
   /** Backlog metrics surfaced in StreamingQueryProgress.sources[i].metrics
     * — a rate-limited stream's lag is files/rows/bytes committed to the

@@ -1045,16 +1045,11 @@ final class LakeScan(
 
   private def inner: Scan = {
     if (delegate == null) {
-      val spark = SparkSession.active
       // the delegated parquet scan resolves against file schemas, which
       // carry PHYSICAL column names; rows come back positionally identical
-      val pt = ParquetTable(ident, spark, options, files.map(_.path).toList,
-        Some(ColumnMapping.toPhysical(tableSchema, l2p)), classOf[ParquetFileFormat])
-      val b = pt.newScanBuilder(options)
-      // inner translates + records row-group pushdown itself
-      b.pushFilters(ColumnMapping.toPhysicalExprs(exprs, l2p))
-      b.pruneColumns(ColumnMapping.toPhysical(requiredDataSchema, l2p))
-      delegate = b.build()
+      delegate = ParquetDelegate.scan(ident, options, files.map(_.path),
+        ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
+        Some(ColumnMapping.toPhysical(requiredDataSchema, l2p)))
     }
     delegate
   }
@@ -1451,15 +1446,10 @@ final class LakeKeyGroupedBatch(
 
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
 
-  private def subBatch(files: Seq[DataFileMeta]): Batch = {
-    val spark = SparkSession.active
-    val pt = ParquetTable(ident, spark, options, files.map(_.path).toList,
-      Some(ColumnMapping.toPhysical(tableSchema, l2p)), classOf[ParquetFileFormat])
-    val b = pt.newScanBuilder(options)
-    b.pushFilters(ColumnMapping.toPhysicalExprs(exprs, l2p))
-    b.pruneColumns(ColumnMapping.toPhysical(requiredSchema, l2p))
-    b.build().toBatch
-  }
+  private def subBatch(files: Seq[DataFileMeta]): Batch =
+    ParquetDelegate.scan(ident, options, files.map(_.path),
+      ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
+      Some(ColumnMapping.toPhysical(requiredSchema, l2p))).toBatch
 
   private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
     val parts = groups.flatMap { case (key, files) =>
@@ -1473,6 +1463,23 @@ final class LakeKeyGroupedBatch(
 
   override def planInputPartitions(): Array[InputPartition] = planned._1
   override def createReaderFactory(): PartitionReaderFactory = planned._2
+}
+
+/** The delegated parquet scan over data files: Spark's [[ParquetTable]]
+  * supplies column pruning, row-group predicate pushdown and vectorized
+  * reads. `fileSchema`, `filters` and `required` use the files' (physical)
+  * column names; `required` = None reads every column.
+  */
+private[catalog] object ParquetDelegate {
+  def scan(ident: String, options: CaseInsensitiveStringMap, paths: Seq[String],
+      fileSchema: StructType, filters: Seq[Expression], required: Option[StructType]): Scan = {
+    val pt = ParquetTable(ident, SparkSession.active, options, paths.toList, Some(fileSchema),
+      classOf[ParquetFileFormat])
+    val b = pt.newScanBuilder(options)
+    b.pushFilters(filters)
+    required.foreach(b.pruneColumns)
+    b.build()
+  }
 }
 
 /** A batch mixing the vectorized parquet delegate (clean files) with
@@ -1501,13 +1508,9 @@ final class LakeMixedBatch(
 
   private def delegateFor(paths: Seq[String], prunedPhys: StructType)
       : (Array[InputPartition], PartitionReaderFactory) = {
-    val spark = SparkSession.active
-    val pt = ParquetTable(ident, spark, options, paths.toList,
-      Some(ColumnMapping.toPhysical(tableSchema, l2p)), classOf[ParquetFileFormat])
-    val b = pt.newScanBuilder(options)
-    b.pushFilters(ColumnMapping.toPhysicalExprs(exprs, l2p))
-    b.pruneColumns(prunedPhys)
-    val batch = b.build().toBatch
+    val batch = ParquetDelegate.scan(ident, options, paths,
+      ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
+      Some(prunedPhys)).toBatch
     (batch.planInputPartitions(), batch.createReaderFactory())
   }
 
@@ -1594,8 +1597,9 @@ final class LakeMixedBatch(
       ColumnarSupport.ok(eqKeySchema) && metaColsOk
     def allColumnar(p: Option[(Array[InputPartition], PartitionReaderFactory)]) =
       p.forall { case (parts, fac) => parts.forall(fac.supportColumnarReads) }
-    // operational escape hatch (and the A/B bench toggle): driver-side
-    // system property, default on
+    // driver-side system property, default on; "false" keeps every file on
+    // the row reader, which MergeOnReadSpec and RowLineageSpec use as the
+    // reference the columnar reader must match
     val enabled = !"false".equals(System.getProperty("graft.mor.columnar"))
     val columnar = enabled && flatOk && allColumnar(delegatePlanned) &&
       eqPlanned.forall(p => allColumnar(Some(p)))
@@ -2104,12 +2108,8 @@ final class LakeWrite(
     * because each task still receives transform-sorted rows). Upsert
     * epochs stay STRICT: last-writer-wins requires every version of a key
     * in ONE task, and a rebalance may split one key's rows mid-partition.
-    * `write.distribution.strictly-required`='true' restores the old
-    * one-task-per-partition-value behavior.
     */
-  override def distributionStrictlyRequired(): Boolean =
-    upsertKeys.nonEmpty ||
-      table.meta.properties.get("write.distribution.strictly-required").exists(_.toBoolean)
+  override def distributionStrictlyRequired(): Boolean = upsertKeys.nonEmpty
 
   /** Iceberg's `write.spark.advisory-partition-size-bytes`: the AQE
     * rebalance target for write partitions (0 = session default) — the

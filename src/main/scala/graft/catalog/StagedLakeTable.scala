@@ -81,10 +81,9 @@ final class StagedLakeTable(
         orderOf(pfields.map(LakeTransforms.clusterExpr) ++ sortCols.map(Expressions.column))
 
       // same AQE-rebalance stance as LakeWrite: non-strict clustering
-      // (skewed CTAS partitions split, small ones coalesce), advisory
-      // size from the Iceberg property
-      override def distributionStrictlyRequired(): Boolean =
-        baseMeta.properties.get("write.distribution.strictly-required").exists(_.toBoolean)
+      // (skewed CTAS partitions split, small ones coalesce; Spark's default
+      // is strict), advisory size from the Iceberg property
+      override def distributionStrictlyRequired(): Boolean = false
       override def advisoryPartitionSizeInBytes(): Long =
         baseMeta.properties.get("write.spark.advisory-partition-size-bytes")
           .map(_.toLong).getOrElse(0L)

@@ -341,17 +341,6 @@ object Ann {
     (plan(Live(base, q, codec, vecOf(base, probe))), () => { q.unpersist(blocking = true); () })
   }
 
-  /** Materialize a bounded lazy plan, then release its working set — no
-    * cache survives the query.
-    */
-  def materialized(s: SparkSession, lazyPlan: (DataFrame, () => Unit)): DataFrame = {
-    val (out, release) = lazyPlan
-    try {
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-    } finally release()
-  }
-
   // ── the materialized index ────────────────────────────────────────────
 
   /** (Re)create a lake table for an index: namespace, drop, create with

@@ -709,7 +709,7 @@ object LlmPipeline {
     // BIGINT, the final top-10 is exact cosine over the original floats
     // (the q26-proven replayable op). See [[Ann]].
     QueryDef.df("q51_ann_ivf", Ann.q51OracleSql) { (s, dir) =>
-      Ann.materialized(s, q51Plan(s, dir))
+      WorkingSet.materialized(s, q51Plan(s, dir))
     },
 
     // ───── q52: ANN probe against the MATERIALIZED catalog index ─────────
@@ -743,7 +743,7 @@ object LlmPipeline {
     // are exact BIGINTs, the top-10 is exact cosine over the original
     // floats.
     QueryDef.df("q68_ann_pq", Ann.q68OracleSql) { (s, dir) =>
-      Ann.materialized(s, Ann.live(t(s, dir, "embeddings"), cells = 0, m = 8, ksub = 8,
+      WorkingSet.materialized(s, Ann.live(t(s, dir, "embeddings"), cells = 0, m = 8, ksub = 8,
           probe = 0L) { p =>
         val shortlist = p.shortlist(p.q.filter(col("vec_id") =!= 0L), 100)
         Ann.rerank(p.base, shortlist.select("vec_id"), p.qvec, 10)
@@ -1614,12 +1614,7 @@ object LlmPipeline {
       val out = comp.groupBy("comp").agg(count(lit(1)).as("n_docs"))
         .where(col("n_docs") > 1)
         .orderBy("comp")
-      try {
-        // materialize the (output-sized) cluster counts so the final CC
-        // round's checkpoint releases — q117's LocalRelation pattern
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      WorkingSet.materialized(s, (out, release))
     },
 
     // ───── q57: deterministic (reproducible) stratified sampling ─────────
@@ -2938,10 +2933,7 @@ object LlmPipeline {
         .select(col("comp"), (-col("m.nid")).as("kept_doc"),
           (col("n") - 1).as("n_dropped"))
         .orderBy("comp")
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      WorkingSet.materialized(s, (out, release))
     },
 
     // ───── q145: n-gram NOVELTY vs a reference corpus ─────────────────────
@@ -3252,10 +3244,7 @@ object LlmPipeline {
         |               n_shared / CAST(b.n_inf AS DOUBLE)) >= 0.8
         |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       val (out, release) = containmentWithRelease(s, dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      WorkingSet.materialized(s, (out, release))
     },
 
     // ───── q153: int8 scalar-quantized ANN (integer-dot top-k) ───────────
@@ -3478,7 +3467,7 @@ object LlmPipeline {
     QueryDef.df(
       "q157_ivf_int8",
       q157OracleSql) { (s, dir) =>
-      Ann.materialized(s, q157Plan(s, dir))
+      WorkingSet.materialized(s, q157Plan(s, dir))
     },
 
     // ───── q162: deterministic weighted sampling (priority sampling) ─────
@@ -3585,10 +3574,7 @@ object LlmPipeline {
             (sqrt(col("n2").cast("double")) * sqrt(col("nc2").cast("double"))))
             .as("cos_sim"))
         .orderBy("source")
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally { cc.unpersist(); sc.unpersist() }
+      WorkingSet.materialized(s, (out, () => { cc.unpersist(); sc.unpersist(); () }))
     },
 
     // ───── q170: token-budget curriculum fill (greedy mix building) ──────
@@ -3813,7 +3799,7 @@ object LlmPipeline {
     QueryDef.df(
       "q160_pq_int8",
       q160OracleSql) { (s, dir) =>
-      Ann.materialized(s, q160Plan(s, dir))
+      WorkingSet.materialized(s, q160Plan(s, dir))
     },
 
     // ───── q186: contamination SPAN (longest shared n-gram run) ──────────
@@ -3912,10 +3898,7 @@ object LlmPipeline {
           sum(col("sz") - 1).as("docs_dropped"),
           sum(col("chars") - col("mx")).as("chars_dropped"))
         .orderBy("cluster_size")
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally release()
+      WorkingSet.materialized(s, (out, release))
     },
 
     // ───── q188: per-source length QUANTILES (exact percentiles) ─────────

@@ -1052,10 +1052,8 @@ object Relational {
         |  CAST(3.0 * tri.t / w.wedges AS DOUBLE) AS clustering
         |FROM tri, w""".stripMargin) { (s, dir) =>
       val (out, e, o) = trianglesPlan(t(s, dir, "lineitem"))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(out.collect().toSeq.asJava, out.schema)
-      } finally { o.unpersist(blocking = false); e.unpersist(blocking = false) }
+      WorkingSet.materialized(s,
+        (out, () => { o.unpersist(blocking = false); e.unpersist(blocking = false); () }))
     },
 
     // ───── q122: NOT IN three-valued logic / null-aware anti join ────────

@@ -12,38 +12,8 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
-  /** Runs `body` and counts the Spark jobs it starts from this thread. Jobs
-    * are tagged with a local property; a marker job run afterwards in the
-    * same tag flushes the asynchronous listener bus, so a body that starts
-    * jobs cannot be counted as starting none.
-    */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(key)).foreach {
-          case `tag` => jobs.incrementAndGet()
-          case t if t == s"$tag:marker" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      val r = body
-      sc.setLocalProperty(key, s"$tag:marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
-      (r, jobs.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Runs `body` and counts the Spark jobs it starts from this thread. */
+  def jobsDuring[T](body: => T): (T, Int) = QueryProfile.jobsDuring(spark)(body)
 }
 
 /** Executes every registered query end-to-end on sf0.001. Value-level
