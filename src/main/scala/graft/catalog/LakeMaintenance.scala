@@ -1744,9 +1744,15 @@ private[catalog] object FooterStats {
             if (!st.hasNonNullValue) {
               // all-null chunk: no min/max contribution, and that is fine
             } else (statString(st.genericGetMin, dt), statString(st.genericGetMax, dt)) match {
-              case (Some(lo), Some(hi)) =>
-                if (!mins.contains(name) || ordLt(lo, mins(name), dt)) mins(name) = lo
-                if (!maxs.contains(name) || ordLt(maxs(name), hi, dt)) maxs(name) = hi
+              // in the stat order; a bound it cannot order poisons the column
+              case (Some(lo), Some(hi)) => (
+                StatBounds.compare(dt, lo, mins.getOrElse(name, lo)),
+                StatBounds.compare(dt, maxs.getOrElse(name, hi), hi)) match {
+                  case (Some(a), Some(b)) =>
+                    if (a <= 0) mins(name) = lo
+                    if (b <= 0) maxs(name) = hi
+                  case _ => broken += name
+                }
               case _ => broken += name
             }
           }
@@ -1790,15 +1796,5 @@ private[catalog] object FooterStats {
       Some(new java.math.BigDecimal(
         new java.math.BigInteger(bin.getBytes), d.scale).toPlainString)
     case _ => None
-  }
-
-  /** Compare two stat strings in the pruner's order for the type. */
-  private def ordLt(a: String, b: String, dt: DataType): Boolean = dt match {
-    case StringType =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
-    case _: DecimalType => new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b)) < 0
-    case FloatType | DoubleType => a.toDouble < b.toDouble
-    case _ => a.toLong < b.toLong
   }
 }

@@ -329,8 +329,12 @@ final class LakeTable(
     val cond: Column = filters.flatMap(FilterToColumn.translate)
       .reduceOption(_ && _).getOrElse(org.apache.spark.sql.functions.lit(true))
     // prune with logically-keyed stats (filters reference logical names)
+    // exactly as a scan would: min/max, file blooms, bucket stats
+    val preds = filters.toSeq.flatMap(FilePruner.fromV1(_, schema()))
+    val bloomFor = bloomLookupFor(meta.snapshot(meta.currentSnapshotId))
+    val pf = meta.allPartitionFields
     val affected = meta.logicalStatFiles(meta.currentFiles).filter(f =>
-      filters.forall(fl => FilterToColumn.mayMatch(fl, f)))
+      preds.forall(FilePruner.mayMatch(_, f, schema(), bloomFor, pf)))
     val affectedPaths = affected.map(_.path).toSet
     val scanDeletes = meta.currentDeleteFiles
     val covering = TombstoneRewrite.covering(scanDeletes, affected.map(_.path))
@@ -400,10 +404,8 @@ final class LakeTable(
   }
 }
 
-/** V1 source Filter -> Column translation + conservative per-file match
-  * check for the delete path. `mayMatch = false` only when min/max stats
-  * prove no row of the file satisfies the filter (unknown shapes ⇒ true ⇒
-  * the file gets rewritten — always correct, possibly more work).
+/** V1 source Filter -> Column translation: the copy-on-write DELETE's
+  * rewrite predicate (file pruning goes through [[FilePruner.fromV1]]).
   */
 private[catalog] object FilterToColumn {
   import org.apache.spark.sql.functions.{col, lit, not}
@@ -427,71 +429,6 @@ private[catalog] object FilterToColumn {
     case sources.AlwaysTrue() => Some(lit(true))
     case sources.AlwaysFalse() => Some(lit(false))
     case _ => None
-  }
-
-  private def range(file: DataFileMeta, column: String): Option[(BigDecimal, BigDecimal)] =
-    for {
-      mn <- file.minValues.get(column); mx <- file.maxValues.get(column)
-      lo <- try Some(BigDecimal(mn)) catch { case _: Throwable => None }
-      hi <- try Some(BigDecimal(mx)) catch { case _: Throwable => None }
-    } yield (lo, hi)
-
-  private def num(v: Any): Option[BigDecimal] = v match {
-    case n: java.lang.Number => Some(BigDecimal(n.toString))
-    case _ => None
-  }
-
-  /** Could any row of `file` satisfy `f`? Conservative. */
-  def mayMatch(f: sources.Filter, file: DataFileMeta): Boolean = f match {
-    case sources.EqualTo(a, v) =>
-      (for ((lo, hi) <- range(file, a); x <- num(v)) yield x >= lo && x <= hi).getOrElse(true)
-    case sources.EqualNullSafe(a, v) if v != null =>
-      mayMatch(sources.EqualTo(a, v), file)
-    case sources.GreaterThan(a, v) =>
-      (for ((_, hi) <- range(file, a); x <- num(v)) yield hi > x).getOrElse(true)
-    case sources.GreaterThanOrEqual(a, v) =>
-      (for ((_, hi) <- range(file, a); x <- num(v)) yield hi >= x).getOrElse(true)
-    case sources.LessThan(a, v) =>
-      (for ((lo, _) <- range(file, a); x <- num(v)) yield lo < x).getOrElse(true)
-    case sources.LessThanOrEqual(a, v) =>
-      (for ((lo, _) <- range(file, a); x <- num(v)) yield lo <= x).getOrElse(true)
-    case sources.In(a, vs) =>
-      (for ((lo, hi) <- range(file, a)) yield
-        vs.exists(v => num(v).forall(x => x >= lo && x <= hi))).getOrElse(true)
-    case sources.IsNull(a) => file.nulls.get(a).forall(_ > 0)
-    case sources.IsNotNull(a) => file.nulls.get(a).forall(_ < file.rowCount)
-    case sources.And(l, r) => mayMatch(l, file) && mayMatch(r, file)
-    case sources.Or(l, r) => mayMatch(l, file) || mayMatch(r, file)
-    case _ => true
-  }
-
-  /** Does EVERY row of `file` provably satisfy `f`? Conservative — false
-    * whenever the stats can't prove it (expression-overwrite then rejects
-    * the file as partially matching rather than silently keeping rows the
-    * predicate wanted deleted). Equality proofs require min==max==value
-    * and a recorded zero null count.
-    */
-  def mustMatch(f: sources.Filter, file: DataFileMeta): Boolean = f match {
-    // non-null value: <=> proves exactly like = (and PARTITION (p = v)
-    // clauses arrive as EqualNullSafe)
-    case sources.EqualNullSafe(a, v) if v != null =>
-      mustMatch(sources.EqualTo(a, v), file)
-    case sources.EqualTo(a, v) =>
-      (file.minValues.get(a), file.maxValues.get(a)) match {
-        case (Some(lo), Some(hi)) if lo == hi =>
-          val valueEq = num(v) match {
-            case Some(x) => (try x == BigDecimal(lo) catch { case _: Throwable => false })
-            case None => v != null && v.toString == lo
-          }
-          valueEq && file.nulls.get(a).contains(0L)
-        case _ => false
-      }
-    case sources.In(a, vs) => vs.exists(v => mustMatch(sources.EqualTo(a, v), file))
-    case sources.IsNotNull(a) => file.nulls.get(a).contains(0L)
-    case sources.And(l, r) => mustMatch(l, file) && mustMatch(r, file)
-    case sources.Or(l, r) => mustMatch(l, file) || mustMatch(r, file)
-    case sources.AlwaysTrue() => true
-    case _ => false
   }
 }
 
@@ -746,8 +683,8 @@ final class LakeScanBuilder(
       case Some(fm) if exprs.nonEmpty => fm(exprs)
       case _ => allFiles
     }
-    val survivors = baseFiles.filter(f => exprs.forall(e =>
-      FilePruner.mayMatch(e, f, tableSchema, bloomFor) && BucketPruner.mayMatch(e, f, pf)))
+    val survivors = baseFiles.filter(f =>
+      exprs.forall(FilePruner.mayMatch(_, f, tableSchema, bloomFor, pf)))
     // limit/top-N file pruning (partial pushdown — Spark re-applies the
     // operator above, so dropping provably-unneeded files is free).
     // Belt-and-braces soundness guard: Spark only pushes LIMIT/TopN when
@@ -823,29 +760,13 @@ object LakeScan {
   * (PropertySpec).
   */
 private[graft] object TopNPrune {
-  /** Stat-string ordering matching Spark's SQL ordering for the column
-    * type: numeric/temporal stats compare as numbers, string stats in
-    * UTF8 BINARY order (what the writer recorded them in — Java's UTF-16
-    * compareTo diverges for supplementary characters). None = unsupported
-    * type, no pruning.
-    */
-  private def orderingFor(dt: DataType): Option[Ordering[String]] = dt match {
-    case IntegerType | LongType | ShortType | DoubleType | FloatType |
-         DateType | TimestampType | TimestampNTZType | _: DecimalType =>
-      // numCmp, not BigDecimal: float/double stats can be "NaN"/±"Infinity"
-      // (NaN greatest — Spark's order), which BigDecimal refuses to parse
-      Some((a: String, b: String) => StatBounds.numCmp(a, b).getOrElse(
-        throw new NumberFormatException(s"non-numeric stat: '$a' / '$b'")))
-    case StringType => Some((a: String, b: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)))
-    case _ => None
-  }
-
   def prune(files: Seq[DataFileMeta], c: String, dt: DataType, desc: Boolean,
-      n: Int): Seq[DataFileMeta] = orderingFor(dt) match {
-    case None => files
-    case Some(ord) => try {
+      n: Int): Seq[DataFileMeta] = {
+    // the stat order; a type without one, or an unparsable stat, throws
+    // out of the selection below, which then keeps every file
+    val ord: Ordering[String] = (a, b) => StatBounds.compare(dt, a, b).getOrElse(
+      throw new IllegalArgumentException(s"no $dt stat order for '$a' / '$b'"))
+    try {
       def lo(f: DataFileMeta) = f.minValues.get(c)
       def hi(f: DataFileMeta) = f.maxValues.get(c)
       // a file with nulls can always contribute (nulls sort first asc /
@@ -990,7 +911,7 @@ final class LakeScan(
     */
   private def eqApplicable(f: DataFileMeta): Seq[String] =
     eqDeletesV.filter(d => d.addedAt > f.addedAt &&
-      eqKeySchema.forall(ks => EqDeletes.mayOverlap(f, d, ks)) &&
+      eqKeySchema.forall(_.fields.forall(k => FilePruner.mayOverlap(f, d, k.name, k.dataType))) &&
       eqBloomMayHit(f, d)).map(_.path)
 
   // ── bloom refinement of eq-delete applicability ─────────────────────────
@@ -1060,11 +981,10 @@ final class LakeScan(
   override def filter(predicates: Array[Predicate]): Unit = {
     val pf = (if (allPartitionCols.nonEmpty) allPartitionCols
               else partitionCols).map(PartField.parse)
-    def typeOf(c: String): Option[DataType] =
-      tableSchema.fields.find(_.name == c).map(_.dataType)
-    files = files.filter(f => predicates.forall(p =>
-      V2PredicatePruner.mayMatch(p, f, bloomFor)
-        && BucketPruner.mayMatchV2(p, f, pf, typeOf)))
+    val runtime = predicates.toSeq.flatMap(FilePruner.fromV2(_, tableSchema))
+    def may(f: DataFileMeta, bloom: (String, String) => Option[FileBloom]): Boolean =
+      runtime.forall(FilePruner.mayMatch(_, f, tableSchema, bloom, pf))
+    files = files.filter(may(_, bloomFor))
     onFilesSelected(files)
     // re-resolve the DELETE-side skip under the runtime predicates: a
     // DPP-pruned scan also drops delete files whose stamped bounds
@@ -1087,11 +1007,7 @@ final class LakeScan(
         }
         d.copy(minValues = clean(d.minValues), maxValues = clean(d.maxValues))
       }
-      def keep(d: DataFileMeta): Boolean = {
-        val v = view(d)
-        predicates.forall(p => V2PredicatePruner.mayMatch(p, v)
-          && BucketPruner.mayMatchV2(p, v, pf, typeOf))
-      }
+      def keep(d: DataFileMeta): Boolean = may(view(d), FilePruner.NoBloom)
       val nBefore = deleteFilesV.size + eqDeletesV.size
       deleteFilesV = deleteFilesV.filter(keep)
       eqDeletesV = eqDeletesV.filter(keep)
@@ -1272,20 +1188,15 @@ final class LakeScan(
         // Now kills are bounded by what was KILLABLE: walking delete files
         // in commit order, each can kill at most the not-yet-killed rows
         // of OLDER, key-range-OVERLAPPING selected files (overlap via the
-        // shared min/max stat columns, numeric-aware compare). The blind
+        // shared min/max stat columns, in the stat order). The blind
         // upsert shape now estimates ~|keys| live. Still an estimate —
         // metadata cannot know per-key multiplicity — but it only feeds
         // join sizing, and compaction re-trues it.
-        def cmpLe(a: Option[String], b: Option[String]): Boolean = (a, b) match {
-          case (Some(x), Some(y)) =>
-            StatBounds.numCmp(x, y).getOrElse(x.compareTo(y)) <= 0
-          case _ => true // a missing bound is unbounded: conservative overlap
-        }
-        def overlaps(d: DataFileMeta, f: DataFileMeta): Boolean = {
-          val shared = d.minValues.keySet.intersect(f.minValues.keySet)
-          shared.forall(c => cmpLe(d.minValues.get(c), f.maxValues.get(c)) &&
-            cmpLe(f.minValues.get(c), d.maxValues.get(c)))
-        }
+        // a key outside the schema has no stat order: conservative overlap
+        val statTypes = tableSchema.fields.map(c => c.name -> c.dataType).toMap
+        def overlaps(d: DataFileMeta, f: DataFileMeta): Boolean =
+          d.minValues.keySet.intersect(f.minValues.keySet).forall(c =>
+            statTypes.get(c).forall(FilePruner.mayOverlap(d, f, c, _)))
         // planning-cost bound: the overlap REFINEMENT is O(deletes × files)
         // with per-file stat-map intersections — measured +0.7 s on a
         // metadata-heavy query when run unconditionally, and unacceptable
@@ -1342,19 +1253,22 @@ final class LakeScan(
         // plain JVM boxes; feeds range-filter selectivity once CBO is on
         def bound(f: StructField, stats: DataFileMeta => Map[String, String],
             wantMin: Boolean): Option[Any] = {
+          val box: Option[String => Any] = f.dataType match {
+            case IntegerType | DateType => Some(_.toInt)
+            case LongType | TimestampType | TimestampNTZType => Some(_.toLong)
+            case DoubleType => Some(_.toDouble)
+            case FloatType => Some(_.toFloat)
+            case ShortType => Some(_.toShort)
+            case _ => None
+          }
           val raw = files.map(x => stats(x).get(f.name))
-          if (files.isEmpty || raw.exists(_.isEmpty)) None
+          if (files.isEmpty || box.isEmpty || raw.exists(_.isEmpty)) None
           else try {
             val vals = raw.flatten
-            val pick = if (wantMin) vals.minBy(BigDecimal(_)) else vals.maxBy(BigDecimal(_))
-            f.dataType match {
-              case IntegerType | DateType => Some(pick.toInt)
-              case LongType | TimestampType | TimestampNTZType => Some(pick.toLong)
-              case DoubleType => Some(pick.toDouble)
-              case FloatType => Some(pick.toFloat)
-              case ShortType => Some(pick.toShort)
-              case _ => None
-            }
+            // no typed bound past a non-finite stat (NaN / ±Infinity)
+            require(!vals.exists(StatBounds.isNonFinite))
+            val ord: Ordering[String] = (a, b) => StatBounds.compare(f.dataType, a, b).get
+            box.map(_(if (wantMin) vals.min(ord) else vals.max(ord)))
           } catch { case _: Exception => None }
         }
         val m = new java.util.HashMap[NamedReference, ColumnStatistics]()
@@ -1645,211 +1559,118 @@ final class UnwrappingReaderFactory(
     delegate.supportColumnarReads(unwrap(p))
 }
 
-/** Conservative per-file evaluation of DSv2 runtime predicates (the group
-  * filter arrives as `col IN (v1, v2, …)` from the dynamic-pruning
-  * subquery). Unknown shapes keep the file.
-  */
-private[catalog] object V2PredicatePruner {
-  import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-
-  private def valueOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[Any] =
-    e match {
-      case l: V2Literal[_] => Some(l.value())
-      case _ => None
-    }
-
-  private def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case r: NamedReference => Some(r.fieldNames().mkString("."))
-      case _ => None
-    }
-
-  /** Is `v` (catalyst-internal value) inside the file's [min, max] for col? */
-  private def inRange(file: DataFileMeta, col: String, v: Any): Boolean = {
-    (file.minValues.get(col), file.maxValues.get(col)) match {
-      case (Some(mn), Some(mx)) =>
-        val probe = v.toString
-        // dispatch on the PROBE's runtime type, not on parseability: a
-        // numeric-looking value of a STRING column must compare lexically
-        // (its bounds were recorded in UTF8 order, where "30" > "100")
-        val numeric = v match {
-          case _: java.lang.Number | _: org.apache.spark.sql.types.Decimal => true
-          case _ => false
-        }
-        if (numeric)
-          // numeric probe: compare in Spark's numeric order (NaN greatest,
-          // ±Infinity at the ends — [[StatBounds.numCmp]]); a bound that
-          // STILL doesn't parse means mixed/corrupt stats → keep the file,
-          // never fall through to a lexical compare of numbers
-          (for (lo <- StatBounds.numCmp(probe, mn); hi <- StatBounds.numCmp(probe, mx))
-            yield lo >= 0 && hi <= 0).getOrElse(true)
-        else {
-          // string probe: UTF8 BINARY order, not java.lang.String's UTF-16
-          // code-unit order — they diverge for supplementary characters,
-          // and a truncated max bound ([[StatBounds]]) can legitimately
-          // end in one (U+FFFF increments to U+10000)
-          import org.apache.spark.unsafe.types.UTF8String
-          val s = UTF8String.fromString(probe)
-          s.compareTo(UTF8String.fromString(mn)) >= 0 &&
-            s.compareTo(UTF8String.fromString(mx)) <= 0
-        }
-      case _ => true // no stats: keep
-    }
-  }
-
-  def mayMatch(p: Predicate, file: DataFileMeta,
-      bloomFor: (String, String) => Option[FileBloom] = FilePruner.NoBloom): Boolean = {
-    // false => the file-level bloom PROVES col = v matches no row
-    def bloomMay(c: String, v: Any): Boolean =
-      bloomFor(file.path, c).forall(b =>
-        FileBloom.canonical(v).forall(b.mightContain))
-    p.name() match {
-      case "IN" =>
-        val kids = p.children()
-        (for (c <- colOf(kids.head)) yield
-          kids.tail.exists(k => valueOf(k).forall(v =>
-            inRange(file, c, v) && bloomMay(c, v)))).getOrElse(true)
-      case "=" =>
-        val kids = p.children()
-        (for (c <- colOf(kids(0)); v <- valueOf(kids(1))) yield
-          inRange(file, c, v) && bloomMay(c, v)).getOrElse(true)
-      case "AND" =>
-        val and = p.asInstanceOf[org.apache.spark.sql.connector.expressions.filter.And]
-        mayMatch(and.left(), file, bloomFor) && mayMatch(and.right(), file, bloomFor)
-      case "OR" =>
-        val or = p.asInstanceOf[org.apache.spark.sql.connector.expressions.filter.Or]
-        mayMatch(or.left(), file, bloomFor) || mayMatch(or.right(), file, bloomFor)
-      case _ => true
-    }
-  }
-}
-
-/** Metadata-level file skipping over catalyst predicates: `mayMatch = false`
-  * only when the predicate provably excludes every row of the file given
-  * its min/max — conservative by construction (unknown shapes, casts on the
-  * column side, missing stats, nulls ⇒ keep the file). Works on internal
-  * representations (dates = days-since-epoch Int, timestamps = micros
-  * Long), which is exactly what both catalyst Literals and our writer-side
-  * stats carry.
+/** Metadata-level file skipping — the one pruner every stats-based skip
+  * goes through (scan planning, runtime filters, manifest summaries,
+  * copy-on-write DELETE, expression overwrite, row groups). It reads
+  * catalyst predicates over internal representations (dates = days-since-
+  * epoch Int, timestamps = micros Long), which is exactly what catalyst
+  * Literals and the writer-side stats carry; DSv2 runtime predicates and
+  * V1 source filters enter through [[fromV2]] / [[fromV1]]. Every stat
+  * string is ordered by [[StatBounds.compare]]. `mayMatch = false` only
+  * when the stats prove no row of the file satisfies the predicate —
+  * unknown shapes, casts on the column side, missing stats ⇒ keep the
+  * file.
   */
 object FilePruner {
   import org.apache.spark.sql.catalyst.{expressions => ce}
   import org.apache.spark.unsafe.types.UTF8String
 
-  private def comparable(dt: DataType): Boolean = dt match {
-    case _: NumericType | DateType | TimestampType | TimestampNTZType | StringType => true
-    case _ => false
-  }
-
-  private def num(v: Any): Option[BigDecimal] = v match {
-    case n: java.lang.Number => Some(BigDecimal(n.toString))
-    // DecimalType literals carry Spark's Decimal (not a java.lang.Number)
-    case d: org.apache.spark.sql.types.Decimal => Some(BigDecimal(d.toJavaBigDecimal))
-    case _ => None
-  }
-
-  /** `(sign(lo cmp v), sign(hi cmp v))` of file `f`'s [min, max] on `col`
-    * against literal `v` — numerically for numeric/temporal literals,
-    * UTF8-BINARY order for strings (the writer records string stats in
-    * exactly that order, so lexicographic pruning is sound for any text).
-    * None ⇒ can't compare ⇒ caller keeps the file.
+  /** `(sign(min cmp v), sign(max cmp v))` of `f`'s stats on key `k`
+    * against the stat value `v`, in `dt`'s stat order. None ⇒ can't
+    * compare ⇒ caller keeps the file.
     */
-  private def cmp(f: DataFileMeta, col: String, v: Any): Option[(Int, Int)] =
+  private def cmp(f: DataFileMeta, k: String, v: String, dt: DataType): Option[(Int, Int)] =
     for {
-      mn <- f.minValues.get(col); mx <- f.maxValues.get(col)
-      r <- v match {
-        case s: UTF8String =>
-          Some((UTF8String.fromString(mn).compareTo(s), UTF8String.fromString(mx).compareTo(s)))
-        case s: String =>
-          Some((UTF8String.fromString(mn).compareTo(UTF8String.fromString(s)),
-            UTF8String.fromString(mx).compareTo(UTF8String.fromString(s))))
-        case other => for {
-          b <- num(other)
-          // StatBounds.numCmp: non-finite bounds ("NaN"/±"Infinity" from
-          // float/double files) compare in Spark's order (NaN greatest)
-          // instead of failing the parse and keeping the file
-          lo <- StatBounds.numCmp(mn, b.toString)
-          hi <- StatBounds.numCmp(mx, b.toString)
-        } yield (lo, hi)
-      }
-    } yield r
+      mn <- f.minValues.get(k); mx <- f.maxValues.get(k)
+      lo <- StatBounds.compare(dt, mn, v); hi <- StatBounds.compare(dt, mx, v)
+    } yield (lo, hi)
 
-  /** A stat-keyed term: a plain column reference, or a typed variant
-    * extraction `variant_get(col, '$.path', type)` whose per-file min/max
-    * the writer recorded under `col#path` (write.variant.shred-paths).
-    * Unshredded paths simply have no stats ⇒ conservative keep.
+  /** May `f` hold the stat value `v` on key `k`? Missing or unordered
+    * bounds: maybe.
     */
-  private def termKey(e: ce.Expression): Option[String] = e match {
-    case a: ce.Attribute => Some(a.name)
-    // the extraction TYPE is part of the stat key: a predicate shredding
-    // the same path as a different type finds no stats and keeps the
-    // file — stats ordered by one type must never answer another's
-    // comparisons (e.g. bigint-ordered [5, 40] vs a string '40' lookup)
+  def mayContain(f: DataFileMeta, k: String, v: String, dt: DataType): Boolean =
+    cmp(f, k, v, dt).forall { case (lo, hi) => lo <= 0 && hi >= 0 }
+
+  /** May the [min, max] ranges of `a` and `b` on key `k` overlap? A
+    * missing bound is unbounded; unordered bounds overlap.
+    */
+  def mayOverlap(a: DataFileMeta, b: DataFileMeta, k: String, dt: DataType): Boolean = {
+    def le(x: Option[String], y: Option[String]): Boolean =
+      (for (p <- x; q <- y; c <- StatBounds.compare(dt, p, q)) yield c <= 0).getOrElse(true)
+    le(a.minValues.get(k), b.maxValues.get(k)) && le(b.minValues.get(k), a.maxValues.get(k))
+  }
+
+  /** A stat-keyed term and, once resolved, its type: a plain column
+    * reference (unresolved in a parsed maintenance scope), or a typed
+    * variant extraction `variant_get(col, '$.path', type)` whose per-file
+    * min/max the writer recorded under `col#path` (write.variant.shred-
+    * paths). The extraction TYPE is part of the stat key: a predicate
+    * shredding the same path as a different type finds no stats and keeps
+    * the file. Unshredded paths simply have no stats ⇒ conservative keep.
+    */
+  private def termKey(e: ce.Expression): Option[(String, Option[DataType])] = e match {
+    case a: ce.Attribute => Some((a.name, if (a.resolved) Some(a.dataType) else None))
     case org.apache.spark.sql.catalyst.expressions.variant.VariantGet(
-        a: ce.Attribute, ce.Literal(p: UTF8String, _), dt, _, _)
-      if p != null && comparable(dt) =>
-      Some(VariantShred.statKey(a.name, p.toString, dt))
+        a: ce.Attribute, ce.Literal(p: UTF8String, _), dt, _, _) if p != null =>
+      Some((VariantShred.statKey(a.name, p.toString, dt), Some(dt)))
     case _ => None
   }
 
-  /** (column, literal value, literalOnLeft) for `term op lit` /
-    * `lit op term` shapes; None for anything else (⇒ no pruning).
+  /** `term op lit` / `lit op term` with a non-null literal: the term's
+    * stat key, the literal's value and type (the stats compare in that
+    * type's order), whether the term has that type, and whether the
+    * literal is on the left.
     */
-  private def colLit(l: ce.Expression, r: ce.Expression): Option[(String, Any, Boolean)] =
-    (l, r) match {
-      case (t, ce.Literal(v, dt)) if v != null && comparable(dt) =>
-        termKey(t).map(k => (k, v, false))
-      case (ce.Literal(v, dt), t) if v != null && comparable(dt) =>
-        termKey(t).map(k => (k, v, true))
-      case _ => None
-    }
+  private final case class Probe(key: String, v: Any, dt: DataType, sameType: Boolean,
+      flipped: Boolean)
+
+  private def probe(l: ce.Expression, r: ce.Expression): Option[Probe] = (l, r) match {
+    case (t, ce.Literal(v, dt)) if v != null =>
+      termKey(t).map { case (k, tdt) => Probe(k, v, dt, tdt.contains(dt), flipped = false) }
+    case (ce.Literal(v, dt), t) if v != null =>
+      termKey(t).map { case (k, tdt) => Probe(k, v, dt, tdt.contains(dt), flipped = true) }
+    case _ => None
+  }
 
   /** No bloom index — point predicates prune on min/max alone. */
   val NoBloom: (String, String) => Option[FileBloom] = (_, _) => None
 
-  /** Smallest byte string strictly greater than every string with prefix
-    * `p`: increment p's last non-0xFF byte, dropping the 0xFF tail. None
-    * ⇒ all-0xFF prefix, no upper bound (callers keep the file).
-    */
-  private def prefixUpperBound(p: UTF8String): Option[UTF8String] = {
-    val bytes = p.getBytes // copy
-    var i = bytes.length - 1
-    while (i >= 0 && bytes(i) == -1) i -= 1
-    if (i < 0) None
-    else {
-      val out = java.util.Arrays.copyOf(bytes, i + 1)
-      out(i) = (out(i) + 1).toByte
-      Some(UTF8String.fromBytes(out))
-    }
-  }
-
   /** Could any row of `f` satisfy `e`? `bloomFor(path, col)` supplies the
-    * file-level bloom (if any) for point-predicate pruning beyond min/max.
+    * file-level bloom (if any) for point predicates beyond min/max;
+    * `partFields` (the union of historical specs under partition
+    * evolution) supplies the bucket fields a point predicate may prune by.
     */
   def mayMatch(e: ce.Expression, f: DataFileMeta, schema: StructType,
-      bloomFor: (String, String) => Option[FileBloom] = NoBloom): Boolean = {
+      bloomFor: (String, String) => Option[FileBloom] = NoBloom,
+      partFields: Seq[PartField] = Nil): Boolean = {
     if (f.minValues.isEmpty) return true
     // test receives (sign(lo cmp v), sign(hi cmp v), literalOnLeft)
     def check(l: ce.Expression, r: ce.Expression)(
         test: (Int, Int, Boolean) => Boolean): Boolean =
-      (for ((col, v, flipped) <- colLit(l, r); (cl, ch) <- cmp(f, col, v))
-        yield test(cl, ch, flipped)).getOrElse(true)
-    // false ⇒ the file-level bloom PROVES `col = v` matches no row of f
-    def bloomMay(col: String, v: Any): Boolean =
-      bloomFor(f.path, col).forall(b =>
-        FileBloom.canonical(v).forall(b.mightContain))
-    e match {
-      case ce.And(a, b) => mayMatch(a, f, schema, bloomFor) && mayMatch(b, f, schema, bloomFor)
-      case ce.Or(a, b) => mayMatch(a, f, schema, bloomFor) || mayMatch(b, f, schema, bloomFor)
+      probe(l, r).forall(p =>
+        cmp(f, p.key, p.v.toString, p.dt).forall { case (cl, ch) => test(cl, ch, p.flipped) })
+    // could a row of f hold `key = v`? Its [min, max], its file bloom, and
+    // the recorded bucket of EVERY bucket field on the column: each file
+    // carries the stat of the one spec it was written under, and a field
+    // whose key it lacks keeps it. A bucket is the hash of a value of the
+    // column's type, so a literal of another type keeps the file.
+    def mayEqual(p: Probe): Boolean =
+      mayContain(f, p.key, p.v.toString, p.dt) &&
+        bloomFor(f.path, p.key).forall(b => FileBloom.canonical(p.v).forall(b.mightContain)) &&
+        partFields.forall(pf => pf.buckets.isEmpty || pf.source != p.key || !p.sameType ||
+          (try mayContain(f, pf.statKey, BucketHash(pf.buckets.get, p.v, p.dt).toString,
+            IntegerType) catch { case _: Exception => true }))
+    def mayEqualTerm(t: ce.Expression, v: ce.Expression): Boolean = probe(t, v).forall(mayEqual)
+    def may(e: ce.Expression): Boolean = e match {
+      case ce.And(a, b) => may(a) && may(b)
+      case ce.Or(a, b) => may(a) || may(b)
       // null-count stats: a file with zero nulls has no IS NULL match; a
       // file that is all-null has no IS NOT NULL match
-      case ce.IsNull(a: ce.Attribute) =>
-        f.nulls.get(a.name).forall(_ > 0)
-      case ce.IsNotNull(a: ce.Attribute) =>
-        f.nulls.get(a.name).forall(_ < f.rowCount)
-      case ce.EqualTo(l, r) =>
-        check(l, r)((cl, ch, _) => cl <= 0 && ch >= 0) &&
-          colLit(l, r).forall { case (col, v, _) => bloomMay(col, v) }
+      case ce.IsNull(a: ce.Attribute) => f.nulls.get(a.name).forall(_ > 0)
+      case ce.IsNotNull(a: ce.Attribute) => f.nulls.get(a.name).forall(_ < f.rowCount)
+      // a non-null literal: `<=>` matches exactly the rows `=` does
+      case ce.EqualTo(l, r) => mayEqualTerm(l, r)
+      case ce.EqualNullSafe(l, r) => mayEqualTerm(l, r)
       case ce.GreaterThan(l, r) => // attr > v needs hi > v; v > attr needs lo < v
         check(l, r)((cl, ch, flip) => if (flip) cl < 0 else ch > 0)
       case ce.GreaterThanOrEqual(l, r) =>
@@ -1858,108 +1679,127 @@ object FilePruner {
         check(l, r)((cl, ch, flip) => if (flip) ch > 0 else cl < 0)
       case ce.LessThanOrEqual(l, r) =>
         check(l, r)((cl, ch, flip) => if (flip) ch >= 0 else cl <= 0)
-      // IN lists: keep the file iff ANY value may fall in its range — the
-      // multi-point-lookup pattern (e.g. an IVF probe's `cell IN (...)`)
-      // prunes like a disjunction of equalities. Incomparable values keep
-      // the file conservatively; an empty list matches nothing.
       // LIKE 'p%' ⇒ the matching strings form the interval [p, next(p))
-      // in UTF8-BINARY order (the order the writer records string stats
-      // in): keep the file iff its [min, max] overlaps that interval —
-      // the prefix-scan pattern on a sorted string column plans only the
-      // covering run of files
-      case ce.StartsWith(a: ce.Attribute, ce.Literal(p: UTF8String, _)) if p != null =>
-        (for (mn <- f.minValues.get(a.name); mx <- f.maxValues.get(a.name)) yield {
-          val lo = UTF8String.fromString(mn)
-          val hi = UTF8String.fromString(mx)
-          hi.compareTo(p) >= 0 && prefixUpperBound(p).forall(ub => lo.compareTo(ub) < 0)
-        }).getOrElse(true)
-      case ce.In(a: ce.Attribute, vs) =>
-        vs.exists {
-          case ce.Literal(v, _) if v != null =>
-            cmp(f, a.name, v).forall { case (cl, ch) => cl <= 0 && ch >= 0 } &&
-              bloomMay(a.name, v)
-          case _ => true
-        }
-      case ce.InSet(a: ce.Attribute, vs) =>
-        vs.exists(v => v == null ||
-          (cmp(f, a.name, v).forall { case (cl, ch) => cl <= 0 && ch >= 0 } &&
-            bloomMay(a.name, v)))
+      // in the stat order: keep the file iff its [min, max] overlaps that
+      // interval — the prefix-scan pattern on a sorted string column plans
+      // only the covering run of files
+      case ce.StartsWith(a: ce.Attribute, ce.Literal(p: UTF8String, dt)) if p != null =>
+        val ps = p.toString
+        (for (mn <- f.minValues.get(a.name); mx <- f.maxValues.get(a.name)) yield
+          StatBounds.compare(dt, mx, ps).forall(_ >= 0) &&
+            StatBounds.prefixUpper(ps).forall(ub =>
+              StatBounds.compare(dt, mn, ub).forall(_ < 0))).getOrElse(true)
+      // IN lists: keep the file iff ANY value may be in it — the multi-
+      // point-lookup pattern (e.g. an IVF probe's `cell IN (...)`) prunes
+      // like a disjunction of equalities. Non-literal values keep the
+      // file; an empty list matches nothing.
+      case ce.In(t, vs) => vs.exists(mayEqualTerm(t, _))
+      case ce.InSet(t, vs) => termKey(t).forall { case (k, tdt) => tdt.forall(dt =>
+        vs.exists(v => v == null || mayEqual(Probe(k, v, dt, sameType = true, flipped = false)))) }
       case _ => true
     }
-  }
-}
-
-/** Bucket-transform file skipping: an equality/IN predicate on a bucketed
-  * source column prunes every file whose recorded bucket differs from the
-  * literal's bucket — a point lookup on `bucket(N, k)` reads ~1/N of the
-  * files regardless of the key's cardinality (min/max on a hashed layout
-  * can't help; the bucket stat can). Conservative: any non-literal shape
-  * keeps the file.
-  */
-object BucketPruner {
-  import org.apache.spark.sql.catalyst.{expressions => ce}
-
-  // ALL bucket fields on the column, not the first: under partition-spec
-  // evolution callers pass the UNION of historical specs
-  // ([[TableMeta.allPartitionFields]]), so a column can carry several
-  // bucket widths. Each file has stats for the ONE spec it was written
-  // under; `statMatches` keeps a file whose key a field lacks, so the
-  // forall over every width lets each file be judged by exactly its own
-  // spec — old files keep their old-spec skipping, new files theirs.
-  private def bucketsOf(pfields: Seq[PartField], colName: String): Seq[PartField] =
-    pfields.filter(pf => pf.buckets.isDefined && pf.source == colName)
-
-  private def statMatches(f: DataFileMeta, pf: PartField, v: Any, dt: DataType): Boolean =
-    (f.minValues.get(pf.statKey), f.maxValues.get(pf.statKey)) match {
-      case (Some(lo), Some(hi)) if lo == hi =>
-        try lo.toInt == BucketHash(pf.buckets.get, v, dt)
-        catch { case _: Exception => true }
-      case _ => true // no stat: keep
-    }
-
-  def mayMatch(e: ce.Expression, f: DataFileMeta, pfields: Seq[PartField]): Boolean = e match {
-    case ce.And(a, b) => mayMatch(a, f, pfields) && mayMatch(b, f, pfields)
-    case ce.Or(a, b) => mayMatch(a, f, pfields) || mayMatch(b, f, pfields)
-    case ce.EqualTo(a: ce.Attribute, ce.Literal(v, dt)) if v != null =>
-      bucketsOf(pfields, a.name).forall(statMatches(f, _, v, dt))
-    case ce.EqualTo(ce.Literal(v, dt), a: ce.Attribute) if v != null =>
-      bucketsOf(pfields, a.name).forall(statMatches(f, _, v, dt))
-    case ce.In(a: ce.Attribute, elems) if elems.nonEmpty && elems.forall {
-        case ce.Literal(v, _) => v != null; case _ => false } =>
-      bucketsOf(pfields, a.name).forall(pf =>
-        elems.exists { case ce.Literal(v, dt) => statMatches(f, pf, v, dt) })
-    case _ => true
+    may(e)
   }
 
-  /** Same skipping for DSv2 runtime predicates (`k IN (…)` from runtime
-    * group filtering): for bucketed tables this turns the CoW group filter
-    * into FILE-level pruning — an UPDATE hitting one key rewrites the one
-    * file in that key's bucket, not the table.
+  /** Does EVERY row of `f` provably satisfy `e`? False whenever the stats
+    * can't prove it (expression overwrite then rejects the file as
+    * partially matching rather than silently keeping rows the predicate
+    * wanted deleted). Equality proofs need min == max == value and a
+    * recorded zero null count.
     */
-  def mayMatchV2(p: Predicate, f: DataFileMeta, pfields: Seq[PartField],
-      resolveType: String => Option[DataType]): Boolean = {
+  def mustMatch(e: ce.Expression, f: DataFileMeta): Boolean = {
+    def isValue(l: ce.Expression, r: ce.Expression): Boolean =
+      probe(l, r).exists(p =>
+        cmp(f, p.key, p.v.toString, p.dt).contains((0, 0)) && f.nulls.get(p.key).contains(0L))
+    e match {
+      case ce.And(a, b) => mustMatch(a, f) && mustMatch(b, f)
+      case ce.Or(a, b) => mustMatch(a, f) || mustMatch(b, f)
+      // a non-null value: `<=>` proves exactly like `=` (and PARTITION
+      // (p = v) clauses arrive as EqualNullSafe)
+      case ce.EqualTo(l, r) => isValue(l, r)
+      case ce.EqualNullSafe(l, r) => isValue(l, r)
+      case ce.In(t, vs) => vs.exists(isValue(t, _))
+      case ce.IsNotNull(a: ce.Attribute) => f.nulls.get(a.name).contains(0L)
+      case ce.Literal(true, BooleanType) => true
+      case _ => false
+    }
+  }
+
+  private def column(schema: StructType, name: String): Option[ce.AttributeReference] =
+    schema.find(_.name == name).map(c => ce.AttributeReference(name, c.dataType)())
+
+  /** A V1 source filter (copy-on-write DELETE's and expression overwrite's
+    * pushed filters) as a catalyst predicate over `schema`'s columns, each
+    * literal converted to its column's internal type. None = not
+    * translatable: `mayMatch` callers keep the file, `mustMatch` proves
+    * nothing.
+    */
+  def fromV1(f: sources.Filter, schema: StructType): Option[ce.Expression] = {
+    def lit(a: ce.Attribute, v: Any): Option[ce.Expression] =
+      try Some(ce.Literal.create(v, a.dataType)) catch { case _: Exception => None }
+    def op(a: String, v: Any)(mk: (ce.Expression, ce.Expression) => ce.Expression) =
+      for (c <- column(schema, a); l <- lit(c, v)) yield mk(c, l)
+    def both(l: sources.Filter, r: sources.Filter)(
+        mk: (ce.Expression, ce.Expression) => ce.Expression) =
+      for (a <- fromV1(l, schema); b <- fromV1(r, schema)) yield mk(a, b)
+    f match {
+      case sources.EqualTo(a, v) => op(a, v)(ce.EqualTo)
+      case sources.EqualNullSafe(a, null) => column(schema, a).map(ce.IsNull)
+      case sources.EqualNullSafe(a, v) => op(a, v)(ce.EqualNullSafe)
+      case sources.GreaterThan(a, v) => op(a, v)(ce.GreaterThan)
+      case sources.GreaterThanOrEqual(a, v) => op(a, v)(ce.GreaterThanOrEqual)
+      case sources.LessThan(a, v) => op(a, v)(ce.LessThan)
+      case sources.LessThanOrEqual(a, v) => op(a, v)(ce.LessThanOrEqual)
+      case sources.In(a, vs) => column(schema, a).flatMap { c =>
+        val ls = vs.toSeq.map(lit(c, _))
+        if (ls.forall(_.isDefined)) Some(ce.In(c, ls.flatten)) else None
+      }
+      case sources.IsNull(a) => column(schema, a).map(ce.IsNull)
+      case sources.IsNotNull(a) => column(schema, a).map(ce.IsNotNull)
+      case sources.StringStartsWith(a, v) => op(a, v)(ce.StartsWith)
+      case sources.StringEndsWith(a, v) => op(a, v)(ce.EndsWith)
+      case sources.StringContains(a, v) => op(a, v)(ce.Contains)
+      case sources.And(l, r) => both(l, r)(ce.And)
+      case sources.Or(l, r) => both(l, r)(ce.Or)
+      case sources.Not(c) => fromV1(c, schema).map(ce.Not)
+      case sources.AlwaysTrue() => Some(ce.Literal.TrueLiteral)
+      case sources.AlwaysFalse() => Some(ce.Literal.FalseLiteral)
+      case _ => None
+    }
+  }
+
+  /** A DSv2 runtime predicate (dynamic or runtime group filtering hands
+    * the scan `col IN (v1, v2, …)`, under AND/OR) as a catalyst predicate
+    * over `schema`'s columns; literals already carry internal values. An
+    * untranslated conjunct is dropped (the rest still prunes); None = keep
+    * every file.
+    */
+  def fromV2(p: Predicate, schema: StructType): Option[ce.Expression] = {
     import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match { case r: NamedReference => Some(r.fieldNames().mkString(".")); case _ => None }
-    p.name() match {
-      case "IN" | "=" =>
+    import org.apache.spark.sql.connector.expressions.filter.{And, Or}
+    p match {
+      case a: And => (fromV2(a.left(), schema), fromV2(a.right(), schema)) match {
+        case (Some(l), Some(r)) => Some(ce.And(l, r))
+        case (l, r) => l.orElse(r)
+      }
+      case o: Or =>
+        for (l <- fromV2(o.left(), schema); r <- fromV2(o.right(), schema)) yield ce.Or(l, r)
+      case _ if p.name() == "IN" || p.name() == "=" =>
         val kids = p.children()
-        (for {
-          c <- colOf(kids.head)
-          dt <- resolveType(c)
-        } yield bucketsOf(pfields, c).forall(pf => kids.tail.exists {
-          case l: V2Literal[_] if l.value() != null => statMatches(f, pf, l.value(), dt)
-          case _ => true
-        })).getOrElse(true)
-      case "AND" =>
-        val and = p.asInstanceOf[org.apache.spark.sql.connector.expressions.filter.And]
-        mayMatchV2(and.left(), f, pfields, resolveType) &&
-          mayMatchV2(and.right(), f, pfields, resolveType)
-      case "OR" =>
-        val or = p.asInstanceOf[org.apache.spark.sql.connector.expressions.filter.Or]
-        mayMatchV2(or.left(), f, pfields, resolveType) ||
-          mayMatchV2(or.right(), f, pfields, resolveType)
-      case _ => true
+        val c = kids.head match {
+          case r: NamedReference => column(schema, r.fieldNames().mkString("."))
+          case _ => None
+        }
+        c.flatMap { c =>
+          val ls = kids.tail.toSeq.map {
+            case l: V2Literal[_] => Some(ce.Literal(l.value(), l.dataType()))
+            case _ => None
+          }
+          if (ls.exists(_.isEmpty)) None
+          else if (p.name() == "=") Some(ce.EqualTo(c, ls.head.get))
+          else Some(ce.In(c, ls.flatten))
+        }
+      case _ => None
     }
   }
 }
@@ -2211,20 +2051,13 @@ final class LakeBatchWrite(
     }
     val newKeys = newFiles.flatMap(keyOf).toSet
     // Could an unattributable file hold any row of partition key `key`?
-    // Numeric stat compare when both sides parse, UTF8-binary otherwise
-    // (the order string stats are recorded in); missing stats ⇒ maybe.
-    def cmpStat(a: String, b: String): Int =
-      // numCmp handles non-finite float/double tokens in Spark's order;
-      // both-non-numeric = a string partition key, compared lexically
-      StatBounds.numCmp(a, b).getOrElse(a.compareTo(b))
+    // Each field's stats order by the field's type; a field without one,
+    // or missing stats ⇒ maybe.
+    val types = base.physicalSchema.fields.map(c => c.name -> c.dataType).toMap
     def mayHold(f: DataFileMeta, p: PartField, key: String): Boolean =
       if (key == "n:") !f.nulls.get(p.source).contains(0L)
-      else (f.minValues.get(p.statKey), f.maxValues.get(p.statKey)) match {
-        case (Some(lo), Some(hi)) =>
-          val v = key.substring(2)
-          cmpStat(lo, v) <= 0 && cmpStat(hi, v) >= 0
-        case _ => true
-      }
+      else types.get(p.source).forall(dt =>
+        FilePruner.mayContain(f, p.statKey, key.substring(2), p.statType(dt)))
     val clashing = base.currentFiles.filter(f => keyOf(f).isEmpty &&
       newKeys.exists(k => pf.lazyZip(k).forall((p, kv) => mayHold(f, p, kv))))
     if (clashing.nonEmpty) throw new IllegalArgumentException(
@@ -2245,8 +2078,11 @@ final class LakeBatchWrite(
     */
   private def whereReplaced(base: TableMeta): Set[String] = {
     val stat = base.logicalStatFiles(base.currentFiles)
-    val (full, rest) = stat.partition(f => where.forall(FilterToColumn.mustMatch(_, f)))
-    val partial = rest.filter(f => where.forall(FilterToColumn.mayMatch(_, f)))
+    val preds = where.map(FilePruner.fromV1(_, base.schema))
+    val pf = base.allPartitionFields
+    val (full, rest) = stat.partition(f => preds.forall(_.exists(FilePruner.mustMatch(_, f))))
+    val partial = rest.filter(f =>
+      preds.forall(_.forall(FilePruner.mayMatch(_, f, base.schema, partFields = pf))))
     if (partial.nonEmpty) throw new IllegalArgumentException(
       s"INSERT OVERWRITE ... on ${table.ident}: predicate $where does not align " +
         s"with file boundaries — ${partial.size} file(s) partially match " +

@@ -112,18 +112,17 @@ object DeleteFiles {
     StructField(FilePathCol, StringType, nullable = false),
     StructField(PosCol, LongType, nullable = false)))
 
-  /** Delete files whose file_path [min,max] range may cover `dataPath`.
-    * Missing stats ⇒ conservative cover.
+  /** May `delete`'s file_path [min, max] range cover `dataPath`? Missing
+    * stats ⇒ conservative cover.
     */
+  def covers(delete: DataFileMeta, dataPath: String): Boolean =
+    FilePruner.mayContain(delete, FilePathCol, dataPath, StringType)
+
   def covering(deletes: Seq[DataFileMeta], dataPath: String): Seq[DataFileMeta] =
-    deletes.filter(d =>
-      d.minValues.get(FilePathCol).forall(_ <= dataPath) &&
-        d.maxValues.get(FilePathCol).forall(_ >= dataPath))
+    deletes.filter(covers(_, dataPath))
 
   def coversAny(delete: DataFileMeta, dataPaths: Iterable[String]): Boolean =
-    dataPaths.exists(p =>
-      delete.minValues.get(FilePathCol).forall(_ <= p) &&
-        delete.maxValues.get(FilePathCol).forall(_ >= p))
+    dataPaths.exists(covers(delete, _))
 }
 
 /** Executor-side parquet→InternalRow reader built from Spark's own
@@ -478,29 +477,6 @@ object EqDeletes {
       p -> buf.toArray
     }.toMap
   }
-
-  /** Can `del`'s key range overlap `data`'s? Both files carry per-column
-    * min/max from the same stats-tracking writer (physical names). A
-    * re-upserted key can only live in files whose range covers it, so a
-    * delete whose range is disjoint on ANY key column cannot kill anything
-    * in `data` — the file stays on the fast path. Missing stats or
-    * non-comparable types ⇒ conservative overlap.
-    */
-  def mayOverlap(data: DataFileMeta, del: DataFileMeta, keySchema: StructType): Boolean =
-    keySchema.fields.forall { f =>
-      val cmp: Option[Boolean] = for {
-        dLo <- data.minValues.get(f.name); dHi <- data.maxValues.get(f.name)
-        eLo <- del.minValues.get(f.name); eHi <- del.maxValues.get(f.name)
-      } yield f.dataType match {
-        case _: NumericType | DateType | TimestampType | TimestampNTZType =>
-          try {
-            BigDecimal(eLo) <= BigDecimal(dHi) && BigDecimal(eHi) >= BigDecimal(dLo)
-          } catch { case _: NumberFormatException => true }
-        case StringType | BooleanType => eLo <= dHi && eHi >= dLo
-        case _ => true
-      }
-      cmp.getOrElse(true)
-    }
 }
 
 /** One SPLIT of a data file read positionally: the row groups whose byte

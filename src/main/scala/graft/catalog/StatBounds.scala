@@ -1,5 +1,8 @@
 package graft.catalog
 
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Manifest string-bound truncation (Iceberg's `truncate(N)` metrics mode;
   * ref behavior delegated to the engine — the reference stores Iceberg
   * metadata whose spec §Appendix D defines exactly this contract).
@@ -18,8 +21,8 @@ package graft.catalog
   *    there is no finite upper bound → None (consumers treat a missing
   *    bound as unbounded and keep the file — conservative).
   *
-  * Every stats consumer compares bounds lexically (UTF8String byte order),
-  * so widened bounds keep all pruning/attribution SOUND; only precision on
+  * Every stats consumer orders string bounds through [[compare]] (UTF-8
+  * byte order), so widened bounds keep all pruning/attribution SOUND; only precision on
   * >`len`-char values is lost. Identity-partition source columns are
   * exempt at the writer (attribution and SPJ need exact single values),
   * and delete-file writers disable truncation entirely (tombstone
@@ -57,6 +60,22 @@ object StatBounds {
       else Some(BigDecimal(a).compare(BigDecimal(b)))
     } catch { case _: NumberFormatException => None }
 
+  /** THE stat order: the sign of `a` vs `b`, two stat strings of a column
+    * of type `dt`, as Spark orders the typed values. Numeric, date,
+    * timestamp and decimal stats compare through [[numCmp]]; strings in
+    * UTF-8 binary order (the order the writer records them in — Java's
+    * UTF-16 `compareTo` diverges for supplementary characters); booleans
+    * as `false < true`. None = a type without a stat order, or a value
+    * that does not parse as the type — every caller then keeps the file.
+    */
+  def compare(dt: DataType, a: String, b: String): Option[Int] = dt match {
+    case _: NumericType | DateType | TimestampType | TimestampNTZType => numCmp(a, b)
+    case StringType => Some(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
+    case BooleanType => for (x <- a.toBooleanOption; y <- b.toBooleanOption)
+      yield java.lang.Boolean.compare(x, y)
+    case _ => None
+  }
+
   private def cpCount(s: String): Int = s.codePointCount(0, s.length)
 
   def truncateMin(s: String, len: Int): String =
@@ -67,9 +86,17 @@ object StatBounds {
     }
 
   /** None = no finite upper bound exists for this prefix. */
-  def truncateMax(s: String, len: Int): Option[String] = {
-    if (len <= 0 || cpCount(s) <= len) return Some(s)
-    val cps = s.codePoints().limit(len.toLong).toArray
+  def truncateMax(s: String, len: Int): Option[String] =
+    if (len <= 0 || cpCount(s) <= len) Some(s)
+    else prefixUpper(truncateMin(s, len))
+
+  /** Smallest string greater than every string starting with `p` (in
+    * code-point order, which is UTF-8 byte order): `p` with its last
+    * code point incremented. None = no such string (empty `p`, or every
+    * code point already U+10FFFF).
+    */
+  def prefixUpper(p: String): Option[String] = {
+    val cps = p.codePoints().toArray
     // increment the last code point that CAN be incremented, dropping any
     // U+10FFFF tail; the surrogate range [D800, DFFF] is not a valid code
     // point sequence, so 0xD7FF increments straight to 0xE000

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** One data file tracked by a snapshot. Column min/max (stringified) enable
   * metadata-level file pruning without opening parquet footers — at 100 TB
@@ -101,10 +101,10 @@ final case class ManifestMeta(
 
 /** Folds per-file stats into a per-manifest summary at manifest-write
   * time. The fold order must match how [[FilePruner]] will COMPARE the
-  * stat strings at planning: numerically (via [[StatBounds.numCmp]],
-  * non-finite tokens in Spark's order) for numeric/temporal keys, UTF8
-  * binary order for strings — so each key carries a comparison KIND
-  * ('n' | 's') derived from the table schema ([[TableMeta.physicalStatKinds]]).
+  * stat strings at planning — [[StatBounds.compare]]: numerically for
+  * numeric/temporal keys, UTF8 binary order for strings — so each key
+  * carries a comparison KIND ('n' | 's') derived from the table schema
+  * ([[TableMeta.physicalStatKinds]]).
   * Any file missing a bound, or any unparseable value, drops the key
   * (absent summary = conservative keep, mirroring every other stat path).
   * String bounds may be [[StatBounds]]-truncated: widened bounds fold to
@@ -114,12 +114,9 @@ object ManifestSummary {
   def fold(files: Seq[DataFileMeta], kinds: Map[String, Char])
       : (Map[String, String], Map[String, String], Map[String, Long]) = {
     if (files.isEmpty || kinds.isEmpty) return (Map.empty, Map.empty, Map.empty)
-    def lt(a: String, b: String, kind: Char): Option[Boolean] = kind match {
-      case 's' =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(a)
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0)
-      case _ => StatBounds.numCmp(a, b).map(_ < 0)
-    }
+    // 'n' orders as any numeric type does (every one compares by numCmp)
+    def lt(a: String, b: String, kind: Char): Option[Boolean] =
+      StatBounds.compare(if (kind == 's') StringType else LongType, a, b).map(_ < 0)
     val mins = Map.newBuilder[String, String]
     val maxs = Map.newBuilder[String, String]
     val nulls = Map.newBuilder[String, Long]
@@ -409,7 +406,7 @@ final case class TableMeta(
   }
 
   /** Comparison kind per PHYSICAL stat key for [[ManifestSummary.fold]]:
-    * 'n' = numeric stat strings ([[StatBounds.numCmp]] order), 's' = UTF8
+    * 'n' = numeric stat strings ([[StatBounds.compare]] order), 's' = UTF8
     * binary order. Covers schema columns, transform stat keys
     * (`_bucket_N_c` / `_days_c` / `_truncate_W_c`), and shredded variant
     * keys; anything else (booleans, binary, nested) is omitted — absent
@@ -517,8 +514,7 @@ final case class TableMeta(
       Some(slimEntry(planningStatKeys ++ predCols) _)
     }
     matchingEntries(manifestsOf(s).filter(_.isData),
-      pseudo => exprs.forall(e => FilePruner.mayMatch(e, pseudo, schema) &&
-        BucketPruner.mayMatch(e, pseudo, pf)), xform) ++
+      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, schema, partFields = pf)), xform) ++
       s.inlineFiles.map(f => xform.fold(f)(_(f)))
   }
 
@@ -542,8 +538,7 @@ final case class TableMeta(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[DataFileMeta] = {
     val pf = allPartitionFields
     matchingEntries(manifestsOf(s).filter(_.kind == "deletes"),
-      pseudo => exprs.forall(e => FilePruner.mayMatch(e, pseudo, schema) &&
-        BucketPruner.mayMatch(e, pseudo, pf)))
+      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, schema, partFields = pf)))
   }
 
   /** A snapshot's EQUALITY-delete files (streaming-upsert key tombstones):
@@ -1059,14 +1054,10 @@ object CasCommit {
       operation: String, ident: String): Unit = {
     if (replacedPaths.isEmpty) return
     // equality deletes carry no file_path stats, so a fresh one always
-    // "may target" a rewrite (None.forall = true) — conservative-correct
+    // "may target" a rewrite — conservative-correct
     val fresh = (base.currentDeleteFiles ++ base.currentEqDeleteFiles)
       .filterNot(d => scanBaseDeletePaths(d.path))
-    val clash = fresh.find { d =>
-      val lo = d.minValues.get("file_path")
-      val hi = d.maxValues.get("file_path")
-      replacedPaths.exists(p => lo.forall(_ <= p) && hi.forall(_ >= p))
-    }
+    val clash = fresh.find(d => DeleteFiles.coversAny(d, replacedPaths))
     clash.foreach { d =>
       throw new CommitConflictException(
         s"$operation on $ident: delete file ${d.path} committed concurrently may target " +
@@ -1309,6 +1300,11 @@ final case class PartField(source: String, buckets: Option[Int],
     .orElse(trunc.map(w => s"truncate($w,$source)")).getOrElse(source)
   /** True for a plain column (no transform). */
   def isIdentity: Boolean = buckets.isEmpty && time.isEmpty && trunc.isEmpty
+  /** Type of this field's stat values: bucket and time keys are ints,
+    * identity and truncate keys keep the source column's type.
+    */
+  def statType(sourceType: DataType): DataType =
+    if (buckets.isDefined || time.isDefined) IntegerType else sourceType
   def rename(from: String, to: String): PartField =
     if (source == from) copy(source = to) else this
 }

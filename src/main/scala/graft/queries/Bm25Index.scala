@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * build time.
   *
   * Scale shape: a probe reads only the query terms' posting BUCKETS
-  * (BucketPruner projects the `tok IN (...)` filter onto the bucket
+  * (FilePruner projects the `tok IN (...)` filter onto the bucket
   * stat, so non-matching files are never opened), computes df from just
   * those postings, and scores with NO join at all — pruned postings
   * carry everything BM25 needs, so probe cost tracks matching postings,

@@ -996,7 +996,7 @@ object LlmPipeline {
     // tf) is a catalog table PARTITIONED BY bucket(16, tok), doc lengths a
     // second table, corpus stats pinned in TBLPROPERTIES at build — a
     // probe never touches the corpus: the term IN-filter partition-prunes
-    // to the query terms' posting buckets (BucketPruner), df is a tiny agg
+    // to the query terms' posting buckets (FilePruner), df is a tiny agg
     // over just those postings, and the score join shuffles O(matching
     // postings), never O(corpus tokens). The oracle is q196's VERBATIM
     // from-scratch scan, so a stale, duplicated, or mis-bucketed index

@@ -68,20 +68,29 @@ class DynamicOverwriteSpec extends AnyFunSuite {
   }
 
   test("static PARTITION-clause overwrite replaces exactly the named partition") {
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.dyo")
-    spark.sql("DROP TABLE IF EXISTS lake.dyo.p")
-    spark.sql("CREATE TABLE lake.dyo.p (v BIGINT, day INT) PARTITIONED BY (day)")
-    spark.sql("INSERT INTO lake.dyo.p SELECT id, CAST(id % 4 AS INT) FROM range(400)")
-    // expression overwrite: day=2 is a whole-partition predicate
-    spark.sql("INSERT OVERWRITE lake.dyo.p PARTITION (day = 2) SELECT id + 5000 FROM range(7)")
-    val perDay = spark.sql(
-      "SELECT day, count(*) AS n FROM lake.dyo.p GROUP BY day ORDER BY day")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(perDay == Seq((0, 100L), (1, 100L), (2, 7L), (3, 100L)), s"got $perDay")
-    val ops = spark.sql(
-      "SELECT operation FROM lake.dyo.`p$snapshots` ORDER BY snapshot_id")
-      .collect().map(_.getString(0)).toSeq
-    assert(ops.last == "overwrite-where", s"got $ops")
+    // (partition column type, its value for id % 4, the PARTITION literal
+    // naming the third value, the four values as rendered)
+    Seq(
+      ("INT", "CAST(id % 4 AS INT)", "2", Seq("0", "1", "2", "3")),
+      ("STRING", "concat('r', id % 4)", "'r2'", Seq("r0", "r1", "r2", "r3")),
+      ("DATE", "date_add(DATE'2024-01-01', CAST(id % 4 AS INT))", "DATE'2024-01-03'",
+        Seq("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"))
+    ).foreach { case (dt, value, lit, days) =>
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.dyo")
+      spark.sql("DROP TABLE IF EXISTS lake.dyo.p")
+      spark.sql(s"CREATE TABLE lake.dyo.p (v BIGINT, day $dt) PARTITIONED BY (day)")
+      spark.sql(s"INSERT INTO lake.dyo.p SELECT id, $value FROM range(400)")
+      // expression overwrite: day=2 is a whole-partition predicate
+      spark.sql(s"INSERT OVERWRITE lake.dyo.p PARTITION (day = $lit) SELECT id + 5000 FROM range(7)")
+      val perDay = spark.sql(
+        "SELECT day, count(*) AS n FROM lake.dyo.p GROUP BY day ORDER BY day")
+        .collect().map(r => (r.get(0).toString, r.getLong(1))).toSeq
+      assert(perDay == days.zip(Seq(100L, 100L, 7L, 100L)), s"$dt: got $perDay")
+      val ops = spark.sql(
+        "SELECT operation FROM lake.dyo.`p$snapshots` ORDER BY snapshot_id")
+        .collect().map(_.getString(0)).toSeq
+      assert(ops.last == "overwrite-where", s"$dt: got $ops")
+    }
   }
 
   test("expression overwrite on a non-aligned predicate is rejected, data intact") {
@@ -150,6 +159,31 @@ class DynamicOverwriteSpec extends AnyFunSuite {
       spark.sql("INSERT OVERWRITE lake.dyo.f SELECT CAST(77 AS INT), id FROM range(7)")
       assert(spark.sql("SELECT count(*) FROM lake.dyo.f WHERE day = 77").head().getLong(0) == 7L)
       assert(spark.table("lake.dyo.f").count() == before + 7)
+    }
+  }
+
+  test("unattributable foreign file with numeric-looking STRING partition values: refuse") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.dyo")
+    spark.sql("DROP TABLE IF EXISTS lake.dyo.fs")
+    spark.sql("CREATE TABLE lake.dyo.fs (p STRING, v BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO lake.dyo.fs SELECT CAST(id % 3 + 4 AS STRING), id FROM range(30)")
+    // a foreign file mixing NULL, '10', '5' and '9': its string bounds
+    // ["10", "9"] hold '5' in string order (numerically they would not),
+    // so an overwrite of p='5' may collide with it and must refuse
+    val ext = java.nio.file.Files.createTempDirectory("graft_dyofs").toString
+    spark.sql("SELECT CASE id % 4 WHEN 0 THEN NULL WHEN 1 THEN '10' WHEN 2 THEN '5' " +
+        "ELSE '9' END AS p, id + 1000 AS v FROM range(12)")
+      .coalesce(1).write.mode("overwrite").parquet(ext)
+    spark.sql(s"CALL lake.system.add_files('dyo.fs', '$ext')")
+    val before = spark.table("lake.dyo.fs").count()
+    withDynamicMode {
+      val e = intercept[Exception] {
+        spark.sql("INSERT OVERWRITE lake.dyo.fs SELECT '5', id + 9999 FROM range(5)")
+      }
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+      assert(msgs(e).exists(m => m != null && m.contains("cannot be attributed")), e.toString)
+      assert(spark.table("lake.dyo.fs").count() == before, "refusal must change nothing")
     }
   }
 

@@ -236,6 +236,69 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("StatBounds.compare orders stat strings as Spark orders the typed values") {
+    // each value rendered the way the writer records it; the sign of the
+    // stat comparison must equal Spark's SQL ordering of the values
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.catalog.StatBounds
+    // code points from ASCII, U+E000..U+FFFF and the supplementary planes:
+    // UTF-16 order puts surrogate pairs below U+E000, UTF-8 order above
+    val genCp: Gen[Int] = Gen.frequency(
+      3 -> Gen.choose(0x61, 0x63), 3 -> Gen.choose(0xE000, 0xFFFF),
+      3 -> Gen.choose(0x10000, 0x10FFFF))
+    val genStr: Gen[UTF8String] = Gen.choose(0, 4).flatMap(Gen.listOfN(_, genCp))
+      .map(cps => UTF8String.fromString(new String(cps.toArray, 0, cps.length)))
+    val genDouble: Gen[Double] = Gen.frequency(
+      4 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+        -0.0, 0.0, Double.MinValue, Double.MaxValue, Double.MinPositiveValue, 1e300, -1e-300),
+      4 -> Gen.choose(-1e6, 1e6), 2 -> Arbitrary.arbitrary[Double])
+    val genDecimal: Gen[Decimal] = Gen.choose(-1000000000000L, 1000000000000L)
+      .map(u => Decimal(BigDecimal(u, 6), 18, 6))
+    def check[A](dt: DataType, gen: Gen[A], render: A => String): Unit = {
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      forAll(gen, gen) { (a, b) =>
+        val got = StatBounds.compare(dt, render(a), render(b))
+        assert(got.map(Integer.signum) == Some(Integer.signum(ord.compare(a, b))),
+          s"$dt: compare(${render(a)}, ${render(b)}) = $got")
+      }
+    }
+    check[UTF8String](StringType, genStr, _.toString)
+    check[Double](DoubleType, genDouble, _.toString)
+    check[Float](FloatType, genDouble.map(_.toFloat), _.toString)
+    check[Decimal](DecimalType(18, 6), genDecimal, _.toJavaBigDecimal.toString)
+    check[Long](LongType, Arbitrary.arbitrary[Long], _.toString)
+    check[Boolean](BooleanType, Arbitrary.arbitrary[Boolean], _.toString)
+    assert(StatBounds.compare(BinaryType, "a", "b").isEmpty)
+  }
+
+  test("a translated runtime IN prunes by the bucket of the column's type") {
+    // a DSv2 `k IN (…)` on an INT column keeps exactly the files whose
+    // bucket stat is the bucket of one listed value (hashed as INT, as
+    // the writer bucketed it); a BIGINT literal hashes differently, so a
+    // literal of another type keeps every file
+    import org.apache.spark.sql.connector.expressions.{Expressions, Expression => V2Expr}
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import graft.catalog.{BucketHash, FilePruner, PartField}
+    val schema = StructType(Seq(StructField("k", IntegerType)))
+    val pf = Seq(PartField("k", Some(8)))
+    // min/max span every key, so only the bucket stat can prune
+    val files = (0 until 8).map(b => DataFileMeta(s"/w/b$b.parquet", 10L, 1L,
+      Map("k" -> "-1000000", "_bucket_8_k" -> b.toString),
+      Map("k" -> "1000000", "_bucket_8_k" -> b.toString)))
+    def in(vs: Seq[Any]): Predicate = new Predicate("IN",
+      (Expressions.column("k") +: vs.map(v => Expressions.literal(v): V2Expr)).toArray)
+    forAll(Gen.nonEmptyListOf(Gen.choose(-1000000, 1000000)).map(_.take(3))) { ks =>
+      val e = FilePruner.fromV2(in(ks), schema).get
+      val kept = files.filter(FilePruner.mayMatch(e, _, schema, partFields = pf))
+      assert(kept.map(_.path).toSet ==
+        ks.map(k => s"/w/b${BucketHash(8, k, IntegerType)}.parquet").toSet, s"IN $ks")
+      val longs = FilePruner.fromV2(in(ks.map(_.toLong)), schema).get
+      assert(files.forall(FilePruner.mayMatch(longs, _, schema, partFields = pf)),
+        s"BIGINT literals IN $ks must keep every file")
+    }
+  }
+
   test("top-N file pruning is sound under adversarial row placement") {
     // any placement of each file's rows consistent with its stats (min and
     // max attained, rowCount rows in [min,max]) must have its true top-n

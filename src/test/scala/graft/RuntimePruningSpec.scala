@@ -11,32 +11,39 @@ class RuntimePruningSpec extends AnyFunSuite {
   import TestSpark._
 
   test("a filtered dim join prunes fact files at runtime (identity partitions)") {
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.dpp")
-    spark.sql("DROP TABLE IF EXISTS lake.dpp.fact")
-    spark.sql("DROP TABLE IF EXISTS lake.dpp.dim")
-    spark.sql("CREATE TABLE lake.dpp.fact (k INT, v BIGINT) PARTITIONED BY (k)")
-    spark.sql("INSERT INTO lake.dpp.fact SELECT CAST(id % 10 AS INT), id FROM range(1000)")
-    spark.sql("CREATE TABLE lake.dpp.dim (k INT, attr STRING)")
-    spark.sql(
-      "INSERT INTO lake.dpp.dim SELECT CAST(id AS INT), IF(id = 3, 'hit', 'miss') FROM range(10)")
-    val q = spark.sql(
-      """SELECT f.k, count(*) AS n, sum(f.v) AS sv
-        |FROM lake.dpp.fact f JOIN lake.dpp.dim d ON f.k = d.k
-        |WHERE d.attr = 'hit' GROUP BY f.k""".stripMargin)
-    val rows = q.collect()
-    // correctness: only k=3 survives; 100 fact rows for that key
-    assert(rows.toSeq.map(r => (r.getInt(0), r.getLong(1))) == Seq((3, 100L)))
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"expected a dynamic pruning predicate on the fact scan:\n$plan")
-    // the scan description prints the CURRENT file list size; after
-    // execution the runtime filter has pruned it to the single matching
-    // partition file
-    val scanDesc = "LakeScan\\(lake\\.dpp\\.fact, (\\d+) files\\)".r
-    val counts = scanDesc.findAllMatchIn(plan).map(_.group(1).toInt).toSeq
-    assert(counts.nonEmpty, s"fact scan description missing:\n$plan")
-    assert(counts.min == 1,
-      s"runtime filter should prune the fact scan to 1 file, got $counts:\n$plan")
+    // (key type, fact key for row id, dim rows, the one key the dim keeps,
+    // its fact row count)
+    Seq(
+      ("INT", "CAST(id % 10 AS INT)",
+        "SELECT CAST(id AS INT), IF(id = 3, 'hit', 'miss') FROM range(10)", "3", 100L),
+      ("BOOLEAN", "id % 2 = 0", "VALUES (true, 'hit'), (false, 'miss')", "true", 500L)
+    ).foreach { case (dt, key, dimRows, hit, n) =>
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.dpp")
+      spark.sql("DROP TABLE IF EXISTS lake.dpp.fact")
+      spark.sql("DROP TABLE IF EXISTS lake.dpp.dim")
+      spark.sql(s"CREATE TABLE lake.dpp.fact (k $dt, v BIGINT) PARTITIONED BY (k)")
+      spark.sql(s"INSERT INTO lake.dpp.fact SELECT $key, id FROM range(1000)")
+      spark.sql(s"CREATE TABLE lake.dpp.dim (k $dt, attr STRING)")
+      spark.sql(s"INSERT INTO lake.dpp.dim $dimRows")
+      val q = spark.sql(
+        """SELECT f.k, count(*) AS n, sum(f.v) AS sv
+          |FROM lake.dpp.fact f JOIN lake.dpp.dim d ON f.k = d.k
+          |WHERE d.attr = 'hit' GROUP BY f.k""".stripMargin)
+      val rows = q.collect()
+      // correctness: only the hit key survives, with all its fact rows
+      assert(rows.toSeq.map(r => (r.get(0).toString, r.getLong(1))) == Seq((hit, n)), dt)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruning"),
+        s"$dt: expected a dynamic pruning predicate on the fact scan:\n$plan")
+      // the scan description prints the CURRENT file list size; after
+      // execution the runtime filter has pruned it to the single matching
+      // partition file
+      val scanDesc = "LakeScan\\(lake\\.dpp\\.fact, (\\d+) files\\)".r
+      val counts = scanDesc.findAllMatchIn(plan).map(_.group(1).toInt).toSeq
+      assert(counts.nonEmpty, s"$dt: fact scan description missing:\n$plan")
+      assert(counts.min == 1,
+        s"$dt: runtime filter should prune the fact scan to 1 file, got $counts:\n$plan")
+    }
   }
 
   test("bucketed-table join with an unbucketed side: only the unbucketed side shuffles") {

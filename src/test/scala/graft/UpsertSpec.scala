@@ -496,6 +496,26 @@ class UpsertSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  test("batch upsert of a key ordered past U+FFFF: key bounds compare in UTF-8 order") {
+    import spark.implicits._
+    val t = s"lake.ups.${uniq("u8")}"
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.ups")
+    spark.sql(s"CREATE TABLE $t (k STRING, v STRING)")
+    // UTF-8 order: a < U+FF61 < U+1F600, so one file's key bounds
+    // ["a", U+1F600] hold U+FF61; UTF-16 order puts the surrogate pair of
+    // U+1F600 below U+FF61 and would call the upsert's delete disjoint
+    val half = "\uFF61"
+    val emoji = new String(Character.toChars(0x1F600))
+    Seq(("a", "old"), (half, "old"), (emoji, "old")).toDF("k", "v")
+      .coalesce(1).writeTo(t).append()
+    assert(lakeMeta(t).currentFiles.size == 1)
+    Seq((half, "new")).toDF("k", "v").createOrReplaceTempView("ups_u8")
+    spark.sql(s"CALL lake.system.upsert('ups.${t.split('.').last}', 'ups_u8', 'k')")
+    val got = spark.table(t).collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got == Set(("a", "old"), (half, "new"), (emoji, "old")), s"got $got")
+    spark.sql(s"DROP TABLE $t")
+  }
+
   test("batch upsert interoperates with streaming upsert epochs on one table") {
     import spark.implicits._
     val t = upsertTable(Seq(
