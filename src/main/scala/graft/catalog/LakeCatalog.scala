@@ -182,29 +182,10 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
     */
   def registerTable(ident: Identifier, metadataLocation: String): Table = {
     TableMeta.read(metadataLocation, hadoopConf) // validate before registering
-    if (!registerResolving(ns(ident.namespace()), ident.name(), metadataLocation))
+    if (!store.registerResolving(ns(ident.namespace()), ident.name(), metadataLocation))
       throw new TableAlreadyExistsException(ident)
     loadTable(ident)
   }
-
-  /** `register` with torn-call resolution (same stance as
-    * [[CasCommit.guardedCas]]): the INSERT's JDBC call may throw with the
-    * row already inserted server-side — the row is the discriminator.
-    * Present with OUR location = landed; with another = the ordinary lost
-    * race; absent = genuinely undecidable, rethrow (metadata-only paths
-    * land here — nothing is cleaned up either way, so a retried CREATE
-    * converges to "already exists" at worst).
-    */
-  private def registerResolving(namespace: String, name: String, loc: String): Boolean =
-    try store.register(namespace, name, loc)
-    catch {
-      case e: java.sql.SQLException =>
-        store.load(namespace, name) match {
-          case Some(l) if l == loc => true
-          case Some(_) => false
-          case None => throw e
-        }
-    }
 
   /** `loaded` is the pointer the caller has just read, when it read one. */
   private def doLoad(ident: Identifier, snapshot: Option[Long],
@@ -259,7 +240,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
     val loc = TableMeta.write(meta, hadoopConf)
     // INSERT-on-conflict-do-nothing semantics: 0 rows ⇒ already exists
     // (reference register_table, mod.rs:252-294).
-    if (!registerResolving(ns(ident.namespace()), ident.name(), loc))
+    if (!store.registerResolving(ns(ident.namespace()), ident.name(), loc))
       throw new TableAlreadyExistsException(ident)
     loadTable(ident)
   }
@@ -367,221 +348,213 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces with StagingTable
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     // Same rebase-retry discipline as every data commit: a concurrent
     // INSERT moving the pointer must not spuriously fail an ALTER — the
-    // changes re-apply cleanly against the refreshed metadata.
-    var attempts = 0
-    while (attempts < CasRetry.maxAttempts) {
-      val t = doLoad(ident, None)
-      var props = t.meta.properties
-      var schema = t.meta.schema
-      var pcols = t.meta.partitionColumns
-      // archived partition specs rename/drop alongside the current one —
-      // the planning union resolves them against the SAME schema, so a
-      // stale source name there silently strands old-generation pruning
-      var specs = if (t.meta.specs == null) Map.empty[String, Seq[String]] else t.meta.specs
-      changes.foreach {
-        case s: TableChange.SetProperty => props += (s.property() -> s.value())
-        case r: TableChange.RemoveProperty => props -= r.property()
-        case a: TableChange.AddColumn =>
-          if (a.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ADD COLUMNS is supported")
-          // NOT NULL needs a DEFAULT: existing rows read the initial
-          // default, so the no-value-for-old-rows objection disappears
-          if (!a.isNullable &&
-            (a.defaultValue() == null || a.defaultValue().getValue.value() == null))
-            throw new UnsupportedOperationException(
-              "added columns must be nullable or carry a non-NULL DEFAULT " +
-                "(existing rows have no value)")
-          if (schema.fieldNames.exists(_.equalsIgnoreCase(a.fieldNames()(0))))
-            throw new IllegalArgumentException(
-              s"cannot add column ${a.fieldNames()(0)}: a column of that name already exists")
-          // fresh physical name from the monotonic counter: if this logical
-          // name ever existed before (dropped, renamed away), old files'
-          // values can NOT resurrect under it
-          val id = props.get(ColumnMapping.CounterProp).map(_.toInt).getOrElse(1)
-          props += (ColumnMapping.CounterProp -> (id + 1).toString)
-          val added = StructField(a.fieldNames()(0), a.dataType(), nullable = a.isNullable)
-          schema = schema.add(ColumnMapping.withPhysical(
-            Option(a.defaultValue()).fold(added)(ColumnDefaults.withDefaults(added, _)),
-            s"_c${id}_${a.fieldNames()(0)}"))
+    // changes re-apply cleanly against the refreshed metadata. A torn JDBC
+    // call (applied server-side, ack lost) resolves to committed inside the
+    // loop's guarded CAS — a blind reapply would double-apply (AddColumn
+    // then fails "already exists" against our own landed ALTER). No
+    // discriminating snapshot exists for ALTER: if the pointer moved past
+    // us mid-tear the outcome escalates as CommitStateUnknown instead of
+    // guessing.
+    val t = doLoad(ident, None)
+    CasCommit.retryLoop(store, ns(ident.namespace()), ident.name(), t.metadataLocation,
+      t.meta, "alter", display(ident), hadoopConf)(_ => ())(applyChanges(_, changes))(
+      invalidateTable(ident))
+    loadTable(ident)
+  }
 
-        case u: TableChange.UpdateColumnDefaultValue =>
-          if (u.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ALTER COLUMN SET/DROP DEFAULT is supported")
-          val name = u.fieldNames()(0)
-          // case-insensitive like the rest of the DDL surface (AddColumn's
-          // duplicate check, the analyzer's resolution)
-          if (!schema.fieldNames.exists(_.equalsIgnoreCase(name)))
-            throw new IllegalArgumentException(s"no such column: $name")
-          // moves the WRITE default only — the initial default stays pinned
-          // (already-written files must never change meaning)
-          schema = StructType(schema.fields.map(x =>
-            if (x.name.equalsIgnoreCase(name)) ColumnDefaults.withCurrent(x, u.newCurrentDefault())
-            else x))
-        case d: TableChange.DeleteColumn =>
-          if (d.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level DROP COLUMN is supported")
-          if (pcols.map(PartField.parse).exists(_.source == d.fieldNames()(0)))
-            throw new UnsupportedOperationException("cannot drop a partition column")
-          if (upsertKeyNames(props).contains(d.fieldNames()(0)))
-            throw new UnsupportedOperationException(
-              s"cannot drop upsert key column ${d.fieldNames()(0)}")
-          // a source referenced ONLY by archived specs may go, but its
-          // fields leave the history with it: a later AddColumn reusing
-          // the name would otherwise re-bind the old transform keys to an
-          // unrelated column. Old-generation files lose pruning on exactly
-          // this column — conservative (they are still read), and the
-          // column is gone anyway
-          specs = specs.map { case (k, v) =>
-            k -> v.filterNot(c => PartField.parse(c).source == d.fieldNames()(0)) }
-          schema = StructType(schema.fields.filterNot(_.name == d.fieldNames()(0)))
-        case rn: TableChange.RenameColumn =>
-          if (rn.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level RENAME COLUMN is supported")
-          val from = rn.fieldNames()(0)
-          if (!schema.fieldNames.contains(from))
-            throw new IllegalArgumentException(s"no such column: $from")
-          if (schema.fieldNames.exists(n => n != from && n.equalsIgnoreCase(rn.newName())))
-            throw new IllegalArgumentException(
-              s"cannot rename $from to ${rn.newName()}: that column already exists")
-          // the PHYSICAL name is pinned before relabeling, so every existing
-          // data file stays connected to the renamed logical column
-          schema = StructType(schema.fields.map(f =>
-            if (f.name == from)
-              ColumnMapping.withPhysical(f, ColumnMapping.physicalName(f)).copy(name = rn.newName())
-            else f))
-          pcols = pcols.map(c => PartField.parse(c).rename(from, rn.newName()).spec)
-          specs = specs.map { case (k, v) =>
-            k -> v.map(c => PartField.parse(c).rename(from, rn.newName()).spec) }
-          // upsert keys are stored by LOGICAL name — follow the rename (the
-          // eq-delete files key by the pinned PHYSICAL name, so existing
-          // tombstones stay valid with no rewrite)
-          if (upsertKeyNames(props).contains(from))
-            props += ("upsert.keys" -> upsertKeyNames(props)
-              .map(k => if (k == from) rn.newName() else k).mkString(","))
-          // write.sort-order is stored by LOGICAL name too — follow the
-          // rename, or the property silently points at a stale name and
-          // later writes fail ordering resolution
-          props.get("write.sort-order").foreach { so =>
-            val cols = so.split(',').map(_.trim).filter(_.nonEmpty)
-            if (cols.contains(from))
-              props += ("write.sort-order" -> cols
-                .map(c => if (c == from) rn.newName() else c).mkString(","))
-          }
-          // write.variant.shred-paths stores LOGICAL column names too —
-          // follow the rename, or future writes bind the spec to a stale
-          // (or worse, later-reused) name
-          props.get(VariantShred.Prop).foreach { spec =>
-            val entries = VariantShred.parse(spec)
-            if (entries.exists(_._1 == from))
-              props += (VariantShred.Prop -> VariantShred.render(entries.map {
-                case (c, p, ty) => (if (c == from) rn.newName() else c, p, ty)
-              }))
-          }
+  /** `changes` folded onto `base`, the table's current metadata. */
+  private def applyChanges(base: TableMeta, changes: Seq[TableChange]): TableMeta = {
+    var props = base.properties
+    var schema = base.schema
+    var pcols = base.partitionColumns
+    // archived partition specs rename/drop alongside the current one —
+    // the planning union resolves them against the SAME schema, so a
+    // stale source name there silently strands old-generation pruning
+    var specs = if (base.specs == null) Map.empty[String, Seq[String]] else base.specs
+    changes.foreach {
+      case s: TableChange.SetProperty => props += (s.property() -> s.value())
+      case r: TableChange.RemoveProperty => props -= r.property()
+      case a: TableChange.AddColumn =>
+        if (a.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ADD COLUMNS is supported")
+        // NOT NULL needs a DEFAULT: existing rows read the initial
+        // default, so the no-value-for-old-rows objection disappears
+        if (!a.isNullable &&
+          (a.defaultValue() == null || a.defaultValue().getValue.value() == null))
+          throw new UnsupportedOperationException(
+            "added columns must be nullable or carry a non-NULL DEFAULT " +
+              "(existing rows have no value)")
+        if (schema.fieldNames.exists(_.equalsIgnoreCase(a.fieldNames()(0))))
+          throw new IllegalArgumentException(
+            s"cannot add column ${a.fieldNames()(0)}: a column of that name already exists")
+        // fresh physical name from the monotonic counter: if this logical
+        // name ever existed before (dropped, renamed away), old files'
+        // values can NOT resurrect under it
+        val id = props.get(ColumnMapping.CounterProp).map(_.toInt).getOrElse(1)
+        props += (ColumnMapping.CounterProp -> (id + 1).toString)
+        val added = StructField(a.fieldNames()(0), a.dataType(), nullable = a.isNullable)
+        schema = schema.add(ColumnMapping.withPhysical(
+          Option(a.defaultValue()).fold(added)(ColumnDefaults.withDefaults(added, _)),
+          s"_c${id}_${a.fieldNames()(0)}"))
 
-        case u: TableChange.UpdateColumnType =>
-          if (u.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ALTER COLUMN TYPE is supported")
-          val name = u.fieldNames()(0)
-          val f = schema.fields.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(s"no such column: $name"))
-          if (!Widening.ok(f.dataType, u.newDataType()))
-            throw new UnsupportedOperationException(
-              s"cannot change $name from ${f.dataType.simpleString} to " +
-                s"${u.newDataType().simpleString}: only lossless widenings " +
-                "(tinyint→smallint→int→bigint, float→double, decimal precision " +
-                "growth at the same scale) evolve without rewriting data")
-          // bucket transforms hash the VALUE REPRESENTATION: widening the
-          // source would re-bucket every new row away from existing files
-          if (pcols.map(PartField.parse).exists(p =>
-              p.source == name && p.buckets.isDefined))
-            throw new UnsupportedOperationException(
-              s"cannot change the type of bucket-partition source column $name")
-          if (upsertKeyNames(props).contains(name))
-            throw new UnsupportedOperationException(
-              s"cannot change the type of upsert key column $name " +
-                "(existing equality-delete files key by the old type)")
-          schema = StructType(schema.fields.map(x =>
-            if (x.name == name) x.copy(dataType = u.newDataType()) else x))
+      case u: TableChange.UpdateColumnDefaultValue =>
+        if (u.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ALTER COLUMN SET/DROP DEFAULT is supported")
+        val name = u.fieldNames()(0)
+        // case-insensitive like the rest of the DDL surface (AddColumn's
+        // duplicate check, the analyzer's resolution)
+        if (!schema.fieldNames.exists(_.equalsIgnoreCase(name)))
+          throw new IllegalArgumentException(s"no such column: $name")
+        // moves the WRITE default only — the initial default stays pinned
+        // (already-written files must never change meaning)
+        schema = StructType(schema.fields.map(x =>
+          if (x.name.equalsIgnoreCase(name)) ColumnDefaults.withCurrent(x, u.newCurrentDefault())
+          else x))
+      case d: TableChange.DeleteColumn =>
+        if (d.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level DROP COLUMN is supported")
+        if (pcols.map(PartField.parse).exists(_.source == d.fieldNames()(0)))
+          throw new UnsupportedOperationException("cannot drop a partition column")
+        if (upsertKeyNames(props).contains(d.fieldNames()(0)))
+          throw new UnsupportedOperationException(
+            s"cannot drop upsert key column ${d.fieldNames()(0)}")
+        // a source referenced ONLY by archived specs may go, but its
+        // fields leave the history with it: a later AddColumn reusing
+        // the name would otherwise re-bind the old transform keys to an
+        // unrelated column. Old-generation files lose pruning on exactly
+        // this column — conservative (they are still read), and the
+        // column is gone anyway
+        specs = specs.map { case (k, v) =>
+          k -> v.filterNot(c => PartField.parse(c).source == d.fieldNames()(0)) }
+        schema = StructType(schema.fields.filterNot(_.name == d.fieldNames()(0)))
+      case rn: TableChange.RenameColumn =>
+        if (rn.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level RENAME COLUMN is supported")
+        val from = rn.fieldNames()(0)
+        if (!schema.fieldNames.contains(from))
+          throw new IllegalArgumentException(s"no such column: $from")
+        if (schema.fieldNames.exists(n => n != from && n.equalsIgnoreCase(rn.newName())))
+          throw new IllegalArgumentException(
+            s"cannot rename $from to ${rn.newName()}: that column already exists")
+        // the PHYSICAL name is pinned before relabeling, so every existing
+        // data file stays connected to the renamed logical column
+        schema = StructType(schema.fields.map(f =>
+          if (f.name == from)
+            ColumnMapping.withPhysical(f, ColumnMapping.physicalName(f)).copy(name = rn.newName())
+          else f))
+        pcols = pcols.map(c => PartField.parse(c).rename(from, rn.newName()).spec)
+        specs = specs.map { case (k, v) =>
+          k -> v.map(c => PartField.parse(c).rename(from, rn.newName()).spec) }
+        // upsert keys are stored by LOGICAL name — follow the rename (the
+        // eq-delete files key by the pinned PHYSICAL name, so existing
+        // tombstones stay valid with no rewrite)
+        if (upsertKeyNames(props).contains(from))
+          props += ("upsert.keys" -> upsertKeyNames(props)
+            .map(k => if (k == from) rn.newName() else k).mkString(","))
+        // write.sort-order is stored by LOGICAL name too — follow the
+        // rename, or the property silently points at a stale name and
+        // later writes fail ordering resolution
+        props.get("write.sort-order").foreach { so =>
+          val cols = so.split(',').map(_.trim).filter(_.nonEmpty)
+          if (cols.contains(from))
+            props += ("write.sort-order" -> cols
+              .map(c => if (c == from) rn.newName() else c).mkString(","))
+        }
+        // write.variant.shred-paths stores LOGICAL column names too —
+        // follow the rename, or future writes bind the spec to a stale
+        // (or worse, later-reused) name
+        props.get(VariantShred.Prop).foreach { spec =>
+          val entries = VariantShred.parse(spec)
+          if (entries.exists(_._1 == from))
+            props += (VariantShred.Prop -> VariantShred.render(entries.map {
+              case (c, p, ty) => (if (c == from) rn.newName() else c, p, ty)
+            }))
+        }
 
-        case n: TableChange.UpdateColumnNullability =>
-          if (n.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ALTER COLUMN NULL is supported")
-          val name = n.fieldNames()(0)
-          val f = schema.fields.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(s"no such column: $name"))
-          if (!n.nullable()) {
-            // tightening to NOT NULL is sound only when the metadata PROVES
-            // no existing row is NULL: every current file must carry a zero
-            // null count for the column (exact, writer-recorded)
-            val phys = ColumnMapping.physicalName(f)
-            val unproven = t.meta.currentFiles.exists(df =>
-              !df.nulls.get(phys).contains(0L))
-            if (unproven) throw new IllegalStateException(
-              s"cannot set $name NOT NULL: existing files contain (or cannot " +
-                "prove the absence of) NULLs")
-          }
-          schema = StructType(schema.fields.map(x =>
-            if (x.name == name) x.copy(nullable = n.nullable()) else x))
+      case u: TableChange.UpdateColumnType =>
+        if (u.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ALTER COLUMN TYPE is supported")
+        val name = u.fieldNames()(0)
+        val f = schema.fields.find(_.name == name).getOrElse(
+          throw new IllegalArgumentException(s"no such column: $name"))
+        if (!Widening.ok(f.dataType, u.newDataType()))
+          throw new UnsupportedOperationException(
+            s"cannot change $name from ${f.dataType.simpleString} to " +
+              s"${u.newDataType().simpleString}: only lossless widenings " +
+              "(tinyint→smallint→int→bigint, float→double, decimal precision " +
+              "growth at the same scale) evolve without rewriting data")
+        // bucket transforms hash the VALUE REPRESENTATION: widening the
+        // source would re-bucket every new row away from existing files
+        if (pcols.map(PartField.parse).exists(p =>
+            p.source == name && p.buckets.isDefined))
+          throw new UnsupportedOperationException(
+            s"cannot change the type of bucket-partition source column $name")
+        if (upsertKeyNames(props).contains(name))
+          throw new UnsupportedOperationException(
+            s"cannot change the type of upsert key column $name " +
+              "(existing equality-delete files key by the old type)")
+        schema = StructType(schema.fields.map(x =>
+          if (x.name == name) x.copy(dataType = u.newDataType()) else x))
 
-        case cm: TableChange.UpdateColumnComment =>
-          if (cm.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ALTER COLUMN COMMENT is supported")
-          val name = cm.fieldNames()(0)
-          if (!schema.fieldNames.contains(name))
-            throw new IllegalArgumentException(s"no such column: $name")
-          schema = StructType(schema.fields.map(x =>
-            if (x.name == name) x.withComment(cm.newComment()) else x))
+      case n: TableChange.UpdateColumnNullability =>
+        if (n.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ALTER COLUMN NULL is supported")
+        val name = n.fieldNames()(0)
+        val f = schema.fields.find(_.name == name).getOrElse(
+          throw new IllegalArgumentException(s"no such column: $name"))
+        if (!n.nullable()) {
+          // tightening to NOT NULL is sound only when the metadata PROVES
+          // no existing row is NULL: every current file must carry a zero
+          // null count for the column (exact, writer-recorded)
+          val phys = ColumnMapping.physicalName(f)
+          val unproven = base.currentFiles.exists(df =>
+            !df.nulls.get(phys).contains(0L))
+          if (unproven) throw new IllegalStateException(
+            s"cannot set $name NOT NULL: existing files contain (or cannot " +
+              "prove the absence of) NULLs")
+        }
+        schema = StructType(schema.fields.map(x =>
+          if (x.name == name) x.copy(nullable = n.nullable()) else x))
 
-        case p: TableChange.UpdateColumnPosition =>
-          if (p.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "only top-level ALTER COLUMN FIRST/AFTER is supported")
-          val name = p.fieldNames()(0)
-          val moving = schema.fields.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(s"no such column: $name"))
-          // column order is purely logical — data files bind by pinned
-          // physical NAME, so reordering rewrites nothing
-          val rest = schema.fields.filterNot(_.name == name)
-          schema = p.position() match {
-            case _: TableChange.After =>
-              val anchor = p.position().asInstanceOf[TableChange.After].column()
-              val i = rest.indexWhere(_.name == anchor)
-              if (i < 0) throw new IllegalArgumentException(s"no such column: $anchor")
-              StructType((rest.take(i + 1) :+ moving) ++ rest.drop(i + 1))
-            case _ => StructType(moving +: rest) // First
-          }
+      case cm: TableChange.UpdateColumnComment =>
+        if (cm.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ALTER COLUMN COMMENT is supported")
+        val name = cm.fieldNames()(0)
+        if (!schema.fieldNames.contains(name))
+          throw new IllegalArgumentException(s"no such column: $name")
+        schema = StructType(schema.fields.map(x =>
+          if (x.name == name) x.withComment(cm.newComment()) else x))
 
-        case c => throw new UnsupportedOperationException(
-          s"alterTable change ${c.getClass.getSimpleName} not supported")
-      }
-      // a schema-shape change gets a FRESH schema id: snapshots committed
-      // under the old shape keep resolving it (schemas map), so time travel
-      // reads history with history's schema
-      val newSchemaJson = schema.json
-      val next = t.meta.copy(properties = props, schemaJson = newSchemaJson,
-        partitionColumns = pcols, specs = specs,
-        currentSchemaId =
-          if (newSchemaJson == t.meta.schemaJson) t.meta.schemaIdNow
-          else t.meta.schemaIdNow + 1)
-      val newLoc = TableMeta.write(next, hadoopConf)
-      // guardedCas, not a raw casUpdate: a torn JDBC call (applied
-      // server-side, ack lost) must resolve to committed — a blind retry
-      // of the reload-and-reapply loop would double-apply (AddColumn then
-      // fails "already exists" against our own landed ALTER), and a bare
-      // SQLException would fail an ALTER that actually landed. No
-      // discriminating snapshot exists for ALTER (newHead = None): if the
-      // pointer moved past us mid-tear the outcome escalates as
-      // CommitStateUnknown instead of guessing.
-      if (CasCommit.guardedCas(store, ns(ident.namespace()), ident.name(), newLoc,
-          t.metadataLocation, None, hadoopConf, "alter", display(ident)) == 1) {
-        invalidateTable(ident)
-        return loadTable(ident)
-      }
-      attempts += 1
-      CasRetry.backoff(attempts)
-      invalidateTable(ident) // force doLoad to see the winner's metadata
+      case p: TableChange.UpdateColumnPosition =>
+        if (p.fieldNames().length != 1) throw new UnsupportedOperationException(
+          "only top-level ALTER COLUMN FIRST/AFTER is supported")
+        val name = p.fieldNames()(0)
+        val moving = schema.fields.find(_.name == name).getOrElse(
+          throw new IllegalArgumentException(s"no such column: $name"))
+        // column order is purely logical — data files bind by pinned
+        // physical NAME, so reordering rewrites nothing
+        val rest = schema.fields.filterNot(_.name == name)
+        schema = p.position() match {
+          case _: TableChange.After =>
+            val anchor = p.position().asInstanceOf[TableChange.After].column()
+            val i = rest.indexWhere(_.name == anchor)
+            if (i < 0) throw new IllegalArgumentException(s"no such column: $anchor")
+            StructType((rest.take(i + 1) :+ moving) ++ rest.drop(i + 1))
+          case _ => StructType(moving +: rest) // First
+        }
+
+      case c => throw new UnsupportedOperationException(
+        s"alterTable change ${c.getClass.getSimpleName} not supported")
     }
-    throw new IllegalStateException(
-      s"commit conflict altering ${display(ident)}: CAS lost $attempts times")
+    // a schema-shape change gets a FRESH schema id: snapshots committed
+    // under the old shape keep resolving it (schemas map), so time travel
+    // reads history with history's schema
+    val newSchemaJson = schema.json
+    base.copy(properties = props, schemaJson = newSchemaJson,
+      partitionColumns = pcols, specs = specs,
+      currentSchemaId =
+        if (newSchemaJson == base.schemaJson) base.schemaIdNow
+        else base.schemaIdNow + 1)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

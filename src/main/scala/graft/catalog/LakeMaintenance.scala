@@ -321,11 +321,10 @@ object LakeMaintenance {
     // pattern: compact today's partition hourly without touching 5 years
     // of cold files). File SELECTION only; selected files always rewrite
     // whole, so rows never drop. Conservative on non-stat columns.
-    val scopePred = where.filter(_.trim.nonEmpty)
-      .map(spark.sessionState.sqlParser.parseExpression)
+    val scopePred = where.filter(_.trim.nonEmpty).map(scopePredicate(spark, _, t.meta.schema))
+    val pf = t.meta.allPartitionFields
     def inScope(f: DataFileMeta): Boolean = scopePred.forall { e =>
-      val logical = t.meta.logicalStatFiles(Seq(f)).head
-      FilePruner.mayMatch(e, logical, t.meta.schema)
+      FilePruner.mayMatch(e, t.meta.logicalStatFiles(Seq(f)).head, partFields = pf)
     }
     // merge-on-read tombstoned files compact regardless of size: folding
     // their tombstones away is what puts them back on the vectorized path;
@@ -360,6 +359,24 @@ object LakeMaintenance {
       rewrittenDataPaths = replaced, heldLease = heldLease)
     (current.size, keep.size + newFiles.size, allSmall.size > small.size,
       newFiles.map(_.path))
+  }
+
+  /** A maintenance `where` as a stats predicate over `schema`: analyzed
+    * against the table's columns, with each literal the analyzer casts to
+    * its column's type folded to a literal of that type — so a point
+    * predicate on a bucket source can prune by bucket.
+    */
+  private def scopePredicate(spark: SparkSession, where: String,
+      schema: StructType): org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val empty = java.util.Collections.emptyList[org.apache.spark.sql.Row]()
+    val analyzed = spark.createDataFrame(empty, schema).where(where).queryExecution.analyzed
+    analyzed.collectFirst { case f: Filter => f.condition }.get.transformUp {
+      case c: Cast if c.child.isInstanceOf[Literal] =>
+        try Literal.create(c.eval(), c.dataType)
+        catch { case scala.util.control.NonFatal(_) => c }
+    }
   }
 
   /** Batch upsert via equality deletes: appends the source rows plus one
@@ -849,7 +866,7 @@ object LakeMaintenance {
           specs = meta0.specs, currentSpecId = meta0.currentSpecId)
     }
     val loc = TableMeta.write(destMeta, hadoopConf)
-    if (!cat.pointerStore.register(dparts(0), dparts(1), loc))
+    if (!cat.pointerStore.registerResolving(dparts(0), dparts(1), loc))
       throw new IllegalStateException(s"snapshot: table $dest already exists")
     (destMeta.snapshots.headOption.map(_.nFiles).getOrElse(0L),
       destMeta.currentSnapshotId)
@@ -865,51 +882,55 @@ object LakeMaintenance {
     require(keepLast >= 1, "must retain at least the current snapshot")
     val (cat, ident, t) = resolve(spark, table)
     val hadoopConf = spark.sessionState.newHadoopConf()
-    // TAGGED snapshots never expire — a tag is a promise that
-    // `VERSION AS OF 'name'` keeps resolving. STAGED snapshots ahead of the
-    // current pointer are awaiting audit/publish and survive too; staged
-    // ones the pointer has passed are published-or-abandoned and expire
-    // normally (that is the cleanup path for abandoned stages).
-    val tagged = t.meta.properties.collect {
-      case (k, v) if k.startsWith("tag.") || k.startsWith("branch.") => v.toLong }.toSet
-    val pendingStaged = t.meta.snapshots.collect {
-      case s if s.operation == "stage-append" && s.snapshotId > t.meta.currentSnapshotId =>
-        s.snapshotId
-    }.toSet
-    // age guard (Iceberg's expire_snapshots(older_than)): snapshots AT or
-    // after the cutoff are retained regardless of keepLast counting
-    val young = t.meta.snapshots.collect {
-      case s if s.timestampMs >= olderThanMs => s.snapshotId }.toSet
-    val retainedIds = t.meta.snapshots.sortBy(_.snapshotId).takeRight(keepLast)
-      .map(_.snapshotId).toSet + t.meta.currentSnapshotId ++ tagged ++ pendingStaged ++ young
-    val (retained, expired) = t.meta.snapshots.partition(s => retainedIds.contains(s.snapshotId))
-    // data AND delete files: orphaned when no retained snapshot references
-    // them. Files OUTSIDE the table location were imported by reference
-    // (add_files) — drop the metadata entry but never delete the source
-    // data; it was never ours to delete.
-    val live = retained.flatMap(t.meta.allFilesOf).map(_.path).toSet
-    val orphaned = expired.flatMap(t.meta.allFilesOf).map(_.path).distinct.filterNot(live.contains)
-      .filter(_.startsWith(s"${t.meta.location}/"))
-    // manifest files: shared across snapshots, orphaned the same way; the
-    // expired snapshots' manifest-LIST files always die with them
-    val liveManifests = retained.flatMap(s => t.meta.manifestsOf(s)).map(_.location).toSet
-    val orphanedManifests = (expired.flatMap(s => t.meta.manifestsOf(s)).map(_.location)
-      .distinct.filterNot(liveManifests.contains)
-      ++ expired.flatMap(_.listLocation))
-
-    val loc = t.metadataLocation
-    val next = t.meta.copy(snapshots = retained)
-    val newLoc = TableMeta.write(next, hadoopConf)
-    if (cat.pointerStore.casUpdate(ident.namespace()(0), ident.name(), newLoc, loc) != 1)
-      throw new IllegalStateException(s"snapshot expiration on $table lost the CAS")
-    cat.invalidateTable(ident)
-
-    val fs = new Path(t.meta.location).getFileSystem(hadoopConf)
-    orphaned.foreach(p => fs.delete(new Path(p), false))
-    orphanedManifests.foreach { p =>
-      fs.delete(new Path(p), false)
-      fs.delete(new Path(s"$p.bloom"), false) // sidecar dies with its manifest
-    }
+    // what the landing attempt orphaned: computed from the base the CAS
+    // actually moves off, deleted only once it has moved
+    var orphaned = Seq.empty[String]
+    var orphanedManifests = Seq.empty[String]
+    CasCommit.retryLoop(cat.pointerStore, ident.namespace()(0), ident.name(),
+      t.metadataLocation, t.meta, "expire-snapshots", t.ident, hadoopConf)(_ => ())(
+      base => {
+        // TAGGED snapshots never expire — a tag is a promise that
+        // `VERSION AS OF 'name'` keeps resolving. STAGED snapshots ahead of
+        // the current pointer are awaiting audit/publish and survive too;
+        // staged ones the pointer has passed are published-or-abandoned and
+        // expire normally (that is the cleanup path for abandoned stages).
+        val tagged = base.properties.collect {
+          case (k, v) if k.startsWith("tag.") || k.startsWith("branch.") => v.toLong }.toSet
+        val pendingStaged = base.snapshots.collect {
+          case s if s.operation == "stage-append" && s.snapshotId > base.currentSnapshotId =>
+            s.snapshotId
+        }.toSet
+        // age guard (Iceberg's expire_snapshots(older_than)): snapshots AT
+        // or after the cutoff are retained regardless of keepLast counting
+        val young = base.snapshots.collect {
+          case s if s.timestampMs >= olderThanMs => s.snapshotId }.toSet
+        val retainedIds = base.snapshots.sortBy(_.snapshotId).takeRight(keepLast)
+          .map(_.snapshotId).toSet + base.currentSnapshotId ++ tagged ++ pendingStaged ++ young
+        val (retained, expired) =
+          base.snapshots.partition(s => retainedIds.contains(s.snapshotId))
+        // data AND delete files: orphaned when no retained snapshot
+        // references them. Files OUTSIDE the table location were imported by
+        // reference (add_files) — drop the metadata entry but never delete
+        // the source data; it was never ours to delete.
+        val live = retained.flatMap(base.allFilesOf).map(_.path).toSet
+        orphaned = expired.flatMap(base.allFilesOf).map(_.path).distinct
+          .filterNot(live.contains).filter(_.startsWith(s"${base.location}/"))
+        // manifest files: shared across snapshots, orphaned the same way;
+        // the expired snapshots' manifest-LIST files always die with them
+        val liveManifests = retained.flatMap(s => base.manifestsOf(s)).map(_.location).toSet
+        orphanedManifests = (expired.flatMap(s => base.manifestsOf(s)).map(_.location)
+          .distinct.filterNot(liveManifests.contains)
+          ++ expired.flatMap(_.listLocation))
+        base.copy(snapshots = retained)
+      })({
+      cat.invalidateTable(ident)
+      val fs = new Path(t.meta.location).getFileSystem(hadoopConf)
+      orphaned.foreach(p => fs.delete(new Path(p), false))
+      orphanedManifests.foreach { p =>
+        fs.delete(new Path(p), false)
+        fs.delete(new Path(s"$p.bloom"), false) // sidecar dies with its manifest
+      }
+    })
     orphaned.size
   }
 

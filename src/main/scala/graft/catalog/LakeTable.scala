@@ -334,7 +334,7 @@ final class LakeTable(
     val bloomFor = bloomLookupFor(meta.snapshot(meta.currentSnapshotId))
     val pf = meta.allPartitionFields
     val affected = meta.logicalStatFiles(meta.currentFiles).filter(f =>
-      preds.forall(FilePruner.mayMatch(_, f, schema(), bloomFor, pf)))
+      preds.forall(FilePruner.mayMatch(_, f, bloomFor, pf)))
     val affectedPaths = affected.map(_.path).toSet
     val scanDeletes = meta.currentDeleteFiles
     val covering = TombstoneRewrite.covering(scanDeletes, affected.map(_.path))
@@ -684,7 +684,7 @@ final class LakeScanBuilder(
       case _ => allFiles
     }
     val survivors = baseFiles.filter(f =>
-      exprs.forall(FilePruner.mayMatch(_, f, tableSchema, bloomFor, pf)))
+      exprs.forall(FilePruner.mayMatch(_, f, bloomFor, pf)))
     // limit/top-N file pruning (partial pushdown — Spark re-applies the
     // operator above, so dropping provably-unneeded files is free).
     // Belt-and-braces soundness guard: Spark only pushes LIMIT/TopN when
@@ -983,7 +983,7 @@ final class LakeScan(
               else partitionCols).map(PartField.parse)
     val runtime = predicates.toSeq.flatMap(FilePruner.fromV2(_, tableSchema))
     def may(f: DataFileMeta, bloom: (String, String) => Option[FileBloom]): Boolean =
-      runtime.forall(FilePruner.mayMatch(_, f, tableSchema, bloom, pf))
+      runtime.forall(FilePruner.mayMatch(_, f, bloom, pf))
     files = files.filter(may(_, bloomFor))
     onFilesSelected(files)
     // re-resolve the DELETE-side skip under the runtime predicates: a
@@ -1640,7 +1640,7 @@ object FilePruner {
     * `partFields` (the union of historical specs under partition
     * evolution) supplies the bucket fields a point predicate may prune by.
     */
-  def mayMatch(e: ce.Expression, f: DataFileMeta, schema: StructType,
+  def mayMatch(e: ce.Expression, f: DataFileMeta,
       bloomFor: (String, String) => Option[FileBloom] = NoBloom,
       partFields: Seq[PartField] = Nil): Boolean = {
     if (f.minValues.isEmpty) return true
@@ -2082,7 +2082,7 @@ final class LakeBatchWrite(
     val pf = base.allPartitionFields
     val (full, rest) = stat.partition(f => preds.forall(_.exists(FilePruner.mustMatch(_, f))))
     val partial = rest.filter(f =>
-      preds.forall(_.forall(FilePruner.mayMatch(_, f, base.schema, partFields = pf))))
+      preds.forall(_.forall(FilePruner.mayMatch(_, f, partFields = pf))))
     if (partial.nonEmpty) throw new IllegalArgumentException(
       s"INSERT OVERWRITE ... on ${table.ident}: predicate $where does not align " +
         s"with file boundaries — ${partial.size} file(s) partially match " +
@@ -2200,51 +2200,41 @@ final class LakeStreamingWrite(
     StreamingCommitHooks.beforeCas(table.ident, epochId)
     // Always re-resolve the pointer: this handle lives for the whole query,
     // and every prior epoch moved it.
-    var attempts = 0
-    while (attempts < CasRetry.maxAttempts) {
-      val prevLoc = store.load(table.namespace, table.tableName).getOrElse(
-        throw new IllegalStateException(s"table ${table.ident} dropped during streaming commit"))
-      val base = TableMeta.read(prevLoc, hadoopConf)
-      if (base.properties.get(epochKey).exists(_.toLong >= epochId)) {
+    val prevLoc = store.load(table.namespace, table.tableName).getOrElse(
+      throw new IllegalStateException(s"table ${table.ident} dropped during streaming commit"))
+    try CasCommit.retryLoop(store, table.namespace, table.tableName, prevLoc,
+      TableMeta.read(prevLoc, hadoopConf), s"stream epoch $epochId", table.ident, hadoopConf)(
+      base => {
+        if (base.properties.get(epochKey).exists(_.toLong >= epochId))
+          throw LakeStreamingWrite.EpochReplayed
+        if (upsertKeys.nonEmpty)
+          base.properties.get("upsert.keys").foreach(prev => require(
+            prev == upsertKeys.mkString(","),
+            s"upsert keys '$prev' already fixed for ${table.ident}"))
+      })(
+      base =>
+        if (upsertKeys.isEmpty)
+          TableMeta.withAppend(base, "stream-append", dataFiles, hadoopConf,
+            extraProps = Map(epochKey -> epochId.toString))
+        else
+          TableMeta.withDelta(base, "upsert", dataFiles, eqFiles, hadoopConf,
+            deleteContent = "eq-deletes",
+            extraProps = Map(epochKey -> epochId.toString,
+              "upsert.keys" -> upsertKeys.mkString(","))))(
+      {
+        noCleanupThrough = math.max(noCleanupThrough, epochId)
+        table.commitSucceeded()
+        StreamingCommitHooks.afterCas(table.ident, epochId)
+      })
+    catch {
+      case LakeStreamingWrite.EpochReplayed =>
         // replayed epoch (sink retry / restart from checkpoint): drop the
         // re-written files, keep the committed snapshot — exactly-once.
         val hfs = new Path(table.meta.location).getFileSystem(hadoopConf)
         (dataFiles ++ eqFiles).foreach(f => hfs.delete(new Path(f.path), false))
-        return
-      }
-      val next =
-        if (upsertKeys.isEmpty)
-          TableMeta.withAppend(base, "stream-append", dataFiles, hadoopConf,
-            extraProps = Map(epochKey -> epochId.toString))
-        else {
-          base.properties.get("upsert.keys").foreach(prev => require(
-            prev == upsertKeys.mkString(","),
-            s"upsert keys '$prev' already fixed for ${table.ident}"))
-          TableMeta.withDelta(base, "upsert", dataFiles, eqFiles, hadoopConf,
-            deleteContent = "eq-deletes",
-            extraProps = Map(epochKey -> epochId.toString,
-              "upsert.keys" -> upsertKeys.mkString(",")))
-        }
-      val newLoc = TableMeta.write(next, hadoopConf)
-      val newHead = next.snapshots.drop(base.snapshots.size).lastOption
-      val won =
-        try CasCommit.guardedCas(store, table.namespace, table.tableName, newLoc,
-          prevLoc, newHead, hadoopConf, s"stream epoch $epochId", table.ident)
-        catch {
-          case e: CommitStateUnknownException =>
-            noCleanupThrough = math.max(noCleanupThrough, epochId); throw e
-        }
-      if (won == 1) {
-        noCleanupThrough = math.max(noCleanupThrough, epochId)
-        table.commitSucceeded()
-        StreamingCommitHooks.afterCas(table.ident, epochId)
-        return
-      }
-      attempts += 1
-      CasRetry.backoff(attempts) // lost a race with another writer: refresh + retry
+      case e: CommitStateUnknownException =>
+        noCleanupThrough = math.max(noCleanupThrough, epochId); throw e
     }
-    throw new IllegalStateException(
-      s"streaming commit conflict on ${table.ident}: CAS lost $attempts times")
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -2260,10 +2250,15 @@ final class LakeStreamingWrite(
   }
 }
 
+private object LakeStreamingWrite {
+  /** The epoch is already in the table: its commit is a replay. */
+  object EpochReplayed extends scala.util.control.ControlThrowable
+}
+
 /** Crash-injection seam for streaming exactly-once tests (nothing touches
   * it in production: both hooks default to no-ops). `beforeCas` fires once
-  * per commit attempt BEFORE the pointer swap — throwing there models a
-  * sink that died after writing its files but before committing.
+  * per epoch commit, BEFORE its first pointer swap — throwing there models
+  * a sink that died after writing its files but before committing.
   * `afterCas` fires right after a SUCCESSFUL swap (post cache-eviction) —
   * throwing there models dying in the gap between the table commit and the
   * checkpoint's commit marker, the window Spark resolves by REPLAYING the

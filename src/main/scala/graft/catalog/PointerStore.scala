@@ -1,6 +1,7 @@
 package graft.catalog
 
-import java.sql.{Connection, DriverManager, SQLException, SQLIntegrityConstraintViolationException}
+import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet, SQLException,
+  SQLIntegrityConstraintViolationException}
 
 /** JDBC pointer store — the exact `iceberg_tables` contract of the
   * reference's Postgres catalog (reference: src/catalog/mod.rs:365-385; the
@@ -81,63 +82,96 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     } finally st.close()
   }
 
-  /** reference list_tables (mod.rs:56-96). */
-  def listTables(namespace: String): Seq[String] = synchronized {
-    val ps = connection.prepareStatement(
-      sql.ListTables)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace)
-      rtt()
+  // ── the statement runner ───────────────────────────────────────────────
+  // Every statement below goes through `run`: prepare, bind the arguments
+  // in order (String or Long), pay the injected RTT, execute, close — under
+  // the store's monitor, one statement at a time on the one connection.
+
+  private def run[T](text: String, args: Any*)(execute: PreparedStatement => T): T =
+    synchronized {
+      val ps = connection.prepareStatement(text)
+      try {
+        args.zipWithIndex.foreach {
+          case (v: String, i) => ps.setString(i + 1, v)
+          case (v: Long, i) => ps.setLong(i + 1, v)
+          case (v, _) => throw new IllegalArgumentException(s"unbindable argument $v")
+        }
+        rtt()
+        execute(ps)
+      } finally ps.close()
+    }
+
+  private def update(text: String, args: Any*): Int = run(text, args: _*)(_.executeUpdate())
+
+  private def query[T](text: String, args: Any*)(row: ResultSet => T): Seq[T] =
+    run(text, args: _*) { ps =>
       val rs = ps.executeQuery()
-      val b = Seq.newBuilder[String]
-      while (rs.next()) b += rs.getString(1)
+      val b = Seq.newBuilder[T]
+      while (rs.next()) b += row(rs)
       b.result()
-    } finally ps.close()
-  }
+    }
+
+  /** The first row only — a point lookup under the primary key. */
+  private def first[T](text: String, args: Any*)(row: ResultSet => T): Option[T] =
+    run(text, args: _*) { ps =>
+      val rs = ps.executeQuery()
+      if (rs.next()) Some(row(rs)) else None
+    }
+
+  /** `body`, or `onDuplicate` when the statement hit the primary key —
+    * Derby's integrity violation, Postgres' 23505 unique_violation.
+    */
+  private def unlessDuplicate[T](onDuplicate: T)(body: => T): T =
+    try body catch {
+      case _: SQLIntegrityConstraintViolationException => onDuplicate
+      case e: SQLException if e.getSQLState == "23505" => onDuplicate
+    }
+
+  // The table and view statements share one shape per verb (same PK, same
+  // CAS guard, same 0/1-row semantics); each verb binds it once here.
+
+  private def names(text: String, namespace: String): Seq[String] =
+    query(text, catalogName, namespace)(_.getString(1))
+
+  private def pointer(text: String, namespace: String, name: String): Option[String] =
+    first(text, catalogName, namespace, name)(rs => Option(rs.getString(1))).flatten
+
+  private def insertPointer(text: String, namespace: String, name: String, loc: String): Boolean =
+    unlessDuplicate(false)(update(text, catalogName, namespace, name, loc) == 1)
+
+  private def casPointer(text: String, namespace: String, name: String, newLocation: String,
+      expectedLocation: String): Int =
+    update(text, newLocation, expectedLocation, catalogName, namespace, name, expectedLocation)
+
+  private def deletePointer(text: String, namespace: String, name: String): Boolean =
+    update(text, catalogName, namespace, name) == 1
+
+  private def renamePointer(text: String, fromNs: String, fromName: String, toNs: String,
+      toName: String): PointerStore.RenameResult =
+    unlessDuplicate[PointerStore.RenameResult](PointerStore.TargetExists) {
+      if (update(text, toNs, toName, catalogName, fromNs, fromName) == 1) PointerStore.Renamed
+      else PointerStore.SourceMissing
+    }
+
+  /** reference list_tables (mod.rs:56-96). */
+  def listTables(namespace: String): Seq[String] = names(sql.ListTables, namespace)
 
   /** reference table_exists (mod.rs:107-136). */
-  def tableExists(namespace: String, name: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(
-      sql.TableExists)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      ps.executeQuery().next()
-    } finally ps.close()
-  }
+  def tableExists(namespace: String, name: String): Boolean =
+    first(sql.TableExists, catalogName, namespace, name)(_ => ()).isDefined
 
   /** reference register_table (mod.rs:242-294): conditional INSERT; returns
     * false when the row already exists (the reference's 0-rows ⇒
     * "already exists" path, mod.rs:285-288).
     */
-  def register(namespace: String, name: String, metadataLocation: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(
-      sql.Register)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace)
-      ps.setString(3, name); ps.setString(4, metadataLocation)
-      rtt()
-      ps.executeUpdate() == 1
-    } catch {
-      case _: SQLIntegrityConstraintViolationException => false
-      case e: SQLException if e.getSQLState == "23505" => false // PG unique_violation
-    } finally ps.close()
-  }
+  def register(namespace: String, name: String, metadataLocation: String): Boolean =
+    insertPointer(sql.Register, namespace, name, metadataLocation)
 
   /** reference load_table's pointer lookup (mod.rs:180-235): exactly one row
     * or None — the >1 case is impossible under the PK, matching the
     * reference's invariant check (mod.rs:229-235).
     */
-  def load(namespace: String, name: String): Option[String] = synchronized {
-    val ps = connection.prepareStatement(
-      sql.Load)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      val rs = ps.executeQuery()
-      if (rs.next()) Option(rs.getString(1)) else None
-    } finally ps.close()
-  }
+  def load(namespace: String, name: String): Option[String] = pointer(sql.Load, namespace, name)
 
   /** The commit primitive — reference update_table (mod.rs:296-347), "the
     * single most important 52 lines in the reference": a guarded CAS UPDATE.
@@ -145,30 +179,13 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     * moved the pointer first (caller refreshes and retries or fails).
     */
   def casUpdate(namespace: String, name: String, newLocation: String,
-      expectedLocation: String): Int = synchronized {
-    val ps = connection.prepareStatement(
-      sql.CasUpdate)
-    try {
-      ps.setString(1, newLocation); ps.setString(2, expectedLocation)
-      ps.setString(3, catalogName); ps.setString(4, namespace); ps.setString(5, name)
-      ps.setString(6, expectedLocation)
-      rtt()
-      ps.executeUpdate()
-    } finally ps.close()
-  }
+      expectedLocation: String): Int =
+    casPointer(sql.CasUpdate, namespace, name, newLocation, expectedLocation)
 
   /** reference drop_table (mod.rs:138-175): point DELETE, exactly-one check
     * surfaced as the boolean (0 rows = table didn't exist).
     */
-  def drop(namespace: String, name: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(
-      sql.Drop)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      ps.executeUpdate() == 1
-    } finally ps.close()
-  }
+  def drop(namespace: String, name: String): Boolean = deletePointer(sql.Drop, namespace, name)
 
   /** Not in the reference (listed as a gap in SURVEY §2a): atomic rename.
     * ONE statement — the PK violation, not a check-then-act exists probe,
@@ -176,72 +193,65 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     * target can never both succeed.
     */
   def rename(fromNs: String, fromName: String, toNs: String, toName: String): PointerStore.RenameResult =
-    synchronized {
-      val ps = connection.prepareStatement(
-        sql.Rename)
-      try {
-        ps.setString(1, toNs); ps.setString(2, toName)
-        ps.setString(3, catalogName); ps.setString(4, fromNs); ps.setString(5, fromName)
-        rtt()
-        if (ps.executeUpdate() == 1) PointerStore.Renamed else PointerStore.SourceMissing
-      } catch {
-        case _: SQLIntegrityConstraintViolationException => PointerStore.TargetExists
-        case e: SQLException if e.getSQLState == "23505" => PointerStore.TargetExists
-      } finally ps.close()
-    }
+    renamePointer(sql.Rename, fromNs, fromName, toNs, toName)
 
   // ── namespace CRUD (SupportsNamespaces backing) ────────────────────────
 
-  def createNamespace(namespace: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(
-      sql.CreateNamespace)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace)
-      rtt()
-      ps.executeUpdate() == 1
-    } catch {
-      case _: SQLIntegrityConstraintViolationException => false
-      case e: SQLException if e.getSQLState == "23505" => false
-    } finally ps.close()
-  }
+  def createNamespace(namespace: String): Boolean =
+    unlessDuplicate(false)(update(sql.CreateNamespace, catalogName, namespace) == 1)
 
-  def dropNamespace(namespace: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(
-      sql.DropNamespace)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace)
-      rtt()
-      ps.executeUpdate() == 1
-    } finally ps.close()
-  }
+  def dropNamespace(namespace: String): Boolean =
+    update(sql.DropNamespace, catalogName, namespace) == 1
 
   /** Namespaces = explicitly created ∪ implied by existing tables (the
     * reference knows only the implied kind).
     */
-  def listNamespaces(): Seq[String] = synchronized {
-    val ps = connection.prepareStatement(
-      sql.ListNamespaces)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, catalogName)
-      rtt()
-      val rs = ps.executeQuery()
-      val b = Seq.newBuilder[String]
-      while (rs.next()) b += rs.getString(1)
-      b.result().sorted
-    } finally ps.close()
-  }
+  def listNamespaces(): Seq[String] =
+    query(sql.ListNamespaces, catalogName, catalogName)(_.getString(1)).sorted
 
   def namespaceExists(namespace: String): Boolean =
     listNamespaces().contains(namespace)
 
-  // ── torn-call resolution for rename + namespace CRUD (r11) ─────────────
+  // ── torn-call resolution for register, rename + namespace CRUD (r11) ───
   // The same ambiguity guardedCas resolves for the pointer CAS exists for
   // every other mutating statement: the JDBC call can throw with the
   // statement already applied server-side. Each resolver probes current
   // state to a DEFINITE outcome within the CasRetry budget. Pointer
-  // locations are UUID-unique and never reused, which makes the rename
-  // probe decisive: target pointing at the SOURCE's pre-call location can
-  // only mean our rename landed.
+  // locations are UUID-unique and never reused, which makes the register
+  // and rename probes decisive: a row holding the location only this call
+  // could have written can only mean our statement landed.
+
+  /** `call`; if it throws (it may have applied server-side), `probe` decides
+    * the outcome instead. A probe that throws [[SQLException]] is retried
+    * with backoff; when the budget is spent the outcome is unknown.
+    */
+  private def resolving[T](what: String)(call: => T)(probe: => T): T = {
+    val torn = try return call
+    catch { case e: SQLException => e }
+    var probes = 0
+    while (probes < CasRetry.maxAttempts) {
+      probes += 1
+      try return probe
+      catch { case _: SQLException => CasRetry.backoff(probes) }
+    }
+    throw new CommitStateUnknownException(
+      s"$what: outcome unknown after $probes probes", torn)
+  }
+
+  /** [[register]] with torn-call resolution: the row is the discriminator.
+    * Present with OUR location = landed; present with another = the
+    * ordinary lost race; absent = undecidable (the insert may still be in
+    * flight) — escalate rather than let an abort path delete files a
+    * landed pointer may reference.
+    */
+  def registerResolving(namespace: String, name: String, metadataLocation: String): Boolean =
+    resolving(s"register $namespace.$name")(register(namespace, name, metadataLocation)) {
+      load(namespace, name) match {
+        case Some(l) => l == metadataLocation
+        case None => throw new CommitStateUnknownException(
+          s"register $namespace.$name: outcome unknown (no row after a failed insert)")
+      }
+    }
 
   /** [[rename]] with torn-call resolution. Probe ladder on a thrown CAS:
     * target holds the source's old pointer → ours LANDED; target holds
@@ -259,24 +269,16 @@ class PointerStore(jdbcUrl: String, catalogName: String,
   def renameResolving(fromNs: String, fromName: String,
       toNs: String, toName: String): PointerStore.RenameResult = {
     val srcLoc = load(fromNs, fromName)
-    val torn = try return rename(fromNs, fromName, toNs, toName)
-    catch { case e: SQLException => e }
-    var probes = 0
-    while (probes < CasRetry.maxAttempts) {
-      probes += 1
-      try {
-        load(toNs, toName) match {
-          case Some(l) if srcLoc.contains(l) => return PointerStore.Renamed
-          case Some(_) => return PointerStore.TargetExists
-          case None => load(fromNs, fromName) match {
-            case Some(_) => return rename(fromNs, fromName, toNs, toName)
-            case None => return PointerStore.SourceMissing
-          }
-        }
-      } catch { case _: SQLException => CasRetry.backoff(probes) }
+    resolving(s"rename $fromNs.$fromName -> $toNs.$toName")(
+        rename(fromNs, fromName, toNs, toName)) {
+      load(toNs, toName) match {
+        case Some(l) if srcLoc.contains(l) => PointerStore.Renamed
+        case Some(_) => PointerStore.TargetExists
+        case None =>
+          if (load(fromNs, fromName).isDefined) rename(fromNs, fromName, toNs, toName)
+          else PointerStore.SourceMissing
+      }
     }
-    throw new CommitStateUnknownException(
-      s"rename $fromNs.$fromName -> $toNs.$toName: outcome unknown after $probes probes", torn)
   }
 
   /** [[createNamespace]] with torn-call resolution: if the namespace exists
@@ -286,19 +288,10 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     * often than this is (documented optimistic resolution). Absent → the
     * INSERT never applied → re-issue (PK-guarded, exactly-once).
     */
-  def createNamespaceResolving(namespace: String): Boolean = {
-    val torn = try return createNamespace(namespace)
-    catch { case e: SQLException => e }
-    var probes = 0
-    while (probes < CasRetry.maxAttempts) {
-      probes += 1
-      try {
-        return if (namespaceExists(namespace)) true else createNamespace(namespace)
-      } catch { case _: SQLException => CasRetry.backoff(probes) }
+  def createNamespaceResolving(namespace: String): Boolean =
+    resolving(s"create namespace $namespace")(createNamespace(namespace)) {
+      namespaceExists(namespace) || createNamespace(namespace)
     }
-    throw new CommitStateUnknownException(
-      s"create namespace $namespace: outcome unknown after $probes probes", torn)
-  }
 
   /** [[dropNamespace]] with torn-call resolution: gone when probed →
     * dropped (ours or equivalent), still there → the DELETE never applied,
@@ -309,18 +302,10 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     // existed at call start (callers have already emptied the namespace,
     // so the implied-by-tables arm of listNamespaces is quiet here)
     val existedBefore = listNamespaces().contains(namespace)
-    val torn = try return dropNamespace(namespace)
-    catch { case e: SQLException => e }
-    var probes = 0
-    while (probes < CasRetry.maxAttempts) {
-      probes += 1
-      try {
-        return if (!listNamespaces().contains(namespace)) existedBefore
-        else dropNamespace(namespace)
-      } catch { case _: SQLException => CasRetry.backoff(probes) }
+    resolving(s"drop namespace $namespace")(dropNamespace(namespace)) {
+      if (!listNamespaces().contains(namespace)) existedBefore
+      else dropNamespace(namespace)
     }
-    throw new CommitStateUnknownException(
-      s"drop namespace $namespace: outcome unknown after $probes probes", torn)
   }
 
   // ── starvation-escape commit lease (r11; advisory, see CasCommit) ──────
@@ -339,125 +324,44 @@ class PointerStore(jdbcUrl: String, catalogName: String,
     * `acquired_at_ms` is older than the TTL (crashed holder). True = ours.
     */
   def tryAcquireLease(namespace: String, name: String, holder: String,
-      nowMs: Long, ttlMs: Long): Boolean = synchronized {
-    val ins = connection.prepareStatement(sql.LeaseInsert)
-    try {
-      ins.setString(1, catalogName); ins.setString(2, namespace); ins.setString(3, name)
-      ins.setString(4, holder); ins.setLong(5, nowMs)
-      rtt()
-      if (ins.executeUpdate() == 1) return true
-    } catch {
-      case _: SQLIntegrityConstraintViolationException => ()
-      case e: SQLException if e.getSQLState == "23505" => ()
-    } finally ins.close()
-    val upd = connection.prepareStatement(sql.LeaseSteal)
-    try {
-      upd.setString(1, holder); upd.setLong(2, nowMs)
-      upd.setString(3, catalogName); upd.setString(4, namespace); upd.setString(5, name)
-      upd.setLong(6, nowMs - ttlMs)
-      rtt()
-      upd.executeUpdate() == 1
-    } finally upd.close()
-  }
+      nowMs: Long, ttlMs: Long): Boolean =
+    unlessDuplicate(false)(
+      update(sql.LeaseInsert, catalogName, namespace, name, holder, nowMs) == 1) ||
+      update(sql.LeaseSteal, holder, nowMs, catalogName, namespace, name, nowMs - ttlMs) == 1
 
   /** The current UNEXPIRED lease holder, if any. */
   def peekLease(namespace: String, name: String,
-      nowMs: Long, ttlMs: Long): Option[String] = synchronized {
-    val ps = connection.prepareStatement(sql.LeasePeek)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      val rs = ps.executeQuery()
-      if (rs.next() && rs.getLong(2) >= nowMs - ttlMs) Some(rs.getString(1)) else None
-    } finally ps.close()
-  }
+      nowMs: Long, ttlMs: Long): Option[String] =
+    first(sql.LeasePeek, catalogName, namespace, name)(rs => (rs.getString(1), rs.getLong(2)))
+      .collect { case (holder, at) if at >= nowMs - ttlMs => holder }
 
   /** Release — guarded by holder id, so a stolen lease is never deleted by
     * the crashed original when it comes back.
     */
-  def releaseLease(namespace: String, name: String, holder: String): Unit = synchronized {
-    val ps = connection.prepareStatement(sql.LeaseRelease)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      ps.setString(4, holder)
-      rtt()
-      ps.executeUpdate()
-    } finally ps.close()
-  }
+  def releaseLease(namespace: String, name: String, holder: String): Unit =
+    update(sql.LeaseRelease, catalogName, namespace, name, holder)
 
   // ── V2 views (r12): the table pointer pattern, verbatim, on
   // iceberg_views — same PK guard, same CAS, same 0/1-row semantics ───────
 
-  def viewList(namespace: String): Seq[String] = synchronized {
-    val ps = connection.prepareStatement(sql.ViewList)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace)
-      rtt()
-      val rs = ps.executeQuery()
-      val b = Seq.newBuilder[String]
-      while (rs.next()) b += rs.getString(1)
-      b.result()
-    } finally ps.close()
-  }
+  def viewList(namespace: String): Seq[String] = names(sql.ViewList, namespace)
 
-  def viewLoad(namespace: String, name: String): Option[String] = synchronized {
-    val ps = connection.prepareStatement(sql.ViewLoad)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      val rs = ps.executeQuery()
-      if (rs.next()) Option(rs.getString(1)) else None
-    } finally ps.close()
-  }
+  def viewLoad(namespace: String, name: String): Option[String] =
+    pointer(sql.ViewLoad, namespace, name)
 
   def viewRegister(namespace: String, name: String, metadataLocation: String): Boolean =
-    synchronized {
-      val ps = connection.prepareStatement(sql.ViewRegister)
-      try {
-        ps.setString(1, catalogName); ps.setString(2, namespace)
-        ps.setString(3, name); ps.setString(4, metadataLocation)
-        rtt()
-        ps.executeUpdate() == 1
-      } catch {
-        case _: SQLIntegrityConstraintViolationException => false
-        case e: SQLException if e.getSQLState == "23505" => false
-      } finally ps.close()
-    }
+    insertPointer(sql.ViewRegister, namespace, name, metadataLocation)
 
   def viewCasUpdate(namespace: String, name: String, newLocation: String,
-      expectedLocation: String): Int = synchronized {
-    val ps = connection.prepareStatement(sql.ViewCasUpdate)
-    try {
-      ps.setString(1, newLocation); ps.setString(2, expectedLocation)
-      ps.setString(3, catalogName); ps.setString(4, namespace); ps.setString(5, name)
-      ps.setString(6, expectedLocation)
-      rtt()
-      ps.executeUpdate()
-    } finally ps.close()
-  }
+      expectedLocation: String): Int =
+    casPointer(sql.ViewCasUpdate, namespace, name, newLocation, expectedLocation)
 
-  def viewDrop(namespace: String, name: String): Boolean = synchronized {
-    val ps = connection.prepareStatement(sql.ViewDrop)
-    try {
-      ps.setString(1, catalogName); ps.setString(2, namespace); ps.setString(3, name)
-      rtt()
-      ps.executeUpdate() == 1
-    } finally ps.close()
-  }
+  def viewDrop(namespace: String, name: String): Boolean =
+    deletePointer(sql.ViewDrop, namespace, name)
 
   def viewRename(fromNs: String, fromName: String,
-      toNs: String, toName: String): PointerStore.RenameResult = synchronized {
-    val ps = connection.prepareStatement(sql.ViewRename)
-    try {
-      ps.setString(1, toNs); ps.setString(2, toName)
-      ps.setString(3, catalogName); ps.setString(4, fromNs); ps.setString(5, fromName)
-      rtt()
-      if (ps.executeUpdate() == 1) PointerStore.Renamed else PointerStore.SourceMissing
-    } catch {
-      case _: SQLIntegrityConstraintViolationException => PointerStore.TargetExists
-      case e: SQLException if e.getSQLState == "23505" => PointerStore.TargetExists
-    } finally ps.close()
-  }
+      toNs: String, toName: String): PointerStore.RenameResult =
+    renamePointer(sql.ViewRename, fromNs, fromName, toNs, toName)
 
   override def close(): Unit = synchronized { if (conn != null) conn.close() }
 }
@@ -485,64 +389,11 @@ object PointerStore {
       }
     }.getOrElse(0L))
 
-  /** A complete statement set for one SQL dialect — see [[Sql]] (ANSI
-    * Derby∩Postgres subset) and [[PgSql]] (native Postgres).
-    */
-  sealed trait Dialect {
-    def CreateIcebergTables: String
-    def CreateNamespacesTable: String
-    def CreateLeasesTable: String
-    def ListTables: String
-    def TableExists: String
-    def Register: String
-    def Load: String
-    def CasUpdate: String
-    def Drop: String
-    def Rename: String
-    def CreateNamespace: String
-    def DropNamespace: String
-    def ListNamespaces: String
-    def LeaseInsert: String
-    def LeaseSteal: String
-    def LeasePeek: String
-    def LeaseRelease: String
-    def CreateViewsTable: String
-    def ViewList: String
-    def ViewLoad: String
-    def ViewRegister: String
-    def ViewCasUpdate: String
-    def ViewDrop: String
-    def ViewRename: String
-
-    /** Name → statement, the golden file's iteration order. */
-    final def All: Seq[(String, String)] = Seq(
-      "create_iceberg_tables" -> CreateIcebergTables,
-      "create_namespaces_table" -> CreateNamespacesTable,
-      "list_tables" -> ListTables,
-      "table_exists" -> TableExists,
-      "register" -> Register,
-      "load" -> Load,
-      "cas_update" -> CasUpdate,
-      "drop" -> Drop,
-      "rename" -> Rename,
-      "create_namespace" -> CreateNamespace,
-      "drop_namespace" -> DropNamespace,
-      "list_namespaces" -> ListNamespaces,
-      "create_leases_table" -> CreateLeasesTable,
-      "lease_insert" -> LeaseInsert,
-      "lease_steal" -> LeaseSteal,
-      "lease_peek" -> LeasePeek,
-      "lease_release" -> LeaseRelease,
-      "create_views_table" -> CreateViewsTable,
-      "view_list" -> ViewList,
-      "view_load" -> ViewLoad,
-      "view_register" -> ViewRegister,
-      "view_cas_update" -> ViewCasUpdate,
-      "view_drop" -> ViewDrop,
-      "view_rename" -> ViewRename)
-  }
-
-  /** EVERY SQL string this store ever sends, as named constants — the
+  /** A complete statement set for one SQL dialect. The members hold the
+    * ANSI Derby∩Postgres subset ([[Sql]]); [[PgSql]] overrides only the
+    * statements where Postgres has a first-class primitive.
+    *
+    * EVERY SQL string this store ever sends, as named constants — the
     * catalog's complete wire contract (reference: src/catalog/mod.rs §2a).
     * Frozen verbatim in `src/test/resources/pointer_store_sql.golden` and
     * grammar-linted for Postgres compatibility by `PointerStoreGoldenSpec`,
@@ -550,7 +401,7 @@ object PointerStore {
     * "Postgres in prod" contract. Change a statement ⇒ change the golden
     * file in the same commit, consciously.
     */
-  object Sql extends Dialect {
+  sealed abstract class Dialect {
     val CreateIcebergTables: String =
       """CREATE TABLE iceberg_tables (
         |  catalog_name VARCHAR(255) NOT NULL,
@@ -650,65 +501,60 @@ object PointerStore {
       """UPDATE iceberg_views SET view_namespace = ?, view_name = ?
         |  WHERE catalog_name = ? AND view_namespace = ? AND view_name = ?""".stripMargin
 
-
+    /** Name → statement, the golden file's iteration order. */
+    final def All: Seq[(String, String)] = Seq(
+      "create_iceberg_tables" -> CreateIcebergTables,
+      "create_namespaces_table" -> CreateNamespacesTable,
+      "list_tables" -> ListTables,
+      "table_exists" -> TableExists,
+      "register" -> Register,
+      "load" -> Load,
+      "cas_update" -> CasUpdate,
+      "drop" -> Drop,
+      "rename" -> Rename,
+      "create_namespace" -> CreateNamespace,
+      "drop_namespace" -> DropNamespace,
+      "list_namespaces" -> ListNamespaces,
+      "create_leases_table" -> CreateLeasesTable,
+      "lease_insert" -> LeaseInsert,
+      "lease_steal" -> LeaseSteal,
+      "lease_peek" -> LeasePeek,
+      "lease_release" -> LeaseRelease,
+      "create_views_table" -> CreateViewsTable,
+      "view_list" -> ViewList,
+      "view_load" -> ViewLoad,
+      "view_register" -> ViewRegister,
+      "view_cas_update" -> ViewCasUpdate,
+      "view_drop" -> ViewDrop,
+      "view_rename" -> ViewRename)
   }
+
+  /** The ANSI Derby∩Postgres statement set, frozen in
+    * `pointer_store_sql.golden`.
+    */
+  object Sql extends Dialect
 
   /** Native-Postgres statement set (reference: src/catalog/mod.rs:252-279
     * uses `ON CONFLICT DO NOTHING`; mod.rs:365-385 creates with
-    * `IF NOT EXISTS`). Only the four statements where Postgres has a
+    * `IF NOT EXISTS`). Only the eight statements where Postgres has a
     * first-class primitive differ — everything else is byte-identical to
     * the ANSI set, so the Derby-tested behavior transfers statement for
     * statement. Frozen in `pointer_store_sql_pg.golden`.
     */
   object PgSql extends Dialect {
-    val CreateIcebergTables: String =
-      """CREATE TABLE IF NOT EXISTS iceberg_tables (
-        |  catalog_name VARCHAR(255) NOT NULL,
-        |  table_namespace VARCHAR(255) NOT NULL,
-        |  table_name VARCHAR(255) NOT NULL,
-        |  metadata_location VARCHAR(5500),
-        |  previous_metadata_location VARCHAR(5500),
-        |  PRIMARY KEY (catalog_name, table_namespace, table_name)
-        |)""".stripMargin
-    val CreateNamespacesTable: String =
-      """CREATE TABLE IF NOT EXISTS graft_namespaces (
-        |  catalog_name VARCHAR(255) NOT NULL,
-        |  namespace VARCHAR(255) NOT NULL,
-        |  PRIMARY KEY (catalog_name, namespace)
-        |)""".stripMargin
-    val CreateLeasesTable: String =
-      """CREATE TABLE IF NOT EXISTS graft_commit_leases (
-        |  catalog_name VARCHAR(255) NOT NULL,
-        |  table_namespace VARCHAR(255) NOT NULL,
-        |  table_name VARCHAR(255) NOT NULL,
-        |  holder VARCHAR(255) NOT NULL,
-        |  acquired_at_ms BIGINT NOT NULL,
-        |  PRIMARY KEY (catalog_name, table_namespace, table_name)
-        |)""".stripMargin
+    private def ifNotExists(ddl: String): String =
+      ddl.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS")
     // 0-rows-on-conflict natively — the exact semantics the ANSI set
     // recovers via the 23505 SQLState catch (mod.rs:285-288)
-    val Register: String = Sql.Register + " ON CONFLICT DO NOTHING"
-    val CreateNamespace: String = Sql.CreateNamespace + " ON CONFLICT DO NOTHING"
-    val LeaseInsert: String = Sql.LeaseInsert + " ON CONFLICT DO NOTHING"
-    // byte-identical to the ANSI contract
-    val CreateViewsTable: String =
-      Sql.CreateViewsTable.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS")
-    val ViewRegister: String = Sql.ViewRegister + " ON CONFLICT DO NOTHING"
-    val ListTables: String = Sql.ListTables
-    val TableExists: String = Sql.TableExists
-    val Load: String = Sql.Load
-    val CasUpdate: String = Sql.CasUpdate
-    val Drop: String = Sql.Drop
-    val Rename: String = Sql.Rename
-    val DropNamespace: String = Sql.DropNamespace
-    val ListNamespaces: String = Sql.ListNamespaces
-    val LeaseSteal: String = Sql.LeaseSteal
-    val LeasePeek: String = Sql.LeasePeek
-    val LeaseRelease: String = Sql.LeaseRelease
-    val ViewList: String = Sql.ViewList
-    val ViewLoad: String = Sql.ViewLoad
-    val ViewCasUpdate: String = Sql.ViewCasUpdate
-    val ViewDrop: String = Sql.ViewDrop
-    val ViewRename: String = Sql.ViewRename
+    private def onConflictDoNothing(insert: String): String = insert + " ON CONFLICT DO NOTHING"
+
+    override val CreateIcebergTables: String = ifNotExists(Sql.CreateIcebergTables)
+    override val CreateNamespacesTable: String = ifNotExists(Sql.CreateNamespacesTable)
+    override val CreateLeasesTable: String = ifNotExists(Sql.CreateLeasesTable)
+    override val CreateViewsTable: String = ifNotExists(Sql.CreateViewsTable)
+    override val Register: String = onConflictDoNothing(Sql.Register)
+    override val CreateNamespace: String = onConflictDoNothing(Sql.CreateNamespace)
+    override val LeaseInsert: String = onConflictDoNothing(Sql.LeaseInsert)
+    override val ViewRegister: String = onConflictDoNothing(Sql.ViewRegister)
   }
 }

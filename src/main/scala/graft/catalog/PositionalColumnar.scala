@@ -152,7 +152,7 @@ final class PositionalColumnarReader(
   private val ridCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rid) else -1
   private val rseqCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rseq) else -1
 
-  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf, outSchema)
+  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf)
   private var tombstonedRows = 0L
   private var eqDeletedRows = 0L
   private var passthrough = 0L

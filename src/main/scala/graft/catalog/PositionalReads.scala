@@ -695,8 +695,8 @@ final class BatchesCompactedMetric extends org.apache.spark.sql.connector.metric
   * tombstone range.
   */
 object PositionalRuns {
-  def plan(part: PositionalInputPartition, conf: Configuration,
-      schema: StructType): (Seq[GroupRun], Array[Long], Long) = {
+  def plan(part: PositionalInputPartition,
+      conf: Configuration): (Seq[GroupRun], Array[Long], Long) = {
     // stats rendered only for the columns the pushed filters reference
     val statCols: Set[String] =
       part.filters.flatMap(_.references.map(_.name).toSeq).toSet
@@ -707,7 +707,7 @@ object PositionalRuns {
     }
     val mine = indexed.filter(g => g._1 >= part.splitStart && g._1 < part.splitEnd)
     val selected = mine.filter(g =>
-      part.filters.forall(FilePruner.mayMatch(_, g._3, schema)))
+      part.filters.forall(FilePruner.mayMatch(_, g._3)))
     PositionalParquet.rowGroupsPruned.addAndGet(mine.size - selected.size)
     // coalesce groups adjacent IN THE FILE (consecutive layout index ⇔
     // consecutive start positions) into one reader range each
@@ -751,7 +751,7 @@ final class PositionalRowReader(
   private val ridCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rid) else -1
   private val rseqCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rseq) else -1
 
-  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf, outSchema)
+  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf)
   private var tombstonedRows = 0L
   private var eqDeletedRows = 0L
 

@@ -112,72 +112,50 @@ final class StagedLakeTable(
   // files may be live table state and abortStagedChanges must keep them
   @volatile private var filesMayBeCommitted = false
 
-  /** `register` with torn-call resolution: an INSERT whose JDBC call threw
-    * may still have applied server-side. The row is the discriminator —
-    * present with OUR location = landed; present with another = the usual
-    * lost race; absent = undecidable (the insert may still be in flight),
-    * escalate rather than let cleanup delete maybe-registered files.
-    */
-  private def registerResolving(loc: String): Boolean =
-    try store.register(namespace, tableName, loc)
-    catch {
-      case e: java.sql.SQLException =>
-        store.load(namespace, tableName) match {
-          case Some(l) if l == loc => true
-          case Some(_) => false
-          case None => throw new CommitStateUnknownException(
-            s"staged create of $displayName: register outcome unknown", e)
-        }
-    }
-
   override def commitStagedChanges(): Unit = try {
     // Fresh-create metadata: snapshot 1, no history.
     lazy val newLoc =
       TableMeta.write(TableMeta.withOverwrite(baseMeta, "create", stagedFiles, hadoopConf),
         hadoopConf)
+    // a torn INSERT resolves by its row; an undecidable one escalates as
+    // CommitStateUnknownException, which keeps the staged files
+    def register(): Boolean = store.registerResolving(namespace, tableName, newLoc)
 
-    def casReplace(): Boolean = {
-      var attempts = 0
-      while (attempts < CasRetry.maxAttempts) {
-        store.load(namespace, tableName) match {
-          case None => return false // vanished: fall through to register
-          case Some(prev) =>
+    // false = the table vanished: the caller falls through to register
+    def casReplace(): Boolean = store.load(namespace, tableName) match {
+      case None => false
+      case Some(prev) =>
+        try {
+          CasCommit.retryLoop(store, namespace, tableName, prev,
+            TableMeta.read(prev, hadoopConf), "staged replace", displayName, hadoopConf)(
+            _ => ())(
             // REPLACE is a new snapshot on the EXISTING timeline — prior
             // snapshots survive, so VERSION AS OF a pre-replace snapshot
-            // still answers (with the staged schema; old files read by-name)
-            val prevMeta = TableMeta.read(prev, hadoopConf)
-            // prior snapshots stay time-travelable, so the row-id
+            // still answers (with the staged schema; old files read
+            // by-name). Prior snapshots stay time-travelable, so the row-id
             // high-water mark must carry too — restarting it would reuse
             // ids that still name rows on the retained timeline
-            val carried = baseMeta.copy(snapshots = prevMeta.snapshots,
-              nextRowId = prevMeta.nextRowId)
-            val next = TableMeta.withOverwrite(carried, "replace", stagedFiles, hadoopConf)
-            val replLoc = TableMeta.write(next, hadoopConf)
-            val newHead = next.snapshots.drop(carried.snapshots.size).lastOption
-            if (CasCommit.guardedCas(store, namespace, tableName, replLoc, prev,
-                newHead, hadoopConf, "staged replace", displayName) == 1) return true
-        }
-        attempts += 1
-        CasRetry.backoff(attempts)
-      }
-      throw new IllegalStateException(
-        s"staged replace of $displayName: CAS lost $attempts times")
+            base => TableMeta.withOverwrite(
+              baseMeta.copy(snapshots = base.snapshots, nextRowId = base.nextRowId),
+              "replace", stagedFiles, hadoopConf))(())
+          true
+        } catch { case _: TableDroppedException => false }
     }
 
     mode match {
       case StageMode.Create =>
-        if (!registerResolving(newLoc))
+        if (!register())
           throw new TableAlreadyExistsException(ident)
       case StageMode.Replace =>
         if (!casReplace())
           // table was dropped between stageReplace and commit: land the new
           // version anyway (same outcome as replace-after-concurrent-drop)
-          if (!registerResolving(newLoc))
+          if (!register())
             throw new TableAlreadyExistsException(ident)
       case StageMode.CreateOrReplace =>
-        if (!registerResolving(newLoc))
+        if (!register())
           if (!casReplace())
-            if (!registerResolving(newLoc))
+            if (!register())
               throw new IllegalStateException(
                 s"create-or-replace of $displayName: lost both register and CAS races")
     }
@@ -186,8 +164,8 @@ final class StagedLakeTable(
   } catch {
     case e: CommitStateUnknownException => filesMayBeCommitted = true; throw e
     case e: java.sql.SQLException =>
-      // a torn call neither register/CAS path could resolve (e.g. the probe
-      // load itself kept failing): undecidable — keep the files
+      // a store call outside the torn-call resolvers failed (a pointer
+      // read around the replace): undecidable — keep the files
       filesMayBeCommitted = true
       throw new CommitStateUnknownException(
         s"staged commit of $displayName: outcome unknown (store unreachable)", e)

@@ -514,7 +514,7 @@ final case class TableMeta(
       Some(slimEntry(planningStatKeys ++ predCols) _)
     }
     matchingEntries(manifestsOf(s).filter(_.isData),
-      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, schema, partFields = pf)), xform) ++
+      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, partFields = pf)), xform) ++
       s.inlineFiles.map(f => xform.fold(f)(_(f)))
   }
 
@@ -538,7 +538,7 @@ final case class TableMeta(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[DataFileMeta] = {
     val pf = allPartitionFields
     matchingEntries(manifestsOf(s).filter(_.kind == "deletes"),
-      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, schema, partFields = pf)))
+      pseudo => exprs.forall(FilePruner.mayMatch(_, pseudo, partFields = pf)))
   }
 
   /** A snapshot's EQUALITY-delete files (streaming-upsert key tombstones):
@@ -564,7 +564,7 @@ final case class TableMeta(
   def eqDeleteFilesMatching(s: SnapshotMeta,
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[DataFileMeta] =
     matchingEntries(manifestsOf(s).filter(_.kind == "eq-deletes"),
-      pseudo => exprs.forall(e => FilePruner.mayMatch(e, pseudo, schema)))
+      pseudo => exprs.forall(e => FilePruner.mayMatch(e, pseudo)))
 
   def currentEqDeleteFiles: Seq[DataFileMeta] =
     snapshot(currentSnapshotId).map(eqDeleteFilesOf).getOrElse(Nil)
@@ -960,12 +960,6 @@ object ManifestIO {
   }
 }
 
-/** Shared CAS-retry policy: commits that lose the pointer race refresh and
-  * retry up to [[maxAttempts]] times with linear backoff + per-thread
-  * jitter — without the backoff, N writers hammering the same row
-  * livelock each other into spurious commit failures (the reference has
-  * no retry at all, SURVEY §2a gap).
-  */
 /** Commit-retry policy: exponential backoff with FULL JITTER (the AWS
   * architecture-blog scheme) — under a thundering herd of writers, linear
   * fixed-step backoff keeps the herd in lockstep and a 20-attempt budget
@@ -976,20 +970,16 @@ object ManifestIO {
   */
 object CasRetry {
   val maxAttempts = 32
-  /** Lost this many CASes in one commit → claim the starvation lease
-    * (sysprop-tunable like `graft.manifest-cache.max-entries`).
-    */
-  def starveLeaseAfter: Int =
-    Integer.getInteger("graft.commit.starve-lease-after", 8)
+  /** Lost this many CASes in one commit → claim the starvation lease. */
+  val starveLeaseAfter = 8
   /** A lease older than this is a crashed holder — stealable. */
-  def leaseTtlMs: Long = java.lang.Long.getLong("graft.commit.lease-ttl-ms", 10000L)
+  val leaseTtlMs = 10000L
   /** A commit that has YIELDED to lease holders is queued, not livelocked:
     * it is bounded by this wall-clock deadline instead of the attempt
     * count (each holder rotation costs every waiter one CAS loss, so deep
     * queues exhaust any reasonable attempt budget while progressing).
     */
-  def queueDeadlineMs: Long =
-    java.lang.Long.getLong("graft.commit.queue-deadline-ms", 120000L)
+  val queueDeadlineMs = 120000L
   private val rnd = new java.util.Random()
   def backoff(attempt: Int): Unit = {
     val window = math.min(250L, 4L << math.min(attempt, 6)) // 8,16,...,256 -> cap 250ms
@@ -1020,6 +1010,12 @@ final class CommitConflictException(msg: String) extends IllegalStateException(m
   */
 final class CommitStateUnknownException(msg: String, cause: Throwable = null)
   extends IllegalStateException(msg, cause)
+
+/** The table's pointer row vanished while a commit was rebasing onto it
+  * (a concurrent DROP): the commit did not land. A staged REPLACE falls
+  * back to registering the table anew.
+  */
+final class TableDroppedException(msg: String) extends IllegalStateException(msg)
 
 object CasCommit {
   /** Iceberg-style rebase precondition for file-replacing commits: every
@@ -1065,15 +1061,17 @@ object CasCommit {
     }
   }
 
-  /** THE commit loop, shared by every committing path (row-level ops, delta
-    * appends, the CoW fold, maintenance rewrites): re-`validate` against the
+  /** THE commit loop, the only code that moves a table pointer (row-level
+    * ops, batch and streaming appends, the CoW fold, ALTER TABLE, staged
+    * REPLACE, maintenance rewrites and expiry): re-`validate` against the
     * CURRENT base, `transform` it, write the new metadata document, CAS the
     * pointer; on a lost race reload the fresh pointer and retry with jittered
     * backoff, loud after maxAttempts. `validate` throwing (conflict) aborts
     * the whole commit — validations are re-run on EVERY retry because the
     * base they guard against moves. The CAS itself goes through
     * [[guardedCas]], so a torn JDBC call resolves to a definite outcome (or
-    * a loud [[CommitStateUnknownException]]) instead of a silent maybe.
+    * a loud [[CommitStateUnknownException]]) instead of a silent maybe; a
+    * vanished pointer row throws [[TableDroppedException]].
     */
   def retryLoop(
       store: PointerStore,
@@ -1124,6 +1122,11 @@ object CasCommit {
     var queued = false
     def leaseSafe[T](default: T)(f: => T): T =
       try f catch { case _: java.sql.SQLException => default }
+    def reload(): Unit = {
+      prevLoc = store.load(namespace, tableName).getOrElse(
+        throw new TableDroppedException(s"table $ident dropped during $operation"))
+      base = TableMeta.read(prevLoc, hadoopConf)
+    }
     try {
       while (attempts < CasRetry.maxAttempts ||
           (queued && System.currentTimeMillis() < deadlineAt)) {
@@ -1136,11 +1139,7 @@ object CasCommit {
             queued = true
             waitedMs += 60
           }
-          if (waitedMs > 0) { // the holder landed: rebase on its result
-            prevLoc = store.load(namespace, tableName).getOrElse(
-              throw new IllegalStateException(s"table $ident dropped during $operation"))
-            base = TableMeta.read(prevLoc, hadoopConf)
-          }
+          if (waitedMs > 0) reload() // the holder landed: rebase on its result
         }
         validate(base)
         val next = transform(base)
@@ -1168,9 +1167,7 @@ object CasCommit {
           CasRetry.yieldToLease() // someone else is starving: let them land
           queued = true
         } else CasRetry.backoff(attempts)
-        prevLoc = store.load(namespace, tableName).getOrElse(
-          throw new IllegalStateException(s"table $ident dropped during $operation"))
-        base = TableMeta.read(prevLoc, hadoopConf)
+        reload()
       }
       throw new IllegalStateException(s"$operation on $ident: CAS lost $attempts times" +
         (if (queued) s" (lease-queued past the ${CasRetry.queueDeadlineMs} ms deadline)"

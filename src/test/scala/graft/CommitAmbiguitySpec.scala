@@ -190,10 +190,10 @@ class CommitAmbiguitySpec extends AnyFunSuite {
     }
   }
 
-  // ── the three NON-shared retry loops (VERDICT r9 #5) ────────────────────
+  // ── the three formerly separate retry loops (VERDICT r9 #5) ────────────
   // ALTER's reload-and-reapply, staged CREATE/REPLACE's register-fallback,
-  // and the streaming-epoch replay each run their own protocol around the
-  // pointer swap; tear the JDBC call inside each one.
+  // and the streaming-epoch replay now share CasCommit.retryLoop and the
+  // store's register resolution; tear the JDBC call inside each one.
 
   test("ALTER: torn CAS that APPLIED resolves to committed — applied exactly once") {
     TestSpark.spark

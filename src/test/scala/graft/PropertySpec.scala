@@ -101,7 +101,7 @@ class PropertySpec extends AnyFunSuite {
       case 2 => ce.Or(a, b)
     }
     forAll(genFile, genExpr) { (file, e) =>
-      if (!graft.catalog.FilePruner.mayMatch(e, file, schema)) {
+      if (!graft.catalog.FilePruner.mayMatch(e, file)) {
         // soundness: NO value inside the file's [min, max] satisfies e
         val lo = file.minValues("k").toLong
         val hi = file.maxValues("k").toLong
@@ -182,9 +182,9 @@ class PropertySpec extends AnyFunSuite {
     forAll(genFiles, genExpr) { (files, e) =>
       val (mins, maxs, nulls) = ManifestSummary.fold(files, kinds)
       val pseudo = DataFileMeta("m", files.map(_.rowCount).sum, 1L, mins, maxs, nulls)
-      if (!FilePruner.mayMatch(e, pseudo, schema)) {
+      if (!FilePruner.mayMatch(e, pseudo)) {
         skips += 1
-        files.foreach(f => assert(!FilePruner.mayMatch(e, f, schema),
+        files.foreach(f => assert(!FilePruner.mayMatch(e, f),
           s"manifest skipped by $e but member file may match: " +
             s"file=[${f.minValues}..${f.maxValues}, nulls=${f.nullCounts}, rows=${f.rowCount}] " +
             s"summary=[$mins..$maxs, nulls=$nulls]"))
@@ -224,13 +224,13 @@ class PropertySpec extends AnyFunSuite {
         Map("k" -> 0L, "s" -> 0L))
       vals.foreach { v =>
         val eqK = ce.EqualTo(kAttr, ce.Literal(v))
-        assert(FilePruner.mayMatch(eqK, f, schema, lookup),
+        assert(FilePruner.mayMatch(eqK, f, lookup),
           s"present long $v was bloom-pruned")
         val eqS = ce.EqualTo(sAttr, ce.Literal(UTF8String.fromString(s"v-$v"), StringType))
-        assert(FilePruner.mayMatch(eqS, f, schema, lookup),
+        assert(FilePruner.mayMatch(eqS, f, lookup),
           s"present string v-$v was bloom-pruned")
         val in = ce.In(kAttr, Seq(ce.Literal(v), ce.Literal(200001L)))
-        assert(FilePruner.mayMatch(in, f, schema, lookup),
+        assert(FilePruner.mayMatch(in, f, lookup),
           s"IN-list containing present $v was bloom-pruned")
       }
     }
@@ -290,11 +290,11 @@ class PropertySpec extends AnyFunSuite {
       (Expressions.column("k") +: vs.map(v => Expressions.literal(v): V2Expr)).toArray)
     forAll(Gen.nonEmptyListOf(Gen.choose(-1000000, 1000000)).map(_.take(3))) { ks =>
       val e = FilePruner.fromV2(in(ks), schema).get
-      val kept = files.filter(FilePruner.mayMatch(e, _, schema, partFields = pf))
+      val kept = files.filter(FilePruner.mayMatch(e, _, partFields = pf))
       assert(kept.map(_.path).toSet ==
         ks.map(k => s"/w/b${BucketHash(8, k, IntegerType)}.parquet").toSet, s"IN $ks")
       val longs = FilePruner.fromV2(in(ks.map(_.toLong)), schema).get
-      assert(files.forall(FilePruner.mayMatch(longs, _, schema, partFields = pf)),
+      assert(files.forall(FilePruner.mayMatch(longs, _, partFields = pf)),
         s"BIGINT literals IN $ks must keep every file")
     }
   }
