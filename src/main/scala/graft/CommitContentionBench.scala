@@ -106,7 +106,18 @@ object CommitContentionBench {
   }
 
   private def runRound(writers: Int, commitsPer: Int, tables: Int = 1): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"contention$writers").toString
+    val dirPath = java.nio.file.Files.createTempDirectory(s"contention$writers")
+    // a 2,8,16,32 round set writes gigabytes of data and metadata files
+    try round(dirPath.toString, writers, commitsPer, tables)
+    finally {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(dirPath)
+      try walk.iterator().asScala.toSeq.reverseIterator.foreach(java.nio.file.Files.deleteIfExists)
+      finally walk.close()
+    }
+  }
+
+  private def round(dir: String, writers: Int, commitsPer: Int, tables: Int): String = {
     val url = s"jdbc:derby:memory:contention$writers${System.nanoTime()};create=true"
     val boot = new PointerStore(url, "c")
     boot.initialize()

@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -290,17 +291,13 @@ final class LakeMicroBatchStream(
     val files = pendingFiles(meta, s, e.snapshotId).filter { p =>
       p.snapshotId < e.snapshotId || e.pos < 0 || p.idx < e.pos
     }.map(_.file)
-    if (files.isEmpty) return Array.empty
-    innerBatch(files).planInputPartitions()
+    ParquetDelegate.partitions(files)
   }
 
+  // the parquet reader factory is file-independent (schema + conf): every
+  // column, no pushed filters
   override def createReaderFactory(): PartitionReaderFactory =
-    // the parquet reader factory is file-independent (schema + conf); build
-    // it over the current manifest
-    innerBatch(refresh().currentFiles).createReaderFactory()
-
-  private def innerBatch(files: Seq[DataFileMeta]) =
-    ParquetDelegate.scan(ident, options, files.map(_.path), tableSchema, Nil, None).toBatch
+    ParquetDelegate.read(options, tableSchema, Array.empty, PlanShim.asNullable(tableSchema)).factory
 
   /** Backlog metrics surfaced in StreamingQueryProgress.sources[i].metrics
     * — a rate-limited stream's lag is files/rows/bytes committed to the

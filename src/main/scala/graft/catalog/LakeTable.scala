@@ -17,9 +17,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.DataSourceStrategy
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -32,9 +30,11 @@ import org.apache.spark.util.SerializableConfiguration
   * Read path: the current (or pinned) snapshot's file list comes from table
   * metadata — never from a directory listing (SURVEY §7 "never
   * `fs.listStatus`") — is pruned against per-file min/max stats, then
-  * handed to Spark's built-in vectorized parquet DSv2 scan
-  * ([[ParquetTable]]), which supplies column pruning, row-group predicate
-  * pushdown, whole-stage codegen, and size statistics for AQE join planning.
+  * planned into parquet splits from the manifest's paths and sizes and
+  * read by Spark's built-in vectorized parquet reader factory
+  * ([[ParquetDelegate]]), which supplies column pruning, row-group
+  * predicate pushdown and whole-stage codegen; the manifest also supplies
+  * size statistics for AQE join planning.
   *
   * Write path: executors stream [[InternalRow]]s straight into parquet
   * files under `location/data/`; the driver then commits by writing a new
@@ -548,9 +548,9 @@ final class LakeRowLevelOperation(
 
 /** Scan builder: collects Spark's pushed-down filters and required columns,
   * prunes the snapshot's file list against metadata min/max BEFORE any file
-  * or footer is opened, then delegates to the built-in parquet scan over
-  * the surviving files (forwarding the same pushdown so row-group pruning
-  * still applies inside each file).
+  * or footer is opened, then hands the surviving files to Spark's built-in
+  * parquet reader (forwarding the same pushdown so row-group pruning still
+  * applies inside each file).
   */
 final class LakeScanBuilder(
     ident: String,
@@ -667,8 +667,8 @@ final class LakeScanBuilder(
     // the delegated parquet scan) — matching FileScanBuilder's contract.
     filters
   }
-  // explain-level pushdown display comes from the delegated ParquetScan's
-  // own description (PushedFilters: [...]), which is authoritative.
+  // explain-level pushdown display is LakeScan's description
+  // (PushedFilters: [...]), which names what the parquet factory is handed.
   override def pushedFilters: Array[Predicate] = Array.empty
   override def pruneColumns(s: StructType): Unit = requiredSchema = s
 
@@ -793,8 +793,9 @@ private[graft] object TopNPrune {
   }
 }
 
-/** The scan handed to Spark: delegates the actual reading to the built-in
-  * vectorized parquet DSv2 scan over the metadata-pruned file list, and
+/** The scan handed to Spark: plans the metadata-pruned file list into
+  * parquet splits from the manifest and reads them with Spark's built-in
+  * vectorized parquet reader factory ([[ParquetDelegate]]), and
   * accepts RUNTIME file pruning (SupportsRuntimeV2Filtering) on the
   * declared filter columns — used by row-level commands (UPDATE/MERGE
   * group filtering) to shrink the copy-on-write set to the files that
@@ -837,7 +838,6 @@ final class LakeScan(
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 
   private var files: Seq[DataFileMeta] = initialFiles
-  private var delegate: Scan = _
 
   // MoR observability in the Spark UI's SQL node (delete debt per scan)
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -964,16 +964,21 @@ final class LakeScan(
       case _ => true
     }
 
-  private def inner: Scan = {
-    if (delegate == null) {
-      // the delegated parquet scan resolves against file schemas, which
-      // carry PHYSICAL column names; rows come back positionally identical
-      delegate = ParquetDelegate.scan(ident, options, files.map(_.path),
-        ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
-        Some(ColumnMapping.toPhysical(requiredDataSchema, l2p)))
-    }
-    delegate
-  }
+  // the parquet side reads file schemas, which carry PHYSICAL column
+  // names; rows come back positionally identical
+  private val physSchema = ColumnMapping.toPhysical(tableSchema, l2p)
+  private val physRequired = ColumnMapping.toPhysical(requiredDataSchema, l2p)
+  private lazy val physExprs = ColumnMapping.toPhysicalExprs(exprs, l2p)
+  // the filters the parquet factory evaluates against row-group stats,
+  // translated once per scan
+  @transient private lazy val pushed: Array[sources.Filter] =
+    org.apache.spark.sql.graft.PlanShim.parquetFilters(SparkSession.active, physSchema, physExprs)
+  private def readOver(readSchema: StructType): ParquetDelegate.Read =
+    ParquetDelegate.read(options, physSchema, pushed, readSchema)
+  // ONE conf broadcast and ONE reader factory per scan: both are
+  // file-independent, so runtime filtering keeps them, and the plain, the
+  // key-grouped and the mixed batch, and the positional readers, share them
+  @transient private lazy val parquet: ParquetDelegate.Read = readOver(physRequired)
 
   override def filterAttributes(): Array[NamedReference] =
     runtimeFilterCols.map(Expressions.column).toArray
@@ -1016,7 +1021,7 @@ final class LakeScan(
       dvByTargetC = null
       pqDeleteFilesC = null
     }
-    delegate = null // rebuild the parquet scan over the pruned list
+    batchV = null // rebuild the batch over the pruned list
     keyGroupsV = null // and the storage-partitioned batch
     keyedBatchV = null
     // the row estimate and column stats fold over files/deleteFilesV/
@@ -1100,8 +1105,7 @@ final class LakeScan(
 
   @transient private var keyedBatchV: Option[LakeKeyGroupedBatch] = null
   private def keyedBatch: Option[LakeKeyGroupedBatch] = {
-    if (keyedBatchV == null) keyedBatchV = keyGroups.map(gs =>
-      new LakeKeyGroupedBatch(ident, tableSchema, requiredSchema, exprs, options, gs, l2p))
+    if (keyedBatchV == null) keyedBatchV = keyGroups.map(new LakeKeyGroupedBatch(_, parquet.factory))
     keyedBatchV
   }
 
@@ -1308,13 +1312,21 @@ final class LakeScan(
   }
 
   // Spark consumes rows positionally against this schema: report LOGICAL
-  // names (the delegate read physical ones; layout is identical), plus any
-  // requested metadata columns appended after the data columns.
+  // names (the parquet side reads physical ones; layout is identical), plus
+  // any requested metadata columns appended after the data columns.
   override def readSchema(): StructType =
-    StructType(ColumnMapping.toLogical(inner.readSchema(), l2p).fields ++
+    StructType(ColumnMapping.toLogical(physRequired, l2p).fields ++
       metaCols.map(LakeMetaCols.fieldOf))
 
+  // Spark asks for the batch more than once while planning; cached until
+  // [[filter]] prunes `files`
+  @transient private var batchV: org.apache.spark.sql.connector.read.Batch = _
   override def toBatch: org.apache.spark.sql.connector.read.Batch = {
+    if (batchV == null) batchV = newBatch
+    batchV
+  }
+
+  private def newBatch: org.apache.spark.sql.connector.read.Batch = {
     val dirty = files.map(f => (f, coveringDeletes(f), eqApplicable(f)))
     // POSITION-tombstoned files (and every file, when _file/_pos are
     // requested) read through SPLIT-PARALLEL positional readers whose
@@ -1329,70 +1341,139 @@ final class LakeScan(
         if (metaCols.nonEmpty) (dirty, Nil)
         else dirty.partition(_._2.nonEmpty)
       val (eqOnly, clean) = rest.partition(_._3.nonEmpty)
-      new LakeMixedBatch(ident, tableSchema, requiredDataSchema, exprs, options,
-        clean.map(_._1), tomb, metaCols, l2p,
+      new LakeMixedBatch(physRequired, physExprs, parquet, readOver,
+        clean.map(_._1), tomb, metaCols,
         eqKeySchemaJson = eqKeySchema.map(_.json).getOrElse(""),
         eqOnly = eqOnly.map(d => (d._1, d._3)),
         eqKeysFor = eqKeysFor)
-    } else keyedBatch.getOrElse(inner.toBatch)
+    } else keyedBatch.getOrElse(new LakeFileBatch(files, parquet.factory))
   }
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     microBatch.map(_.apply()).getOrElse(
       throw new UnsupportedOperationException(s"$ident does not support streaming reads"))
-  override def description(): String = s"LakeScan($ident, ${files.size} files) -> ${inner.description()}"
+  // what the parquet factory is handed, in the format of Spark's own file
+  // scans (physical names; each value abbreviated past
+  // spark.sql.maxMetadataStringLength)
+  override def description(): String = {
+    val max = SparkSession.active.sessionState.conf.maxMetadataStringLength
+    def abbr(s: String) = org.apache.commons.lang3.StringUtils.abbreviate(s, max)
+    s"LakeScan($ident, ${files.size} files) PushedFilters: " +
+      s"${abbr(pushed.mkString("[", ", ", "]"))}, ReadSchema: ${abbr(physRequired.catalogString)}"
+  }
 }
 
-/** Key-grouped batch: one delegated parquet sub-scan per partition value;
-  * every emitted input partition carries its key (HasPartitionKey) so
+/** Key-grouped batch: each partition value's files planned on their own,
+  * every emitted input partition carrying its key (HasPartitionKey) so
   * BatchScanExec can co-locate it with the matching partition of another
-  * table scanned the same way.
+  * table scanned the same way. The parquet reader factory is
+  * file-independent (schema, filters, conf): the scan's one factory serves
+  * every group.
   */
 final class LakeKeyGroupedBatch(
-    ident: String,
-    tableSchema: StructType,
-    requiredSchema: StructType,
-    exprs: Seq[Expression],
-    options: CaseInsensitiveStringMap,
     groups: Seq[(InternalRow, Seq[DataFileMeta])],
-    l2p: Map[String, String] = Map.empty)
+    factory: org.apache.spark.sql.connector.read.PartitionReaderFactory)
   extends org.apache.spark.sql.connector.read.Batch {
 
-  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  private def subBatch(files: Seq[DataFileMeta]): Batch =
-    ParquetDelegate.scan(ident, options, files.map(_.path),
-      ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
-      Some(ColumnMapping.toPhysical(requiredSchema, l2p))).toBatch
+  private lazy val parts: Array[InputPartition] = groups.flatMap { case (key, files) =>
+    ParquetDelegate.partitions(files).map(p => KeyedInputPartition(p, key))
+  }.toArray
 
-  private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
-    val parts = groups.flatMap { case (key, files) =>
-      subBatch(files).planInputPartitions().map(p => KeyedInputPartition(p, key))
-    }.toArray[InputPartition]
-    // the parquet reader factory is file-independent (schema + conf): one
-    // factory serves every group's partitions
-    val factory = subBatch(groups.head._2).createReaderFactory()
-    (parts, new UnwrappingReaderFactory(factory))
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = planned._1
-  override def createReaderFactory(): PartitionReaderFactory = planned._2
+  override def planInputPartitions(): Array[InputPartition] = parts
+  override def createReaderFactory(): PartitionReaderFactory = new UnwrappingReaderFactory(factory)
 }
 
-/** The delegated parquet scan over data files: Spark's [[ParquetTable]]
-  * supplies column pruning, row-group predicate pushdown and vectorized
-  * reads. `fileSchema`, `filters` and `required` use the files' (physical)
-  * column names; `required` = None reads every column.
+/** A batch of clean files read by the scan's parquet factory alone. */
+final class LakeFileBatch(
+    files: Seq[DataFileMeta],
+    factory: org.apache.spark.sql.connector.read.PartitionReaderFactory)
+  extends org.apache.spark.sql.connector.read.Batch {
+
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+
+  private lazy val parts = ParquetDelegate.partitions(files)
+
+  override def planInputPartitions(): Array[InputPartition] = parts
+  override def createReaderFactory(): PartitionReaderFactory = factory
+}
+
+/** The parquet side of every lake read, planned from the manifest: input
+  * partitions from each file's path and recorded size, and Spark's own
+  * vectorized reader factory (column pruning, row-group predicate
+  * pushdown) over one prepared, broadcast Hadoop conf. Planning lists,
+  * stats and opens no file. Schemas and filters use the files' (physical)
+  * column names.
   */
 private[catalog] object ParquetDelegate {
-  def scan(ident: String, options: CaseInsensitiveStringMap, paths: Seq[String],
-      fileSchema: StructType, filters: Seq[Expression], required: Option[StructType]): Scan = {
-    val pt = ParquetTable(ident, SparkSession.active, options, paths.toList, Some(fileSchema),
-      classOf[ParquetFileFormat])
-    val b = pt.newScanBuilder(options)
-    b.pushFilters(filters)
-    required.foreach(b.pruneColumns)
-    b.build()
+  import org.apache.hadoop.fs.FileStatus
+  import org.apache.spark.broadcast.Broadcast
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.execution.PartitionedFileUtil
+  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata}
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport}
+  import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+  import org.apache.spark.sql.graft.PlanShim
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** A parquet read: the broadcast conf and the factory that reads with it.
+    * Positional readers take the same conf and set their own keys on a
+    * copy ([[PositionalParquet.readerConf]]).
+    */
+  final case class Read(conf: Broadcast[SerializableConfiguration],
+      factory: PartitionReaderFactory)
+
+  /** `files` split and packed as Spark's `FileScan.partitions` does it: the
+    * split size from the session and the files' total size, each file cut
+    * into splits of at most that size, largest first, packed into
+    * partitions. Sizes come from the manifest; splits carry no host
+    * preference.
+    */
+  def partitions(files: Seq[DataFileMeta]): Array[InputPartition] = {
+    if (files.isEmpty) return Array.empty
+    val spark = SparkSession.active
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.sizeBytes + openCost).sum)
+    val splits = files.flatMap { f =>
+      val raw = new Path(f.path)
+      val path = raw.getFileSystem(hadoopConf).makeQualified(raw)
+      PartitionedFileUtil.splitFiles(
+        FileStatusWithMetadata(new FileStatus(f.sizeBytes, false, 0, 0L, 0L, path)),
+        path, isSplitable = true, maxSplit, InternalRow.empty)
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
+  }
+
+  /** Spark's parquet reader factory reading `readSchema` from files of
+    * `fileSchema`, with `pushed` filters, over a conf carrying the scan's
+    * options and the keys `ParquetScan.createReaderFactory` sets.
+    */
+  def read(options: CaseInsensitiveStringMap, fileSchema: StructType,
+      pushed: Array[sources.Filter], readSchema: StructType): Read = {
+    val spark = SparkSession.active
+    val sql = spark.sessionState.conf
+    val opts = options.asCaseSensitiveMap.asScala.toMap
+    val c = spark.sessionState.newHadoopConfWithOptions(opts)
+    val json = readSchema.json
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    c.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, sql.nestedSchemaPruningEnabled)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    c.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(c))
+    Read(conf, ParquetPartitionReaderFactory(sql, conf, PlanShim.asNullable(fileSchema),
+      readSchema, new StructType(), pushed, None, new ParquetOptions(opts, sql)))
   }
 }
 
@@ -1401,18 +1482,21 @@ private[catalog] object ParquetDelegate {
   * tombstones, or any file when `_file`/`_pos` metadata columns are
   * requested). One scan, one reader factory, per-partition columnar
   * dispatch — deletes tax exactly the files they touch, and compaction
-  * puts files back on the vectorized path.
+  * puts files back on the vectorized path. `read` is the scan's parquet
+  * read over `physRequired`; `readOver` builds the one extra read the
+  * equality-delete groups share.
   */
 final class LakeMixedBatch(
-    ident: String,
-    tableSchema: StructType,
-    requiredDataSchema: StructType,
-    exprs: Seq[Expression],
-    options: CaseInsensitiveStringMap,
+    physRequired: StructType,
+    // pushed data filters under PHYSICAL names — positional readers prune
+    // row groups by footer stats against these (best-effort; every filter
+    // is also a post-scan Filter)
+    physExprs: Seq[Expression],
+    read: ParquetDelegate.Read,
+    readOver: StructType => ParquetDelegate.Read,
     cleanFiles: Seq[DataFileMeta],
     tombstoned: Seq[(DataFileMeta, Seq[DeleteSlice], Seq[String])],
     metaCols: Seq[String],
-    l2p: Map[String, String],
     eqKeySchemaJson: String = "",
     eqOnly: Seq[(DataFileMeta, Seq[String])] = Nil,
     eqKeysFor: Seq[String] => org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = null)
@@ -1420,29 +1504,16 @@ final class LakeMixedBatch(
 
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  private def delegateFor(paths: Seq[String], prunedPhys: StructType)
-      : (Array[InputPartition], PartitionReaderFactory) = {
-    val batch = ParquetDelegate.scan(ident, options, paths,
-      ColumnMapping.toPhysical(tableSchema, l2p), ColumnMapping.toPhysicalExprs(exprs, l2p),
-      Some(prunedPhys)).toBatch
-    (batch.planInputPartitions(), batch.createReaderFactory())
-  }
-
-  private val physRequired = ColumnMapping.toPhysical(requiredDataSchema, l2p)
   private val physReadSchemaJson = physRequired.json
-  // pushed data filters under PHYSICAL names — positional readers prune
-  // row groups by footer stats against these (best-effort; every filter
-  // is also a post-scan Filter)
-  private lazy val physExprs = ColumnMapping.toPhysicalExprs(exprs, l2p)
 
   private lazy val delegatePlanned: Option[(Array[InputPartition], PartitionReaderFactory)] =
     if (cleanFiles.isEmpty) None
-    else Some(delegateFor(cleanFiles.map(_.path), physRequired))
+    else Some((ParquetDelegate.partitions(cleanFiles), read.factory))
 
   // eq-only files group by their applicable delete set (≈ one group per
-  // epoch boundary); each group keeps a full delegate parquet scan — split
-  // planning, pushed filters, row-group pruning — reading requested ∪ key
-  // columns so the anti-filter can see the key
+  // epoch boundary); each group keeps the delegate's split planning, pushed
+  // filters and row-group pruning, reading requested ∪ key columns so the
+  // anti-filter can see the key — one factory over that schema serves all
   private lazy val eqGroups: Seq[(Seq[String], Seq[DataFileMeta])] =
     eqOnly.groupBy(_._2.sorted).toSeq.sortBy(_._1.mkString(","))
       .map { case (eqPaths, fs) => (eqPaths, fs.map(_._1)) }
@@ -1454,8 +1525,11 @@ final class LakeMixedBatch(
   private lazy val eqUnionSchema: StructType = StructType(physRequired.fields ++
     eqKeySchema.fields.filterNot(f => physRequired.fieldNames.contains(f.name)))
 
-  private lazy val eqPlanned: Seq[(Array[InputPartition], PartitionReaderFactory)] =
-    eqGroups.map { case (_, fs) => delegateFor(fs.map(_.path), eqUnionSchema) }
+  private lazy val eqFactory: Option[PartitionReaderFactory] =
+    if (eqGroups.isEmpty) None else Some(readOver(eqUnionSchema).factory)
+
+  private lazy val eqParts: Seq[Array[InputPartition]] =
+    eqGroups.map { case (_, fs) => ParquetDelegate.partitions(fs) }
 
   // ONE driver-side load + broadcast of every applicable delete file's keys
   // per query (memoized by the owning scan) — readers look keys up instead
@@ -1464,13 +1538,6 @@ final class LakeMixedBatch(
       : org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = {
     val allPaths = (tombstoned.flatMap(_._3) ++ eqGroups.flatMap(_._1)).distinct
     if (allPaths.isEmpty) null else eqKeysFor(allPaths)
-  }
-
-  // the Hadoop conf ships once per scan, as Spark's ParquetScan ships it:
-  // inside the factory, every positional task deserialized all of it
-  private lazy val confBroadcast = {
-    val spark = SparkSession.active
-    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -1495,8 +1562,8 @@ final class LakeMixedBatch(
             filters = physExprs)
         }
       } ++
-      eqGroups.zipWithIndex.flatMap { case ((eqPaths, _), gi) =>
-        eqPlanned(gi)._1.map(p => EqFilteredInputPartition(p, gi, eqPaths,
+      eqGroups.zip(eqParts).flatMap { case ((eqPaths, _), parts) =>
+        parts.map(p => EqFilteredInputPartition(p, eqPaths,
           eqKeySchemaJson, eqUnionSchema.json, physRequired.length))
       }
 
@@ -1509,17 +1576,20 @@ final class LakeMixedBatch(
     // to row mode. Spark requires scan-wide agreement: decided here, once.
     val flatOk = ColumnarSupport.ok(physRequired) &&
       ColumnarSupport.ok(eqKeySchema) && metaColsOk
-    def allColumnar(p: Option[(Array[InputPartition], PartitionReaderFactory)]) =
-      p.forall { case (parts, fac) => parts.forall(fac.supportColumnarReads) }
+    def allColumnar(parts: Array[InputPartition], fac: PartitionReaderFactory) =
+      parts.forall(fac.supportColumnarReads)
     // driver-side system property, default on; "false" keeps every file on
     // the row reader, which MergeOnReadSpec and RowLineageSpec use as the
     // reference the columnar reader must match
     val enabled = !"false".equals(System.getProperty("graft.mor.columnar"))
-    val columnar = enabled && flatOk && allColumnar(delegatePlanned) &&
-      eqPlanned.forall(p => allColumnar(Some(p)))
-    new LakeReaderFactory(confBroadcast, delegatePlanned.map(_._2),
+    val columnar = enabled && flatOk &&
+      delegatePlanned.forall { case (parts, fac) => allColumnar(parts, fac) } &&
+      eqFactory.forall(fac => eqParts.forall(allColumnar(_, fac)))
+    // the Hadoop conf ships once per scan, as Spark's ParquetScan ships it:
+    // inside the factory, every positional task deserialized all of it
+    new LakeReaderFactory(read.conf, delegatePlanned.map(_._2),
       forceRows = !columnar && (tombstoned.nonEmpty || eqGroups.nonEmpty),
-      eqDelegates = eqPlanned.map(_._2).toArray,
+      eqDelegate = eqFactory,
       eqKeys = eqBroadcast,
       columnar = columnar)
   }

@@ -516,15 +516,13 @@ final case class PositionalInputPartition(
   * apply, no positional tombstones): the inner partition keeps the
   * delegate's split planning, pushed filters and row-group pruning — eq
   * filtering needs no position counter, so unlike positional tombstones it
-  * costs neither pushdown nor whole-file reads. `groupIdx` selects the
-  * delegate factory whose pruned schema matches (one per distinct
-  * applicable-delete set), `eqDeletePaths` the broadcast key arrays to
-  * anti-filter with, `outLen` the requested-column prefix to emit (the
-  * delegate reads requested ∪ key columns).
+  * costs neither pushdown nor whole-file reads. Every such split reads
+  * through the scan's one eq-delete factory (requested ∪ key columns);
+  * `eqDeletePaths` names the broadcast key arrays to anti-filter with,
+  * `outLen` the requested-column prefix to emit.
   */
 final case class EqFilteredInputPartition(
     inner: InputPartition,
-    groupIdx: Int,
     eqDeletePaths: Seq[String],
     keySchemaJson: String,
     unionSchemaJson: String,
@@ -533,7 +531,7 @@ final case class EqFilteredInputPartition(
 }
 
 /** Dispatches positional partitions to the row reader, eq-filtered
-  * partitions to their group's delegate reader wrapped with the key
+  * partitions to the eq-delete delegate reader wrapped with the key
   * anti-filter, and everything else to the delegated parquet factory.
   * Spark requires every partition of one scan to agree on columnar support
   * (DataSourceV2ScanExecBase), so when a scan mixes clean files with dirty
@@ -547,7 +545,7 @@ final class LakeReaderFactory(
     conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
     delegate: Option[PartitionReaderFactory],
     forceRows: Boolean,
-    eqDelegates: Array[PartitionReaderFactory] = Array.empty,
+    eqDelegate: Option[PartitionReaderFactory] = None,
     eqKeys: org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = null,
     // true ⇒ EVERY partition of this scan reads vectorized (decided at
     // planning: flat schemas + delegate support) — Spark requires the
@@ -566,7 +564,7 @@ final class LakeReaderFactory(
       new PositionalRowReader(pp, conf.value.value,
         if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
     case ep: EqFilteredInputPartition =>
-      new EqFilteredRowReader(eqDelegates(ep.groupIdx).createReader(ep.inner), ep,
+      new EqFilteredRowReader(eqDelegate.get.createReader(ep.inner), ep,
         keySetOf(ep.eqDeletePaths))
     case other => delegate.get.createReader(other)
   }
@@ -576,7 +574,7 @@ final class LakeReaderFactory(
         if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
     case ep: EqFilteredInputPartition =>
       new EqFilteredColumnarReader(
-        eqDelegates(ep.groupIdx).createColumnarReader(ep.inner), ep,
+        eqDelegate.get.createColumnarReader(ep.inner), ep,
         keySetOf(ep.eqDeletePaths))
     case other => delegate.get.createColumnarReader(other)
   }

@@ -728,4 +728,17 @@ class ExplainAuditSpec extends AnyFunSuite {
     val sorts = "Sort ".r.findAllIn(p).size
     assert(sorts <= 4, s"unexpected corpus-sized sorts in the fusion path:\n$p")
   }
+
+  test("a lake scan names the read schema and filters its parquet reader is handed") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.audit")
+    spark.sql("DROP TABLE IF EXISTS lake.audit.scan")
+    spark.sql("CREATE TABLE lake.audit.scan (id BIGINT, v STRING, w DOUBLE)")
+    spark.sql("INSERT INTO lake.audit.scan SELECT id, concat('v', id), id * 0.5 FROM range(0, 100)")
+    val p = spark.sql("SELECT v FROM lake.audit.scan WHERE id > 10")
+      .queryExecution.executedPlan.toString
+    assert(("""LakeScan\(lake\.audit\.scan, \d+ files\) """ +
+      """PushedFilters: \[IsNotNull\(id\), GreaterThan\(id,10\)\], """ +
+      """ReadSchema: struct<id:bigint,v:string>""").r.findFirstIn(p).isDefined, p)
+    spark.sql("DROP TABLE lake.audit.scan")
+  }
 }
