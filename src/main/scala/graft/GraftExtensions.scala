@@ -31,6 +31,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // files its ON keys can hit (pre-CBO: see MergeSourceKeys for why)
     ext.injectPreCBORule(_ => graft.catalog.MergeSourceKeys)
 
+    // a filter over a lake scan compiles once per shape, not once per
+    // literal value (see LakeFilterParams for why after the transitions)
+    ext.injectColumnar(_ => graft.catalog.LakeFilterParams.columnarRule)
+
     // CDC changelog as a SQL table-valued function:
     //   SELECT * FROM table_changes('cat.ns.t', start_id[, end_id])
     // (the Delta table_changes / Iceberg changelog-scan shape). The spliced

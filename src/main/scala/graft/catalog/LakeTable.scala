@@ -19,7 +19,6 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownA
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -68,10 +67,8 @@ final class LakeTable(
     LakeMetaColumn(LakeMetaCols.LastSeq, LongType, nullable = true))
   override def properties(): util.Map[String, String] = meta.properties.asJava
   override def version(): String = meta.currentSnapshotId.toString
-  override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] = {
-    import org.apache.spark.sql.connector.expressions.Expressions
+  override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
     meta.partitionFields.map(LakeTransforms.v2).toArray
-  }
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -347,7 +344,7 @@ final class LakeTable(
         // Pending merge-on-read tombstones are folded in (subtracted) before
         // the predicate. Files are read under physical names, relabeled
         // logical for the predicate, rewritten under physical names.
-        import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, substring_index, when}
+        import org.apache.spark.sql.functions.{coalesce, col, lit, substring_index}
         // survivors are CARRIED rows: their lineage rides as materialized
         // columns (already-materialized values win, NULL inherits the
         // file's reserved range/sequence) so a CoW DELETE never changes a
@@ -842,6 +839,8 @@ final class LakeScan(
   // MoR observability in the Spark UI's SQL node (delete debt per scan)
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     LakeScanMetrics.all
+  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(LakeScanMetrics.Value("confBroadcastReused", if (parquet.confReused) 1L else 0L))
 
   // one eq-key load per delete FILE per scan (the once-per-query IO
   // contract, open-count asserted in UpsertSpec), shared by the broadcast
@@ -975,9 +974,10 @@ final class LakeScan(
     org.apache.spark.sql.graft.PlanShim.parquetFilters(SparkSession.active, physSchema, physExprs)
   private def readOver(readSchema: StructType): ParquetDelegate.Read =
     ParquetDelegate.read(options, physSchema, pushed, readSchema)
-  // ONE conf broadcast and ONE reader factory per scan: both are
-  // file-independent, so runtime filtering keeps them, and the plain, the
-  // key-grouped and the mixed batch, and the positional readers, share them
+  // ONE reader factory per scan, over the conf broadcast every read of the
+  // same shape shares (made only by the first): both are file-independent,
+  // so runtime filtering keeps them, and the plain, the key-grouped and the
+  // mixed batch, and the positional readers, share them
   @transient private lazy val parquet: ParquetDelegate.Read = readOver(physRequired)
 
   override def filterAttributes(): Array[NamedReference] =
@@ -1040,15 +1040,6 @@ final class LakeScan(
 
   private def pfields: Seq[PartField] = partitionCols.map(PartField.parse)
 
-  private def keySchema: StructType =
-    StructType(pfields.map { f =>
-      if (f.isIdentity) tableSchema.fields(tableSchema.fieldIndex(f.source))
-      // truncate keeps the SOURCE type; bucket/time keys are ints
-      else if (f.trunc.isDefined) StructField(f.statKey,
-        tableSchema.fields(tableSchema.fieldIndex(f.source)).dataType)
-      else StructField(f.statKey, IntegerType)
-    })
-
   private def parseKey(f: DataFileMeta): Option[Seq[Any]] = {
     val vals = pfields.map { pf =>
       (f.minValues.get(pf.statKey), f.maxValues.get(pf.statKey)) match {
@@ -1056,7 +1047,7 @@ final class LakeScan(
           try {
             // bucket/time keys are ints; identity AND truncate keys carry
             // the SOURCE column's runtime type (truncate of a BIGINT/STRING
-            // is a BIGINT/STRING — keySchema declares exactly that)
+            // is a BIGINT/STRING)
             if (pf.buckets.isDefined || pf.time.isDefined) lo.toInt
             else tableSchema.fields(tableSchema.fieldIndex(pf.source)).dataType match {
               case IntegerType | DateType => lo.toInt
@@ -1112,7 +1103,6 @@ final class LakeScan(
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
     keyedBatch match {
       case Some(b) =>
-        import org.apache.spark.sql.connector.expressions.Expressions
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
           pfields.map(LakeTransforms.v2(_):
             org.apache.spark.sql.connector.expressions.Expression).toArray,
@@ -1402,12 +1392,13 @@ final class LakeFileBatch(
 /** The parquet side of every lake read, planned from the manifest: input
   * partitions from each file's path and recorded size, and Spark's own
   * vectorized reader factory (column pruning, row-group predicate
-  * pushdown) over one prepared, broadcast Hadoop conf. Planning lists,
-  * stats and opens no file. Schemas and filters use the files' (physical)
-  * column names.
+  * pushdown) over a prepared Hadoop conf, broadcast once per read shape.
+  * Planning lists, stats and opens no file. Schemas and filters use the
+  * files' (physical) column names.
   */
 private[catalog] object ParquetDelegate {
   import org.apache.hadoop.fs.FileStatus
+  import org.apache.spark.SparkContext
   import org.apache.spark.broadcast.Broadcast
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
   import org.apache.spark.sql.execution.PartitionedFileUtil
@@ -1417,12 +1408,43 @@ private[catalog] object ParquetDelegate {
   import org.apache.spark.sql.graft.PlanShim
   import org.apache.spark.sql.internal.SQLConf
 
-  /** A parquet read: the broadcast conf and the factory that reads with it.
-    * Positional readers take the same conf and set their own keys on a
-    * copy ([[PositionalParquet.readerConf]]).
+  /** A parquet read: the broadcast conf, the factory that reads with it,
+    * and whether the conf's broadcast was an earlier read's. Positional
+    * readers take the same conf and set their own keys on a copy
+    * ([[PositionalParquet.readerConf]]), so a shared value is never
+    * mutated.
     */
   final case class Read(conf: Broadcast[SerializableConfiguration],
-      factory: PartitionReaderFactory)
+      factory: PartitionReaderFactory, confReused: Boolean)
+
+  // the last few conf broadcasts, by context and the prepared conf's full
+  // content: reads of one shape share one broadcast until the options, the
+  // read schema or the SQL conf change. Eviction only drops the reference,
+  // never destroys: the ContextCleaner reclaims a broadcast once no plan
+  // holds it, so a running task can still fetch its value.
+  private val MaxConfs = 16
+  private val confs = new java.util.LinkedHashMap[(SparkContext, Map[String, String]),
+      Broadcast[SerializableConfiguration]](MaxConfs, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(SparkContext, Map[String, String]),
+        Broadcast[SerializableConfiguration]]): Boolean = size > MaxConfs
+  }
+
+  /** `c`'s broadcast on `sc`: an earlier one of the same content, or a new
+    * one (true when reused).
+    */
+  private def broadcastConf(sc: SparkContext,
+      c: Configuration): (Broadcast[SerializableConfiguration], Boolean) = {
+    val key = (sc, c.iterator.asScala.map(e => e.getKey -> e.getValue).toMap)
+    val cached = confs.synchronized {
+      confs.keySet.removeIf(_._1.isStopped)
+      Option(confs.get(key))
+    }
+    cached.map(_ -> true).getOrElse {
+      val b = sc.broadcast(new SerializableConfiguration(c))
+      confs.synchronized(confs.put(key, b))
+      (b, false)
+    }
+  }
 
   /** `files` split and packed as Spark's `FileScan.partitions` does it: the
     * split size from the session and the files' total size, each file cut
@@ -1448,7 +1470,9 @@ private[catalog] object ParquetDelegate {
 
   /** Spark's parquet reader factory reading `readSchema` from files of
     * `fileSchema`, with `pushed` filters, over a conf carrying the scan's
-    * options and the keys `ParquetScan.createReaderFactory` sets.
+    * options and the keys `ParquetScan.createReaderFactory` sets. The
+    * factory (which holds `pushed`) is built per call; the conf's broadcast
+    * is shared with every earlier read whose prepared conf is the same.
     */
   def read(options: CaseInsensitiveStringMap, fileSchema: StructType,
       pushed: Array[sources.Filter], readSchema: StructType): Read = {
@@ -1471,9 +1495,9 @@ private[catalog] object ParquetDelegate {
     c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
     c.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
       sql.parquetReaderRespectUnknownTypeAnnotation)
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(c))
+    val (conf, reused) = broadcastConf(spark.sparkContext, c)
     Read(conf, ParquetPartitionReaderFactory(sql, conf, PlanShim.asNullable(fileSchema),
-      readSchema, new StructType(), pushed, None, new ParquetOptions(opts, sql)))
+      readSchema, new StructType(), pushed, None, new ParquetOptions(opts, sql)), reused)
   }
 }
 

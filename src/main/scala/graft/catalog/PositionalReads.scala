@@ -648,7 +648,8 @@ final case class GroupRun(byteStart: Long, byteEnd: Long, startPos: Long, rows: 
   * groups pruned by pushed-filter stats, and the columnar reader's
   * pass-through vs compacted batch split (pass-through should dominate
   * under sparse deletes — if compaction dominates, run
-  * rewrite_position_delete_files).
+  * rewrite_position_delete_files). One driver metric rides along: 1 when
+  * the scan's conf broadcast was an earlier scan's, 0 when it made one.
   */
 object LakeScanMetrics {
   import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
@@ -658,7 +659,8 @@ object LakeScanMetrics {
   // UI — a parameterized class fails that lookup (silently, per metric)
   val all: Array[CustomMetric] = Array(new TombstonedRowsMetric,
     new EqDeletedRowsMetric, new RowGroupsPrunedMetric,
-    new BatchesPassthroughMetric, new BatchesCompactedMetric)
+    new BatchesPassthroughMetric, new BatchesCompactedMetric,
+    new ConfBroadcastReusedMetric)
 
   final case class Value(name: String, value: Long) extends CustomTaskMetric
 }
@@ -682,6 +684,10 @@ final class BatchesPassthroughMetric extends org.apache.spark.sql.connector.metr
 final class BatchesCompactedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "batchesCompacted"
   override def description(): String = "columnar MoR batches compacted (tombstones hit)"
+}
+final class ConfBroadcastReusedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "confBroadcastReused"
+  override def description(): String = "scan conf broadcast reused from an earlier scan"
 }
 
 /** Shared split planning for the row and columnar positional readers:

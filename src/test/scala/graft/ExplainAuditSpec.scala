@@ -106,6 +106,28 @@ class ExplainAuditSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  test("a filtered lake read's formatted plan prints its literals as before") {
+    import org.apache.spark.sql.execution.ExplainUtils
+    val t = s"lake.audit.params${System.nanoTime() % 100000}"
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.audit")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(0, 100)")
+    val plan = spark.sql(s"SELECT v FROM $t WHERE id = 17 OR id BETWEEN 40 AND 42")
+      .queryExecution.executedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.catalog.LiteralParam]))),
+      s"the lake filter's literals must be parameters:\n$plan")
+    def formatted(p: org.apache.spark.sql.execution.SparkPlan): String = {
+      val sb = new StringBuilder
+      ExplainUtils.processPlan(p, s => { sb.append(s); () })
+      sb.toString
+    }
+    val literals = plan.transformAllExpressions { case graft.catalog.LiteralParam(l) => l }
+    val f = formatted(plan)
+    assert(f == formatted(literals), s"formatted plan changed:\n$f")
+    assert(f.contains("= 17)") && f.contains("40)") && plan.toString == literals.toString, f)
+    spark.sql(s"DROP TABLE $t")
+  }
+
   test("q70 resample: hourly agg is partial+final; the grid side broadcasts into the join") {
     val p = plan("q70_resample_ffill")
     assert(p.contains("BroadcastHashJoin"),

@@ -29,9 +29,10 @@ object ScanPlanningSpec {
 }
 
 /** Planning work per lake scan: the scan broadcasts its prepared Hadoop
-  * conf once (twice when equality-delete groups need their own read
-  * schema), hands Spark the same batch every time it asks, and rebuilds
-  * that batch only when a runtime filter prunes its files.
+  * conf at most once (twice when equality-delete groups read a wider
+  * schema), and not at all when an earlier read of the same shape did,
+  * hands Spark the same batch every time it asks, and rebuilds that batch
+  * only when a runtime filter prunes its files.
   */
 class ScanPlanningSpec extends AnyFunSuite {
   import graft.TestSpark._
@@ -49,6 +50,15 @@ class ScanPlanningSpec extends AnyFunSuite {
     val before = nextBroadcastId()
     val r = body
     (r, nextBroadcastId() - before - 1)
+  }
+
+  /** Runs `body` under a SQL conf no earlier read carried, so its reads
+    * share no conf broadcast with another test's (the suites share one
+    * session).
+    */
+  private def freshShape[T](body: => T): T = {
+    spark.conf.set("spark.graft.test.shape", uniq("shape"))
+    try body finally spark.conf.unset("spark.graft.test.shape")
   }
 
   private def lakeScan(plan: org.apache.spark.sql.execution.SparkPlan): LakeScan =
@@ -77,7 +87,7 @@ class ScanPlanningSpec extends AnyFunSuite {
     spark.sql(s"DELETE FROM $t WHERE id = 17")
 
     val df = spark.sql(s"SELECT * FROM $t WHERE id BETWEEN 10 AND 900")
-    val (plan, broadcasts) = broadcastsDuring(df.queryExecution.executedPlan)
+    val (plan, broadcasts) = freshShape(broadcastsDuring(df.queryExecution.executedPlan))
     assert(broadcasts == 1L, s"planning made $broadcasts broadcasts")
     assert(df.count() == 890L)
 
@@ -113,16 +123,69 @@ class ScanPlanningSpec extends AnyFunSuite {
       (1L to 100L by 10L).map(i => UpsRow(i, s"b$i", 2)),
       (5L to 100L by 10L).map(i => UpsRow(i, s"c$i", 3))))
 
-    val df = spark.sql(s"SELECT k, v FROM $t WHERE k > 0")
-    val (plan, broadcasts) = broadcastsDuring(df.queryExecution.executedPlan)
+    // the scan reads only v; the groups also read their key k
+    val df = spark.sql(s"SELECT v FROM $t")
+    val (plan, broadcasts) = freshShape(broadcastsDuring(df.queryExecution.executedPlan))
     val parts = plan.collect { case b: BatchScanExec => b }.flatMap(_.inputPartitions)
     val groups = parts.collect { case e: EqFilteredInputPartition => e.eqDeletePaths }.distinct
     assert(groups.size == 2, s"expected two equality-delete groups, got $groups")
     // the scan's conf, the equality-delete groups' conf, and the one
     // broadcast of the delete files' keys
     assert(broadcasts == 3L, s"planning made $broadcasts broadcasts")
-    val rows = df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(rows.size == 100 && rows(1L) == "b1" && rows(5L) == "c5" && rows(2L) == "a2")
+    val rows = df.collect().map(_.getString(0))
+    assert(rows.length == 100 && rows.distinct.length == 100, rows.toSeq)
+    assert(Seq("b1", "c5", "a2").forall(rows.contains) && !rows.contains("a1") && !rows.contains("a5"))
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  /** The scan's `confBroadcastReused` driver metric after `df` ran. */
+  private def confReused(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .head.metrics("confBroadcastReused").value
+  }
+
+  test("a second read of the same shape makes no conf broadcast") {
+    val t = s"lake.plan.${uniq("shape")}"
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.plan")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(0, 100)")
+    freshShape {
+      val first = spark.sql(s"SELECT v FROM $t WHERE id = 3")
+      val (_, b1) = broadcastsDuring(first.queryExecution.executedPlan)
+      assert(b1 == 1L, s"the first read made $b1 broadcasts")
+      assert(confReused(first) == 0L)
+      val second = spark.sql(s"SELECT v FROM $t WHERE id = 4")
+      val (_, b2) = broadcastsDuring(second.queryExecution.executedPlan)
+      assert(b2 == 0L, s"the second read made $b2 broadcasts")
+      assert(confReused(second) == 1L)
+      assert(second.collect().map(_.getString(0)).toSeq == Seq("v4"))
+    }
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("a changed SQL conf or read option makes a new conf broadcast") {
+    val t = s"lake.plan.${uniq("conf")}"
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.plan")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(0, 100)")
+    def planBroadcasts(df: => org.apache.spark.sql.DataFrame): Long =
+      broadcastsDuring(df.queryExecution.executedPlan)._2
+    freshShape {
+      val read = spark.sql(s"SELECT v FROM $t WHERE id = 3")
+      assert(planBroadcasts(read) == 1L)
+      assert(planBroadcasts(spark.sql(s"SELECT v FROM $t WHERE id = 5")) == 0L)
+      spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+      try {
+        val flipped = spark.sql(s"SELECT v FROM $t WHERE id = 6")
+        assert(planBroadcasts(flipped) == 1L, "a changed SQL conf must broadcast anew")
+        assert(confReused(flipped) == 0L)
+      } finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+      assert(planBroadcasts(spark.sql(s"SELECT v FROM $t WHERE id = 7")) == 0L)
+      val opt = spark.read.option("graft.test.read-option", "on").table(t).where("id = 8")
+      assert(planBroadcasts(opt) == 1L, "a read option must broadcast anew")
+      assert(opt.collect().map(_.getString(1)).toSeq == Seq("v8"))
+    }
     spark.sql(s"DROP TABLE $t")
   }
 }
