@@ -105,7 +105,7 @@ object CommitContentionBench {
       out.toString.getBytes("UTF-8"))
   }
 
-  private def runRound(writers: Int, commitsPer: Int, tables: Int = 1): String = {
+  private def runRound(writers: Int, commitsPer: Int, tables: Int): String = {
     val dirPath = java.nio.file.Files.createTempDirectory(s"contention$writers")
     // a 2,8,16,32 round set writes gigabytes of data and metadata files
     try round(dirPath.toString, writers, commitsPer, tables)

@@ -318,7 +318,7 @@ final class LakeDeltaBatchWrite(
     // die with it; eq-deletes fold once no surviving OLD file is strictly
     // older (rewritten files carry the new sequence — nothing to apply to)
     val covering = TombstoneRewrite.covering(base0.currentDeleteFiles, targets.toSeq)
-    val folded = TombstoneRewrite.foldable(spark, covering, targets, hadoopConf,
+    val folded = TombstoneRewrite.foldable(spark, covering, targets,
       allDeletes = base0.currentDeleteFiles)
     val keep = base0.currentFiles.filterNot(f => targets(f.path))
     val foldedEq = base0.currentEqDeleteFiles

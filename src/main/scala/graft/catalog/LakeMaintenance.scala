@@ -66,7 +66,7 @@ object LakeMaintenance {
       // range) so the rewrite can write them through and rows keep their
       // identity across the file shuffle
       lineage: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, input_file_name, lit, substring_index, when}
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, substring_index}
     val phys0 = meta.physicalSchema
     val phys = if (!lineage) phys0
       else StructType(phys0.fields ++ Seq(RowLineage.RidField, RowLineage.RseqField))
@@ -311,7 +311,7 @@ object LakeMaintenance {
       where: Option[String],
       maxFilesPerCommit: Int,
       exclude: Set[String],
-      heldLease: Option[String] = None): (Int, Int, Boolean, Seq[String]) = {
+      heldLease: Option[String]): (Int, Int, Boolean, Seq[String]) = {
     val (cat, ident, t) = resolve(spark, table)
     val current = t.meta.currentFiles
     val deletes = t.meta.currentDeleteFiles
@@ -348,7 +348,7 @@ object LakeMaintenance {
 
     val replaced = small.map(_.path).toSet
     val foldedDeletes = TombstoneRewrite.foldable(spark, covering, replaced,
-      hadoopConf, allDeletes = deletes)
+      allDeletes = deletes)
     // an eq-delete file folds when no surviving OLD file is strictly older
     // than it (rewritten files carry the commit's new sequence number, so
     // the delete can no longer apply to anything)
@@ -1270,7 +1270,7 @@ object LakeMaintenance {
       .flatten.map(_.copy(lineageCols = true))
     val replaced = current.map(_.path).toSet
     val foldedDeletes = TombstoneRewrite.foldable(spark, covering, replaced,
-      hadoopConf, allDeletes = deletes)
+      allDeletes = deletes)
     // whole-table rewrite: every eq delete folds (nothing older survives)
     commitManifest(cat, ident, t, hadoopConf, "zorder",
       replacedPaths = replaced ++ foldedDeletes ++ eqDeletes.map(_.path), newFiles = newFiles,
@@ -1465,7 +1465,7 @@ object LakeMaintenance {
           val targets = filesAt(s.snapshotId)
             .filter(f => TombstoneRewrite.covering(newDeletes, Seq(f.path)).nonEmpty)
           val raw = spark.read.schema(meta.physicalSchema).parquet(targets.map(_.path): _*)
-          Some(TombstoneRewrite.select(spark, raw, targets.map(_.path), newDeletes, hadoopConf)
+          Some(TombstoneRewrite.select(spark, raw, newDeletes, hadoopConf)
             .toDF(logicalNames: _*)
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_snapshot_id", lit(s.snapshotId)))
@@ -1715,7 +1715,6 @@ object LakeMaintenance {
   * simply omitted — missing stats mean "always scan", never wrong pruning.
   */
 private[catalog] object FooterStats {
-  import org.apache.parquet.column.statistics.Statistics
   import org.apache.parquet.io.api.Binary
   import org.apache.spark.sql.types._
   import scala.jdk.CollectionConverters._

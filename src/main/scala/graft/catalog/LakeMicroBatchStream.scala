@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.graft.PlanShim
@@ -62,8 +61,7 @@ final class LakeMicroBatchStream(
     ident: String,
     tableSchema: StructType,
     refresh: () => TableMeta,
-    options: CaseInsensitiveStringMap,
-    hadoopConf: Configuration)
+    options: CaseInsensitiveStringMap)
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow
   with ReportsSourceMetrics {
 
@@ -291,7 +289,7 @@ final class LakeMicroBatchStream(
     val files = pendingFiles(meta, s, e.snapshotId).filter { p =>
       p.snapshotId < e.snapshotId || e.pos < 0 || p.idx < e.pos
     }.map(_.file)
-    ParquetDelegate.partitions(files)
+    ParquetDelegate.partitions(files).toArray[InputPartition]
   }
 
   // the parquet reader factory is file-independent (schema + conf): every

@@ -244,12 +244,6 @@ object LakeProcedures {
     }
   }
 
-  // args arrive as an InternalRow in declared parameter order; string
-  // accessors below keep the call sites terse
-  private implicit class Args(val r: InternalRow) {
-    def getString(i: Int): String = r.getUTF8String(i).toString
-  }
-
   private def in(name: String, dt: DataType): ProcedureParameter =
     ProcedureParameter.in(name, dt).build()
   private def inDef(name: String, dt: DataType, default: String): ProcedureParameter =

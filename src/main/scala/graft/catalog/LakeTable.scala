@@ -202,7 +202,7 @@ final class LakeTable(
           val loc = store.load(namespace, tableName).getOrElse(
             throw new IllegalStateException(s"table $ident dropped during streaming read"))
           TableMeta.read(loc, hadoopConf)
-        }, options, hadoopConf)),
+        }, options)),
       partitionCols = meta.partitionColumns,
       allPartitionCols = meta.allPartitionColumns,
       l2p = meta.l2pMap,
@@ -353,8 +353,7 @@ final class LakeTable(
           Seq(RowLineage.RidField, RowLineage.RseqField))
         val raw = spark.read.schema(physLineage)
           .parquet(affected.map(_.path): _*)
-        val untombed = TombstoneRewrite.subtract(spark, raw, affected.map(_.path),
-          covering, hadoopConf)
+        val untombed = TombstoneRewrite.subtract(spark, raw, covering, hadoopConf)
         val withLin = RowLineage.inherit(spark,
           untombed
             .withColumn("__gname", substring_index(col("_metadata.file_path"), "/", -1))
@@ -382,7 +381,7 @@ final class LakeTable(
     // with it — that's what puts the surviving files back on the
     // vectorized read path
     val foldedDeletes = TombstoneRewrite.foldable(spark, covering, affectedPaths,
-      hadoopConf, allDeletes = scanDeletes)
+      allDeletes = scanDeletes)
     val scanDeletePaths = scanDeletes.map(_.path).toSet
     // rebase against concurrent appends: keep everything currently live
     // except the files this delete rewrote — but only if those files ARE
@@ -508,7 +507,7 @@ final class LakeRowLevelOperation(
           val scanDeletes = table.meta.currentDeleteFiles
           val foldedDeletes = TombstoneRewrite.foldable(spark,
             TombstoneRewrite.covering(scanDeletes, scanned.map(_.path)),
-            replacedPaths, hadoopConf, allDeletes = scanDeletes)
+            replacedPaths, allDeletes = scanDeletes)
           // the scan's baseline covers BOTH delete kinds: it applied the
           // current eq-deletes too, so only ones committed AFTER the scan
           // may conflict (without this, any CoW command on an upserted
@@ -840,7 +839,8 @@ final class LakeScan(
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     LakeScanMetrics.all
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LakeScanMetrics.Value("confBroadcastReused", if (parquet.confReused) 1L else 0L))
+    Array(LakeScanMetrics.Value("confBroadcastReused",
+      if (reads.values.asScala.forall(_.confReused)) 1L else 0L))
 
   // one eq-key load per delete FILE per scan (the once-per-query IO
   // contract, open-count asserted in UpsertSpec), shared by the broadcast
@@ -865,8 +865,9 @@ final class LakeScan(
     })
 
   // the required schema splits into data columns (delegated to parquet) and
-  // requested metadata columns (_file/_pos, appended by positional readers);
-  // Spark appends metadata columns after data columns, preserved here
+  // requested metadata columns (_file/_pos/lineage, appended by the
+  // merge-on-read readers); Spark appends metadata columns after data
+  // columns, preserved here
   private val metaCols: Seq[String] =
     requiredSchema.fields.map(_.name).filter(LakeMetaCols.isMeta).toSeq
   private val requiredDataSchema: StructType =
@@ -972,13 +973,15 @@ final class LakeScan(
   // translated once per scan
   @transient private lazy val pushed: Array[sources.Filter] =
     org.apache.spark.sql.graft.PlanShim.parquetFilters(SparkSession.active, physSchema, physExprs)
+  // ONE read per read schema per scan — the requested columns, and a
+  // merge-on-read batch's wider layout — over the conf broadcast every read
+  // of the same shape shares (made only by the first): both are
+  // file-independent, so a batch rebuilt by runtime filtering reuses them
+  @transient private lazy val reads =
+    new java.util.concurrent.ConcurrentHashMap[StructType, ParquetDelegate.Read]()
   private def readOver(readSchema: StructType): ParquetDelegate.Read =
-    ParquetDelegate.read(options, physSchema, pushed, readSchema)
-  // ONE reader factory per scan, over the conf broadcast every read of the
-  // same shape shares (made only by the first): both are file-independent,
-  // so runtime filtering keeps them, and the plain, the key-grouped and the
-  // mixed batch, and the positional readers, share them
-  @transient private lazy val parquet: ParquetDelegate.Read = readOver(physRequired)
+    reads.computeIfAbsent(readSchema, s => ParquetDelegate.read(options, physSchema, pushed, s))
+  private def parquet: ParquetDelegate.Read = readOver(physRequired)
 
   override def filterAttributes(): Array[NamedReference] =
     runtimeFilterCols.map(Expressions.column).toArray
@@ -1078,7 +1081,7 @@ final class LakeScan(
   }
   private def computeKeyGroups: Option[Seq[(InternalRow, Seq[DataFileMeta])]] =
     // no SPJ when metadata columns are requested or tombstones are pending:
-    // those files read through positional partitions, which don't carry keys
+    // those files read through merge-on-read partitions, which don't carry keys
     if (partitionCols.isEmpty || files.isEmpty || metaCols.nonEmpty ||
         files.exists(f => coveringDeletes(f).nonEmpty || eqApplicable(f).nonEmpty)) None
     else {
@@ -1316,26 +1319,24 @@ final class LakeScan(
     batchV
   }
 
+  /** A scan none of whose files has deletes, and that requests no metadata
+    * column, reads through the scan's one parquet factory (key-grouped when
+    * the files partition cleanly). Otherwise the files that need graft's
+    * delete mask — POSITION-tombstoned files, files with applicable
+    * equality deletes, and every file when `_file`/`_pos`/lineage columns
+    * are requested — read through Spark's parquet factory with the mask on
+    * top ([[LakeMixedBatch]]).
+    */
   private def newBatch: org.apache.spark.sql.connector.read.Batch = {
     val dirty = files.map(f => (f, coveringDeletes(f), eqApplicable(f)))
-    // POSITION-tombstoned files (and every file, when _file/_pos are
-    // requested) read through SPLIT-PARALLEL positional readers whose
-    // exact start ordinals come from the footer (row or columnar per the
-    // schema; row groups the pushed filters disprove are skipped). Files
-    // dirtied ONLY by equality deletes keep the delegate's split-planned,
-    // filter-pushed parquet reader with a key anti-filter above it: one
-    // upsert epoch must not knock the table's older files off the
-    // pushdown path. Clean files keep the vectorized delegate untouched.
     if (metaCols.nonEmpty || dirty.exists(d => d._2.nonEmpty || d._3.nonEmpty)) {
-      val (tomb, rest) =
+      val (positional, rest) =
         if (metaCols.nonEmpty) (dirty, Nil)
         else dirty.partition(_._2.nonEmpty)
       val (eqOnly, clean) = rest.partition(_._3.nonEmpty)
-      new LakeMixedBatch(physRequired, physExprs, parquet, readOver,
-        clean.map(_._1), tomb, metaCols,
-        eqKeySchemaJson = eqKeySchema.map(_.json).getOrElse(""),
-        eqOnly = eqOnly.map(d => (d._1, d._3)),
-        eqKeysFor = eqKeysFor)
+      new LakeMixedBatch(physRequired, readOver, clean.map(_._1), positional,
+        eqOnly.map(d => (d._1, d._3)), metaCols,
+        eqKeySchema.getOrElse(new StructType()), eqKeysFor)
     } else keyedBatch.getOrElse(new LakeFileBatch(files, parquet.factory))
   }
   override def toMicroBatchStream(
@@ -1369,7 +1370,7 @@ final class LakeKeyGroupedBatch(
 
   private lazy val parts: Array[InputPartition] = groups.flatMap { case (key, files) =>
     ParquetDelegate.partitions(files).map(p => KeyedInputPartition(p, key))
-  }.toArray
+  }.toArray[InputPartition]
 
   override def planInputPartitions(): Array[InputPartition] = parts
   override def createReaderFactory(): PartitionReaderFactory = new UnwrappingReaderFactory(factory)
@@ -1383,7 +1384,7 @@ final class LakeFileBatch(
 
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  private lazy val parts = ParquetDelegate.partitions(files)
+  private lazy val parts = ParquetDelegate.partitions(files).toArray[InputPartition]
 
   override def planInputPartitions(): Array[InputPartition] = parts
   override def createReaderFactory(): PartitionReaderFactory = factory
@@ -1400,19 +1401,18 @@ private[catalog] object ParquetDelegate {
   import org.apache.hadoop.fs.FileStatus
   import org.apache.spark.SparkContext
   import org.apache.spark.broadcast.Broadcast
-  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.connector.read.PartitionReaderFactory
   import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata}
+  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionedFile}
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport}
   import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
   import org.apache.spark.sql.graft.PlanShim
   import org.apache.spark.sql.internal.SQLConf
 
   /** A parquet read: the broadcast conf, the factory that reads with it,
-    * and whether the conf's broadcast was an earlier read's. Positional
-    * readers take the same conf and set their own keys on a copy
-    * ([[PositionalParquet.readerConf]]), so a shared value is never
-    * mutated.
+    * and whether the conf's broadcast was an earlier read's. Tombstone
+    * loads take the same conf and set their own keys on a copy, so a shared
+    * value is never mutated.
     */
   final case class Read(conf: Broadcast[SerializableConfiguration],
       factory: PartitionReaderFactory, confReused: Boolean)
@@ -1446,27 +1446,43 @@ private[catalog] object ParquetDelegate {
     }
   }
 
-  /** `files` split and packed as Spark's `FileScan.partitions` does it: the
-    * split size from the session and the files' total size, each file cut
-    * into splits of at most that size, largest first, packed into
-    * partitions. Sizes come from the manifest; splits carry no host
-    * preference.
+  /** Each of `files` cut as Spark's `FileScan.partitions` cuts it: the
+    * split size from the session and the files' total size, each file into
+    * splits of at most that size. Sizes come from the manifest; splits carry
+    * no host preference.
     */
-  def partitions(files: Seq[DataFileMeta]): Array[InputPartition] = {
-    if (files.isEmpty) return Array.empty
+  private def splits(files: Seq[DataFileMeta]): (Long, Seq[Seq[PartitionedFile]]) = {
     val spark = SparkSession.active
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.sizeBytes + openCost).sum)
-    val splits = files.flatMap { f =>
+    (maxSplit, files.map { f =>
       val raw = new Path(f.path)
       val path = raw.getFileSystem(hadoopConf).makeQualified(raw)
       PartitionedFileUtil.splitFiles(
         FileStatusWithMetadata(new FileStatus(f.sizeBytes, false, 0, 0L, 0L, path)),
         path, isSplitable = true, maxSplit, InternalRow.empty)
-    }.sortBy(-_.length)
-    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
+    })
   }
+
+  /** `files` split and packed as Spark's `FileScan.partitions` does it:
+    * the [[splits]], largest first, packed into partitions.
+    */
+  def partitions(files: Seq[DataFileMeta]): Array[FilePartition] =
+    if (files.isEmpty) Array.empty
+    else {
+      val (maxSplit, perFile) = splits(files)
+      FilePartition.getFilePartitions(SparkSession.active,
+        perFile.flatten.sortBy(-_.length), maxSplit).toArray
+    }
+
+  /** The [[splits]] of `items`' files, one split per partition, each with
+    * the item it came from.
+    */
+  def splitPartitions[T](items: Seq[T])(file: T => DataFileMeta): Seq[(T, FilePartition)] =
+    items.zip(splits(items.map(file))._2)
+      .flatMap { case (item, ss) => ss.map(item -> _) }
+      .zipWithIndex.map { case ((item, s), i) => item -> FilePartition(i, Array(s)) }
 
   /** Spark's parquet reader factory reading `readSchema` from files of
     * `fileSchema`, with `pushed` filters, over a conf carrying the scan's
@@ -1501,130 +1517,72 @@ private[catalog] object ParquetDelegate {
   }
 }
 
-/** A batch mixing the vectorized parquet delegate (clean files) with
-  * whole-file positional row readers (files that have pending merge-on-read
-  * tombstones, or any file when `_file`/`_pos` metadata columns are
-  * requested). One scan, one reader factory, per-partition columnar
-  * dispatch — deletes tax exactly the files they touch, and compaction
-  * puts files back on the vectorized path. `read` is the scan's parquet
-  * read over `physRequired`; `readOver` builds the one extra read the
-  * equality-delete groups share.
+/** A batch of a scan some of whose files need graft's delete mask. Files
+  * with positional tombstones — every file, when `_file`/`_pos`/lineage
+  * columns are requested — read one split per partition, cut as clean
+  * files are cut; files dirtied only by equality deletes pack per
+  * applicable delete set, so an upsert epoch adds no tasks. Both read
+  * through Spark's parquet factory over the batch's [[MorLayout]] with the
+  * mask on top ([[LakeReaderFactory]]), so row-group pruning, rebasing and
+  * time zones are Spark's, as on clean files. Clean files pack as on a
+  * clean scan and keep the scan's own read, unless the merge-on-read read
+  * fetches no stored column they do not: then they share it, and the batch
+  * needs one conf broadcast. `readOver` is the scan's memoized read per
+  * read schema.
   */
 final class LakeMixedBatch(
     physRequired: StructType,
-    // pushed data filters under PHYSICAL names — positional readers prune
-    // row groups by footer stats against these (best-effort; every filter
-    // is also a post-scan Filter)
-    physExprs: Seq[Expression],
-    read: ParquetDelegate.Read,
     readOver: StructType => ParquetDelegate.Read,
     cleanFiles: Seq[DataFileMeta],
-    tombstoned: Seq[(DataFileMeta, Seq[DeleteSlice], Seq[String])],
+    positional: Seq[(DataFileMeta, Seq[DeleteSlice], Seq[String])],
+    eqOnly: Seq[(DataFileMeta, Seq[String])],
     metaCols: Seq[String],
-    eqKeySchemaJson: String = "",
-    eqOnly: Seq[(DataFileMeta, Seq[String])] = Nil,
-    eqKeysFor: Seq[String] => org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = null)
+    eqKeySchema: StructType,
+    eqKeysFor: Seq[String] => org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]])
   extends org.apache.spark.sql.connector.read.Batch {
 
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  private val physReadSchemaJson = physRequired.json
-
-  private lazy val delegatePlanned: Option[(Array[InputPartition], PartitionReaderFactory)] =
-    if (cleanFiles.isEmpty) None
-    else Some((ParquetDelegate.partitions(cleanFiles), read.factory))
-
   // eq-only files group by their applicable delete set (≈ one group per
-  // epoch boundary); each group keeps the delegate's split planning, pushed
-  // filters and row-group pruning, reading requested ∪ key columns so the
-  // anti-filter can see the key — one factory over that schema serves all
+  // epoch boundary)
   private lazy val eqGroups: Seq[(Seq[String], Seq[DataFileMeta])] =
     eqOnly.groupBy(_._2.sorted).toSeq.sortBy(_._1.mkString(","))
       .map { case (eqPaths, fs) => (eqPaths, fs.map(_._1)) }
 
-  private lazy val eqKeySchema: StructType =
-    if (eqKeySchemaJson.isEmpty) new StructType()
-    else DataType.fromJson(eqKeySchemaJson).asInstanceOf[StructType]
+  private lazy val eqPaths: Seq[String] =
+    (positional.flatMap(_._3) ++ eqGroups.flatMap(_._1)).distinct
 
-  private lazy val eqUnionSchema: StructType = StructType(physRequired.fields ++
-    eqKeySchema.fields.filterNot(f => physRequired.fieldNames.contains(f.name)))
+  private lazy val layout = MorLayout.of(physRequired,
+    keys = if (eqPaths.isEmpty) new StructType() else eqKeySchema,
+    lineage = metaCols.exists(LakeMetaCols.isLineage) && positional.exists(_._1.lineageCols),
+    rowIndex = positional.nonEmpty, metaCols)
+  private lazy val mor = readOver(layout.read)
+  private lazy val cleanViaMor = !layout.readsExtraColumns
+  private lazy val clean = if (cleanViaMor || cleanFiles.isEmpty) mor else readOver(physRequired)
 
-  private lazy val eqFactory: Option[PartitionReaderFactory] =
-    if (eqGroups.isEmpty) None else Some(readOver(eqUnionSchema).factory)
-
-  private lazy val eqParts: Seq[Array[InputPartition]] =
-    eqGroups.map { case (_, fs) => ParquetDelegate.partitions(fs) }
-
-  // ONE driver-side load + broadcast of every applicable delete file's keys
-  // per query (memoized by the owning scan) — readers look keys up instead
-  // of re-opening delete files
-  private lazy val eqBroadcast
-      : org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = {
-    val allPaths = (tombstoned.flatMap(_._3) ++ eqGroups.flatMap(_._1)).distinct
-    if (allPaths.isEmpty) null else eqKeysFor(allPaths)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    delegatePlanned.map(_._1).getOrElse(Array.empty[InputPartition]) ++
-      tombstoned.flatMap { case (f, dels, eqs) =>
-        // split-parallel positional reads: byte ranges at the session's
-        // split size, planned BLIND (no footer IO — O(files) driver cost);
-        // each task resolves its range to whole row groups + an exact
-        // start position from the footer it opens anyway. A 1 GB dirty
-        // file reads as ~8 tasks instead of one whole-file task.
-        val maxBytes = math.max(1L,
-          SparkSession.active.sessionState.conf.filesMaxPartitionBytes)
-        val n = math.min(1L + (math.max(f.sizeBytes, 1L) - 1L) / maxBytes, 32768L).toInt
-        val step = (math.max(f.sizeBytes, 1L) + n - 1) / n
-        (0 until n).map { i =>
-          PositionalInputPartition(f.path, dels, physReadSchemaJson, metaCols,
-            eqs, if (eqs.isEmpty) "" else eqKeySchemaJson,
-            splitStart = i.toLong * step,
-            splitEnd = if (i == n - 1) Long.MaxValue else (i + 1).toLong * step,
-            firstRowId = f.firstRowId, addedSeq = f.addedAt,
-            lineageCols = f.lineageCols,
-            filters = physExprs)
-        }
+  private lazy val parts: Array[InputPartition] = {
+    val cleanParts = ParquetDelegate.partitions(cleanFiles)
+    (if (cleanViaMor) cleanParts.map(p => MorInputPartition(p)) else cleanParts).toSeq ++
+      ParquetDelegate.splitPartitions(positional)(_._1).map { case ((f, dels, eqs), p) =>
+        MorInputPartition(p, eqs, f.path, dels, f.firstRowId, f.addedAt)
       } ++
-      eqGroups.zip(eqParts).flatMap { case ((eqPaths, _), parts) =>
-        parts.map(p => EqFilteredInputPartition(p, eqPaths,
-          eqKeySchemaJson, eqUnionSchema.json, physRequired.length))
+      eqGroups.flatMap { case (paths, fs) =>
+        ParquetDelegate.partitions(fs).map(p => MorInputPartition(p, paths))
       }
+  }.toArray
+
+  override def planInputPartitions(): Array[InputPartition] = parts
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // vectorized MoR: when every requested (and eq-key) column is of a
-    // supported type (flat primitives/decimals, and nested arrays/structs/
-    // maps of them since r10) AND every delegate partition supports
-    // columnar, the WHOLE scan stays vectorized — tombstoned files read
-    // through the columnar positional reader instead of knocking the scan
-    // to row mode. Spark requires scan-wide agreement: decided here, once.
-    val flatOk = ColumnarSupport.ok(physRequired) &&
-      ColumnarSupport.ok(eqKeySchema) && metaColsOk
-    def allColumnar(parts: Array[InputPartition], fac: PartitionReaderFactory) =
-      parts.forall(fac.supportColumnarReads)
-    // driver-side system property, default on; "false" keeps every file on
-    // the row reader, which MergeOnReadSpec and RowLineageSpec use as the
-    // reference the columnar reader must match
-    val enabled = !"false".equals(System.getProperty("graft.mor.columnar"))
-    val columnar = enabled && flatOk &&
-      delegatePlanned.forall { case (parts, fac) => allColumnar(parts, fac) } &&
-      eqFactory.forall(fac => eqParts.forall(allColumnar(_, fac)))
-    // the Hadoop conf ships once per scan, as Spark's ParquetScan ships it:
-    // inside the factory, every positional task deserialized all of it
-    new LakeReaderFactory(read.conf, delegatePlanned.map(_._2),
-      forceRows = !columnar && (tombstoned.nonEmpty || eqGroups.nonEmpty),
-      eqDelegate = eqFactory,
-      eqKeys = eqBroadcast,
-      columnar = columnar)
+    // the whole scan reads vectorized when Spark's factories support every
+    // partition and the requested columns can be compacted
+    val columnar = ColumnarSupport.ok(physRequired) && parts.forall {
+      case m: MorInputPartition => mor.factory.supportColumnarReads(m.inner)
+      case p => clean.factory.supportColumnarReads(p)
+    }
+    new LakeReaderFactory(clean.factory, mor.factory, layout, mor.conf,
+      if (eqPaths.isEmpty) null else eqKeysFor(eqPaths), columnar)
   }
-
-  // all four metadata columns are flat longs/strings — including lineage
-  // over MATERIALIZED files (the columnar reader reads the file-sourced
-  // _graft_rid/_graft_rseq columns and splices value-wins/null-inherits
-  // per row, same contract as the row reader), so after compaction a
-  // lineage scan stays vectorized
-  private def metaColsOk: Boolean = metaCols.forall(m =>
-    ColumnarSupport.flat(LakeMetaCols.fieldOf(m).dataType))
 }
 
 /** An input partition tagged with its partition-key row. */

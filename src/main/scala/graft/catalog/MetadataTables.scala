@@ -2,8 +2,6 @@ package graft.catalog
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}

@@ -1,42 +1,22 @@
 package graft.catalog
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-// the OLD mapred FileSplit: Spark's SpecificParquetRecordReaderBase casts
-// to it (it extends the mapreduce one, so it satisfies both signatures)
-import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** VECTORIZED merge-on-read: the columnar twin of [[PositionalRowReader]].
-  *
-  * Spark requires every partition of one scan to agree on columnar
-  * support, so before this reader existed ONE tombstoned file knocked the
-  * whole scan — including its clean files — off the vectorized path. Now
-  * a dirty file reads through Spark's own [[VectorizedParquetRecordReader]]
-  * (the exact decoder clean parquet scans use) over the same footer-exact
-  * [[GroupRun]] ranges as the row reader, and tombstones apply at BATCH
-  * granularity: a batch whose position range contains no tombstone (and
-  * no equality-delete key hit) passes through untouched — zero copies, the
-  * common case when deletes are sparse — while a dirty batch compacts its
-  * survivors into fresh on-heap vectors. `_file`/`_pos` metadata columns
-  * ride as a constant vector and a refilled position vector. Eligibility
-  * is decided at planning ([[ColumnarSupport.ok]]): any schema of
-  * supported types — flat primitives/decimals AND (since r10) nested
-  * arrays/structs/maps of them, compacted by the recursive append-based
-  * [[ColumnarSupport.appendValue]] copy, so an embeddings table
-  * (array<float>) carrying MoR tombstones reads vectorized too.
+/** The types a vectorized merge-on-read scan can compact
+  * ([[MorColumnarReader]]). Spark requires every partition of one scan to
+  * agree on columnar support, so a scan with dirty files stays vectorized
+  * only when every requested column is of a type listed here — flat
+  * primitives/decimals and (since r10) nested arrays/structs/maps of them,
+  * copied by the recursive append-based [[appendValue]], so an embeddings
+  * table (array<float>) carrying MoR tombstones reads vectorized too.
   */
 object ColumnarSupport {
-  /** Types the columnar positional path can pass through AND compact. */
+  /** Types the columnar merge-on-read path can pass through AND compact. */
   def flat(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | LongType |
          FloatType | DoubleType | DateType | TimestampType | TimestampNTZType |
@@ -130,323 +110,113 @@ object ColumnarSupport {
 
 }
 
-final class PositionalColumnarReader(
-    part: PositionalInputPartition,
-    conf: Configuration,
-    eqKeys: java.util.HashSet[UnsafeRow])
+/** Columnar merge-on-read: the batches of Spark's vectorized parquet
+  * reader, masked at batch granularity. A batch none of whose rows the mask
+  * drops passes through untouched — zero copies, the common case when
+  * deletes are sparse — with the requested metadata columns appended: a
+  * constant `_file` vector, the row-index vector as `_pos`, and lineage
+  * vectors refilled per batch (materialized value wins, NULL inherits, as
+  * in [[MorRowReader]]). A batch that loses rows compacts its survivors
+  * into fresh on-heap vectors ([[ColumnarSupport.appendValue]]).
+  */
+final class MorColumnarReader(
+    inner: PartitionReader[ColumnarBatch],
+    part: MorInputPartition,
+    layout: MorLayout,
+    mask: MorMask)
   extends PartitionReader[ColumnarBatch] {
 
-  private val outSchema =
-    DataType.fromJson(part.physDataSchemaJson).asInstanceOf[StructType]
-  private val keySchema: StructType =
-    if (part.eqDeletePaths.isEmpty) new StructType()
-    else DataType.fromJson(part.eqKeySchemaJson).asInstanceOf[StructType]
-  // lineage-requesting reads of a MATERIALIZED file also read the
-  // _graft_rid/_graft_rseq columns, exactly like the row reader: the
-  // file's value wins, NULL inherits the file's range/sequence
-  private val needLineageCols =
-    part.lineageCols && part.metaCols.exists(LakeMetaCols.isLineage)
-  private val readSchema = StructType(outSchema.fields ++
-    keySchema.fields.filterNot(f => outSchema.fieldNames.contains(f.name)) ++
-    (if (needLineageCols) Seq(RowLineage.RidField, RowLineage.RseqField) else Nil))
-  private val ridCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rid) else -1
-  private val rseqCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rseq) else -1
-
-  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf)
-  private var tombstonedRows = 0L
-  private var eqDeletedRows = 0L
-  private var passthrough = 0L
-  private var compacted = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LakeScanMetrics.Value("tombstonedRows", tombstonedRows),
-      LakeScanMetrics.Value("eqDeletedRows", eqDeletedRows),
-      LakeScanMetrics.Value("rowGroupsPruned", prunedGroups),
-      LakeScanMetrics.Value("batchesPassthrough", passthrough),
-      LakeScanMetrics.Value("batchesCompacted", compacted))
-
-  private val rowKeyProj =
-    if (eqKeys == null || eqKeys.isEmpty) null
-    else UnsafeProjection.create(keySchema.fields.map { f =>
-      val i = readSchema.fieldIndex(f.name)
-      BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-    })
-
+  private val out = layout.out
+  private val rowIndex = layout.rowIndex
   private val Capacity = 4096
-  // appended metadata vectors: constant _file; _pos refilled per batch
-  private val fileVector: ConstantColumnVector =
-    if (part.metaCols.contains(LakeMetaCols.File)) {
+  private val file: ConstantColumnVector =
+    if (layout.metaCols.contains(LakeMetaCols.File)) {
       val v = new ConstantColumnVector(Capacity, StringType)
       v.setUtf8String(UTF8String.fromString(part.dataPath))
       v
     } else null
-  private val posVector: OnHeapColumnVector =
-    if (part.metaCols.contains(LakeMetaCols.Pos))
-      new OnHeapColumnVector(Capacity, LongType)
-    else null
-  // row lineage: COMPUTED (`firstRowId + pos`, per-file-constant sequence)
-  // unless the file carries MATERIALIZED lineage columns, in which case the
-  // file's value wins per row and NULL inherits the computed one — the
-  // same contract as the row reader, refilled into long vectors per batch
-  private val rowIdVector: OnHeapColumnVector =
-    if (part.metaCols.contains(LakeMetaCols.RowId))
-      new OnHeapColumnVector(Capacity, LongType)
-    else null
-  private val seqVector: ConstantColumnVector =
-    if (part.metaCols.contains(LakeMetaCols.LastSeq) && !needLineageCols) {
-      val v = new ConstantColumnVector(Capacity, LongType)
-      if (part.addedSeq > 0) v.setLong(part.addedSeq) else v.setNull()
-      v
-    } else null
-  private val seqVarVector: OnHeapColumnVector =
-    if (part.metaCols.contains(LakeMetaCols.LastSeq) && needLineageCols)
-      new OnHeapColumnVector(Capacity, LongType)
-    else null
-  private def metaVectorOf(name: String): ColumnVector = name match {
-    case LakeMetaCols.File => fileVector
-    case LakeMetaCols.Pos => posVector
-    case LakeMetaCols.RowId => rowIdVector
-    case LakeMetaCols.LastSeq => if (seqVarVector != null) seqVarVector else seqVector
-  }
-  /** Refill lineage vectors for rows at positions startPos..startPos+n-1
-    * of a pass-through batch (file-sourced value wins, NULL inherits).
-    */
-  private def fillLineage(batch: ColumnarBatch, startPos: Long, n: Int): Unit = {
-    if (rowIdVector != null) {
-      rowIdVector.reset()
-      val src = if (ridCol >= 0) batch.column(ridCol) else null
-      var i = 0
-      while (i < n) {
-        if (src != null && !src.isNullAt(i)) rowIdVector.putLong(i, src.getLong(i))
-        else if (part.firstRowId > 0) rowIdVector.putLong(i, part.firstRowId + startPos + i)
-        else rowIdVector.putNull(i)
-        i += 1
-      }
-    }
-    if (seqVarVector != null) {
-      seqVarVector.reset()
-      val src = batch.column(rseqCol)
-      var i = 0
-      while (i < n) {
-        if (!src.isNullAt(i)) seqVarVector.putLong(i, src.getLong(i))
-        else if (part.addedSeq > 0) seqVarVector.putLong(i, part.addedSeq)
-        else seqVarVector.putNull(i)
-        i += 1
-      }
-    }
-  }
+  private def longs(name: String): OnHeapColumnVector =
+    if (layout.metaCols.contains(name)) new OnHeapColumnVector(Capacity, LongType) else null
+  private val rowIds = longs(LakeMetaCols.RowId)
+  private val seqs = longs(LakeMetaCols.LastSeq)
 
-  private var runIdx = -1
-  private var reader: VectorizedParquetRecordReader = _
-  private var runRowsSeen = 0L
-  private var delIdx = 0
+  private var passthrough = 0L
+  private var compacted = 0L
   private var current: ColumnarBatch = _
   private var copied: ColumnarBatch = _ // last compacted batch (we own it)
 
-  private def advanceRun(): Boolean = {
-    runIdx += 1
-    if (runIdx >= runs.length) return false
-    val r = runs(runIdx)
-    val c = PositionalParquet.readerConf(readSchema, conf)
-    // the vectorized base reader resolves its ReadSupport from the conf
-    // (ParquetFileFormat does the same for normal scans)
-    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport].getName)
-    val split = new FileSplit(new Path(part.dataPath),
-      r.byteStart, r.byteEnd - r.byteStart, Array.empty[String])
-    val ctx = new TaskAttemptContextImpl(c,
-      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
-    // same rebase stance as the row path: our writer stamps CORRECTED
-    val vr = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, Capacity)
-    vr.initialize(split, ctx)
-    vr.initBatch(new StructType(), InternalRow.empty)
-    vr.enableReturningBatches()
-    reader = vr
-    runRowsSeen = 0L
-    true
-  }
-
-  private def closeCopied(): Unit =
-    if (copied != null) { copied.close(); copied = null }
-
-  override def next(): Boolean = {
-    closeCopied()
-    while (true) {
-      if (reader == null && !advanceRun()) return false
-      if (!reader.nextKeyValue()) {
-        // self-verifying, like the row path: a range/row-count mismatch
-        // must fail loudly, never ship silently shifted positions
-        if (runRowsSeen != runs(runIdx).rows) throw new IllegalStateException(
-          s"columnar run [${runs(runIdx).byteStart},${runs(runIdx).byteEnd}) of " +
-            s"${part.dataPath} read $runRowsSeen rows, footer says ${runs(runIdx).rows}")
-        reader.close()
-        reader = null
-      } else {
-        val batch = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-        val n = batch.numRows()
-        val start = runs(runIdx).startPos + runRowsSeen
-        runRowsSeen += n
-
-        // tombstoned positions inside [start, start + n)
-        while (delIdx < deleted.length && deleted(delIdx) < start) delIdx += 1
-        val delFrom = delIdx
-        var delTo = delIdx
-        while (delTo < deleted.length && deleted(delTo) < start + n) delTo += 1
-        delIdx = delTo
-
-        def eqKilled(i: Int): Boolean =
-          rowKeyProj != null && eqKeys.contains(rowKeyProj(batch.getRow(i)))
-
-        val hasEq = rowKeyProj != null
-        if (delFrom == delTo && !hasEq) {
-          // clean batch: pass through, appending metadata vectors
-          if (posVector != null) {
-            posVector.reset()
-            var i = 0
-            while (i < n) { posVector.putLong(i, start + i); i += 1 }
-          }
-          fillLineage(batch, start, n)
-          passthrough += 1
-          current = withMeta(dataVectors(batch), n)
-          return true
-        }
-        // dirty batch: compact survivors into fresh on-heap vectors
-        val live = new Array[Int](n)
-        var m = 0
-        var i = 0
-        var d = delFrom
-        while (i < n) {
-          val pos = start + i
-          while (d < delTo && deleted(d) < pos) d += 1
-          val tomb = d < delTo && deleted(d) == pos
-          if (tomb) tombstonedRows += 1
-          else if (eqKilled(i)) eqDeletedRows += 1
-          else { live(m) = i; m += 1 }
-          i += 1
-        }
-        if (m == n) { // every row survived the eq check after all
-          if (posVector != null) {
-            posVector.reset()
-            var j = 0
-            while (j < n) { posVector.putLong(j, start + j); j += 1 }
-          }
-          fillLineage(batch, start, n)
-          passthrough += 1
-          current = withMeta(dataVectors(batch), n)
-          return true
-        }
-        if (m > 0) {
-          val out = OnHeapColumnVector.allocateColumns(m, outWithMetaSchema)
-          // row-major APPEND copy (handles nested types; flat columns hit
-          // the same primitive append fast paths the old put copy used)
-          var j = 0
-          while (j < m) {
-            val row = batch.getRow(live(j))
-            var c2 = 0
-            while (c2 < outSchema.length) {
-              ColumnarSupport.appendValue(out(c2), outSchema.fields(c2).dataType, row, c2)
-              c2 += 1
-            }
-            j += 1
-          }
-          part.metaCols.zipWithIndex.foreach { case (mc, k) =>
-            val v = out(outSchema.length + k)
-            mc match {
-              case LakeMetaCols.File =>
-                val b = UTF8String.fromString(part.dataPath).getBytes
-                var j = 0
-                while (j < m) { v.putByteArray(j, b, 0, b.length); j += 1 }
-              case LakeMetaCols.Pos =>
-                var j = 0
-                while (j < m) { v.putLong(j, start + live(j)); j += 1 }
-              case LakeMetaCols.RowId =>
-                val src = if (ridCol >= 0) batch.column(ridCol) else null
-                var j = 0
-                while (j < m) {
-                  if (src != null && !src.isNullAt(live(j))) v.putLong(j, src.getLong(live(j)))
-                  else if (part.firstRowId > 0) v.putLong(j, part.firstRowId + start + live(j))
-                  else v.putNull(j)
-                  j += 1
-                }
-              case LakeMetaCols.LastSeq =>
-                val src = if (rseqCol >= 0) batch.column(rseqCol) else null
-                var j = 0
-                while (j < m) {
-                  if (src != null && !src.isNullAt(live(j))) v.putLong(j, src.getLong(live(j)))
-                  else if (part.addedSeq > 0) v.putLong(j, part.addedSeq)
-                  else v.putNull(j)
-                  j += 1
-                }
-            }
-          }
-          compacted += 1
-          copied = new ColumnarBatch(out.toArray[ColumnVector], m)
-          current = copied
-          return true
-        }
-        compacted += 1 // m == 0: every row tombstoned — read on
-      }
-    }
-    false
-  }
-
-  private val outWithMetaSchema = StructType(
-    outSchema.fields ++ part.metaCols.map(LakeMetaCols.fieldOf))
-
-  // requested data columns = the readSchema prefix (extra eq-key columns
-  // are read for the filter but never emitted)
-  private def dataVectors(batch: ColumnarBatch): Array[ColumnVector] =
-    Array.tabulate(outSchema.length)(batch.column)
-
-  private def withMeta(data: Array[ColumnVector], n: Int): ColumnarBatch =
-    if (part.metaCols.isEmpty) new ColumnarBatch(data, n)
-    else new ColumnarBatch(data ++ part.metaCols.map(metaVectorOf), n)
-
-  override def get(): ColumnarBatch = current
-
-  override def close(): Unit = {
-    closeCopied()
-    if (reader != null) reader.close()
-    if (posVector != null) posVector.close()
-    if (fileVector != null) fileVector.close()
-    if (rowIdVector != null) rowIdVector.close()
-    if (seqVector != null) seqVector.close()
-    if (seqVarVector != null) seqVarVector.close()
-  }
-}
-
-/** Columnar twin of [[EqFilteredRowReader]]: equality-delete key
-  * anti-filter over the delegate's VECTORIZED reader. Clean batches (no
-  * key hit) pass through with the extra key columns projected away
-  * (vector-subset, zero copy); dirty batches compact survivors.
-  */
-final class EqFilteredColumnarReader(
-    inner: PartitionReader[ColumnarBatch],
-    part: EqFilteredInputPartition,
-    eqKeys: java.util.HashSet[UnsafeRow])
-  extends PartitionReader[ColumnarBatch] {
-
-  private val unionSchema =
-    DataType.fromJson(part.unionSchemaJson).asInstanceOf[StructType]
-  private val keySchema =
-    DataType.fromJson(part.keySchemaJson).asInstanceOf[StructType]
-  private val rowKeyProj = UnsafeProjection.create(keySchema.fields.map { f =>
-    val i = unionSchema.fieldIndex(f.name)
-    BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-  })
-  private val outSchema = StructType(unionSchema.fields.take(part.outLen))
-
-  private var current: ColumnarBatch = _
-  private var copied: ColumnarBatch = _
-  private var eqDeletedRows = 0L
-  private var passthrough = 0L
-  private var compacted = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LakeScanMetrics.Value("eqDeletedRows", eqDeletedRows),
-      LakeScanMetrics.Value("batchesPassthrough", passthrough),
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    mask.metrics ++ Array(LakeScanMetrics.Value("batchesPassthrough", passthrough),
       LakeScanMetrics.Value("batchesCompacted", compacted))
+
+  /** `dst` refilled for the batch's `n` rows: the materialized lineage value
+    * in column `col` where there is one, else `inherited(pos)`, NULL where
+    * that is negative.
+    */
+  private def lineage(dst: OnHeapColumnVector, batch: ColumnarBatch, n: Int, col: Int,
+      inherited: Long => Long): ColumnVector = {
+    dst.reset()
+    dst.reserve(n)
+    val src = if (col >= 0) batch.column(col) else null
+    val pos = batch.column(rowIndex)
+    var i = 0
+    while (i < n) {
+      if (src != null && !src.isNullAt(i)) dst.putLong(i, src.getLong(i))
+      else {
+        val v = inherited(pos.getLong(i))
+        if (v >= 0) dst.putLong(i, v) else dst.putNull(i)
+      }
+      i += 1
+    }
+    dst
+  }
+
+  private def metaVector(batch: ColumnarBatch, n: Int, name: String): ColumnVector = name match {
+    case LakeMetaCols.File => file
+    case LakeMetaCols.Pos => batch.column(rowIndex)
+    case LakeMetaCols.RowId => lineage(rowIds, batch, n, layout.rid, mask.inheritedRowId)
+    case LakeMetaCols.LastSeq => lineage(seqs, batch, n, layout.rseq, _ => mask.inheritedSeq)
+  }
+
+  /** The indices of the rows the mask keeps, or null when it keeps all. Row
+    * indexes ascend within a split, so a batch holds a tombstone only if
+    * the first one at or after its first row falls at or before its last.
+    */
+  private def survivors(batch: ColumnarBatch, n: Int): Array[Int] = {
+    if (mask.clean || n == 0) return null
+    val pos = if (rowIndex >= 0) batch.column(rowIndex) else null
+    val tombstoned = pos != null && mask.nextTombstone(pos.getLong(0)) <= pos.getLong(n - 1)
+    if (!tombstoned && !mask.hasKeys) return null
+    val live = new Array[Int](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (mask.keeps(batch.getRow(i), if (pos == null) -1L else pos.getLong(i))) {
+        live(m) = i
+        m += 1
+      }
+      i += 1
+    }
+    if (m == n) null else java.util.Arrays.copyOf(live, m)
+  }
+
+  private def compact(full: ColumnarBatch, live: Array[Int]): ColumnarBatch = {
+    val vs = OnHeapColumnVector.allocateColumns(live.length, out)
+    // row-major APPEND copy (handles nested types; flat columns hit the
+    // primitive append fast paths)
+    var j = 0
+    while (j < live.length) {
+      val row = full.getRow(live(j))
+      var c = 0
+      while (c < out.length) {
+        ColumnarSupport.appendValue(vs(c), out.fields(c).dataType, row, c)
+        c += 1
+      }
+      j += 1
+    }
+    copied = new ColumnarBatch(vs.toArray[ColumnVector], live.length)
+    copied
+  }
 
   private def closeCopied(): Unit =
     if (copied != null) { copied.close(); copied = null }
@@ -456,42 +226,29 @@ final class EqFilteredColumnarReader(
     while (inner.next()) {
       val batch = inner.get()
       val n = batch.numRows()
-      val live = new Array[Int](n)
-      var m = 0
-      var i = 0
-      while (i < n) {
-        if (!eqKeys.contains(rowKeyProj(batch.getRow(i)))) { live(m) = i; m += 1 }
-        i += 1
-      }
-      eqDeletedRows += n - m
-      if (m == n) {
+      val full = new ColumnarBatch(Array.tabulate[ColumnVector](layout.outLen)(batch.column) ++
+        layout.metaCols.map(metaVector(batch, n, _)), n)
+      val live = survivors(batch, n)
+      if (live == null) {
         passthrough += 1
-        current = new ColumnarBatch(
-          Array.tabulate[ColumnVector](part.outLen)(batch.column), n)
+        current = full
         return true
       }
       compacted += 1
-      if (m > 0) {
-        val out = OnHeapColumnVector.allocateColumns(m, outSchema)
-        var j = 0
-        while (j < m) {
-          val row = batch.getRow(live(j))
-          var c = 0
-          while (c < part.outLen) {
-            ColumnarSupport.appendValue(out(c), outSchema.fields(c).dataType, row, c)
-            c += 1
-          }
-          j += 1
-        }
-        copied = new ColumnarBatch(out.toArray[ColumnVector], m)
-        current = copied
+      if (live.nonEmpty) {
+        current = compact(full, live)
         return true
       }
-      // m == 0: whole batch key-tombstoned — read on
+      // every row deleted: read on
     }
     false
   }
 
   override def get(): ColumnarBatch = current
-  override def close(): Unit = { closeCopied(); inner.close() }
+
+  override def close(): Unit = {
+    closeCopied()
+    inner.close()
+    Seq(file, rowIds, seqs).foreach(v => if (v != null) v.close())
+  }
 }

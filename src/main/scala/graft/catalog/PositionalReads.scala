@@ -8,12 +8,16 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -125,18 +129,18 @@ object DeleteFiles {
     dataPaths.exists(covers(delete, _))
 }
 
-/** Executor-side parquet→InternalRow reader built from Spark's own
-  * [[ParquetReadSupport]] (the exact mirror of the write path's
-  * ParquetWriteSupport in [[LakeParquetBuilder]]): same encodings, zero
-  * extra dependencies. It reads a WHOLE file sequentially — no splits, no
-  * pushed filters, no row-group skipping — which is precisely what makes
-  * the row-position counter trustworthy. Predicates still apply: the scan
-  * never claims pushdown, so Spark's own Filter sits above.
+/** Parquet reads graft makes outside Spark's scan: delete files and
+  * equality-delete keys, through Spark's own [[ParquetReadSupport]] (the
+  * mirror of the write path's ParquetWriteSupport in
+  * [[LakeParquetBuilder]]). Data files never read here: every lake scan
+  * reads them through Spark's parquet reader factory
+  * ([[ParquetDelegate]]), which prunes row groups by the pushed filters
+  * and, for merge-on-read files, emits each row's file ordinal as the
+  * row-index column ([[MorLayout]]).
   */
 object PositionalParquet {
   def open(path: String, schema: StructType, conf: Configuration,
-      filter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = None,
-      fileRange: Option[(Long, Long)] = None)
+      filter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = None)
       : ParquetReader[InternalRow] = {
     val c = readerConf(schema, conf)
     // our writer stamps CORRECTED rebase metadata (LakeDataWriter.writeConf)
@@ -149,21 +153,15 @@ object PositionalParquet {
         HadoopInputFile.fromPath(new Path(path), c), new HadoopParquetConfiguration(c)) {
       override protected def getReadSupport(): ReadSupport[InternalRow] = support
     }
-    // NEVER set a filter on a positional DATA read (it would corrupt the
-    // row counter); delete-file reads are content-only and filter freely
     filter.foreach(b.withFilter)
-    // a split range selects whole row groups by byte midpoint — positions
-    // stay exact because the split's start position comes from the footer
-    fileRange.foreach { case (s, e) => b.withFileRange(s, e) }
     b.build()
   }
 
-  /** Read configuration shared by the row and columnar paths —
-    * ParquetReadSupport/ParquetToSparkSchemaConverter read these from the
+  /** ParquetReadSupport/ParquetToSparkSchemaConverter read these from the
     * Configuration with NO defaults (normally ParquetFileFormat sets them;
     * we are our own prepareRead, mirroring LakeDataWriter.writeConf).
     */
-  def readerConf(schema: StructType, conf: Configuration): Configuration = {
+  private def readerConf(schema: StructType, conf: Configuration): Configuration = {
     val c = new Configuration(conf)
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
     c.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
@@ -176,83 +174,10 @@ object PositionalParquet {
     c
   }
 
-  /** Footer row-group layout of `path`: per group, its byte MIDPOINT
-    * (`startingPos + compressedSize/2` — the value parquet-mr's file-range
-    * filter assigns groups to splits by) and its exact row count.
-    */
-  def rowGroupLayout(path: String, conf: Configuration): Seq[(Long, Long)] =
-    rowGroupStats(path, conf, Set.empty).map(g => (g._1, g._2))
-
-  /** Row groups pruned by pushed-filter stats inside positional readers —
-    * instrumentation for tests.
+  /** Always 0: Spark's parquet reader prunes the row groups of every lake
+    * read and does not report them. Kept for the benchmark's counters.
     */
   val rowGroupsPruned = new java.util.concurrent.atomic.AtomicLong()
-
-  /** [[rowGroupLayout]] plus each group's column statistics rendered as a
-    * pseudo [[DataFileMeta]] in the WRITER's stat-string format, so
-    * [[FilePruner.mayMatch]] evaluates pushed filters against row groups
-    * exactly as it does against files. Only stat renderings that provably
-    * agree with the pruner's comparisons are emitted (plain ints/longs,
-    * date days, timestamp micros, non-NaN floats/doubles, UTF8 strings —
-    * parquet's unsigned-byte BINARY order IS UTF8String.compareTo order;
-    * truncated binary stats remain valid bounds); decimals, unsigned ints
-    * and everything exotic stay absent ⇒ conservative keep. `statCols`
-    * bounds the rendering to the columns the pushed filters actually
-    * reference — a filterless scan (empty set) pays for row counts and
-    * midpoints only, never N-columns × N-groups of stat strings.
-    */
-  def rowGroupStats(path: String, conf: Configuration,
-      statCols: Set[String] = null): Seq[(Long, Long, DataFileMeta)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val fr = openFooter(new Path(path), conf)
-    try fr.getFooter.getBlocks.asScala.toSeq.map { b =>
-      val mins = Map.newBuilder[String, String]
-      val maxs = Map.newBuilder[String, String]
-      val nulls = Map.newBuilder[String, Long]
-      b.getColumns.asScala.foreach { c =>
-        if (c.getPath.size == 1 &&
-          (statCols == null || statCols.contains(c.getPath.toDotString))) {
-          val name = c.getPath.toDotString
-          val pt = c.getPrimitiveType
-          val logical = pt.getLogicalTypeAnnotation
-          def statString(v: Any): Option[String] = (pt.getPrimitiveTypeName, logical) match {
-            case (_, _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) => None
-            case (INT32 | INT64, l: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-              if !l.isSigned => None
-            // pruner probe literals for timestamps/times are MICROS; a
-            // foreign file annotated MILLIS/NANOS would render bounds in
-            // the wrong unit and wrongly prune (unrecoverable row loss) —
-            // emit only the unit the pruner compares, else conservative keep
-            case (INT32 | INT64, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-              if (t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS) Some(v.toString) else None
-            case (INT32 | INT64, t: LogicalTypeAnnotation.TimeLogicalTypeAnnotation) =>
-              if (t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS) Some(v.toString) else None
-            case (INT32 | INT64, _) => Some(v.toString)
-            case (FLOAT, _) =>
-              Some(v.asInstanceOf[java.lang.Float]).filterNot(_.isNaN).map(_.toString)
-            case (DOUBLE, _) =>
-              Some(v.asInstanceOf[java.lang.Double]).filterNot(_.isNaN).map(_.toString)
-            case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-              Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-            case _ => None
-          }
-          val st = c.getStatistics
-          if (st != null) {
-            if (st.isNumNullsSet) nulls += name -> st.getNumNulls
-            if (st.hasNonNullValue) {
-              statString(st.genericGetMin).foreach(mins += name -> _)
-              statString(st.genericGetMax).foreach(maxs += name -> _)
-            }
-          }
-        }
-      }
-      (b.getStartingPos + b.getCompressedSize / 2, b.getRowCount,
-        DataFileMeta(path, b.getRowCount, b.getCompressedSize,
-          mins.result(), maxs.result(), nulls.result()))
-    } finally fr.close()
-  }
 
   /** A file reader on `p` whose options come from `conf`: the one-argument
     * `ParquetFileReader.open(in)` builds them from a fresh default
@@ -272,37 +197,24 @@ object PositionalParquet {
     * tombstones), no matter how many files share a delete file.
     */
   def deletedPositions(dataPath: String, deletes: Seq[DeleteSlice],
-      conf: Configuration, posRange: Option[(Long, Long)] = None): Array[Long] = {
+      conf: Configuration): Array[Long] = {
     if (deletes.isEmpty) return Array.emptyLongArray
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.parquet.io.api.Binary
     val (dvs, deleteFiles) = deletes.partition(_.dvLength > 0L)
-    // deletion vectors: one seek per covering slice, positions clipped to
-    // the split's range (their covering match is exact-per-target, so no
-    // path re-check is needed)
+    // deletion vectors: one seek per covering slice (their covering match
+    // is exact-per-target, so no path re-check is needed); positions are
+    // row ordinals (≥ 0; Roaring64 iterates in UNSIGNED order, so the
+    // floor must be 0, never Long.MinValue)
     val dvPositions: Array[Long] = dvs.toArray.flatMap { s =>
-      val bm = DeletionVectors.readBitmap(s.path, s.dvOffset, s.dvLength, conf)
-      // positions are row ordinals (≥ 0; Roaring64 iterates in UNSIGNED
-      // order, so the full-range floor must be 0, never Long.MinValue)
-      posRange match {
-        case Some((lo, hi)) => DeletionVectors.positionsInRange(bm, math.max(0L, lo), hi)
-        case None => DeletionVectors.positionsInRange(bm, 0L, Long.MaxValue)
-      }
+      DeletionVectors.positionsInRange(
+        DeletionVectors.readBitmap(s.path, s.dvOffset, s.dvLength, conf), 0L, Long.MaxValue)
     }
     if (deleteFiles.isEmpty) return dvPositions.sorted.distinct
-    val pathPred = FilterApi.eq(
+    val pathFilter = FilterCompat.get(FilterApi.eq(
       FilterApi.binaryColumn(DeleteFiles.FilePathCol),
-      Binary.fromString(dataPath))
-    // split-parallel readers only need THEIR row-group range's tombstones —
-    // the [start, end) position predicate keeps per-task tombstone IO and
-    // memory O(split's tombstones) on a heavily point-deleted file
-    val pathFilter = FilterCompat.get(posRange.fold(
-      pathPred: org.apache.parquet.filter2.predicate.FilterPredicate) {
-      case (lo, hi) => FilterApi.and(pathPred, FilterApi.and(
-        FilterApi.gtEq(FilterApi.longColumn(DeleteFiles.PosCol), java.lang.Long.valueOf(lo)),
-        FilterApi.lt(FilterApi.longColumn(DeleteFiles.PosCol), java.lang.Long.valueOf(hi))))
-    })
+      Binary.fromString(dataPath)))
     val target = UTF8String.fromString(dataPath)
     val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
     deleteFiles.map(_.path).distinct.foreach { df =>
@@ -313,9 +225,7 @@ object PositionalParquet {
           // parquet-mr's record filter materializes non-matching rows as
           // all-null records; the explicit equality re-check also guards
           // against dictionary/stats edge cases
-          if (!row.isNullAt(0) && row.getUTF8String(0) == target &&
-            posRange.forall { case (lo, hi) =>
-              val p = row.getLong(1); p >= lo && p < hi }) buf += row.getLong(1)
+          if (!row.isNullAt(0) && row.getUTF8String(0) == target) buf += row.getLong(1)
           row = r.read()
         }
       } finally r.close()
@@ -357,10 +267,10 @@ object TombstoneRewrite {
   def covering(deletes: Seq[DataFileMeta], dataPaths: Seq[String]): Seq[DataFileMeta] =
     deletes.filter(d => DeleteFiles.coversAny(d, dataPaths))
 
-  /** Subtract the tombstoned rows of `dataPaths` from `raw` (a V1 parquet
-    * read of exactly those files). No-op without covering deletes.
+  /** Subtract the tombstoned rows from `raw` (a V1 parquet read of the
+    * files `coveringDeletes` cover). No-op without covering deletes.
     */
-  def subtract(spark: SparkSession, raw: DataFrame, dataPaths: Seq[String],
+  def subtract(spark: SparkSession, raw: DataFrame,
       coveringDeletes: Seq[DataFileMeta], conf: Configuration): DataFrame = {
     if (coveringDeletes.isEmpty) return raw
     val dels = DeletionVectors.tombstonesDf(spark, coveringDeletes, conf)
@@ -375,11 +285,11 @@ object TombstoneRewrite {
       .drop("__gname", "__gpos")
   }
 
-  /** The inverse of [[subtract]]: ONLY the tombstoned rows of `dataPaths`
+  /** The inverse of [[subtract]]: ONLY the tombstoned rows of `raw`
     * (semi-join on file name + row_index) — the "-D" side of a CDC
     * changelog read.
     */
-  def select(spark: SparkSession, raw: DataFrame, dataPaths: Seq[String],
+  def select(spark: SparkSession, raw: DataFrame,
       coveringDeletes: Seq[DataFileMeta], conf: Configuration): DataFrame = {
     import org.apache.spark.sql.functions.lit
     if (coveringDeletes.isEmpty) return raw.where(lit(false))
@@ -402,7 +312,7 @@ object TombstoneRewrite {
     * file (one small driver job).
     */
   def foldable(spark: SparkSession, coveringDeletes: Seq[DataFileMeta],
-      replacedPaths: Set[String], conf: Configuration,
+      replacedPaths: Set[String],
       allDeletes: Seq[DataFileMeta] = Nil): Set[String] = {
     if (coveringDeletes.isEmpty) return Set.empty
     val (dv, pq) = coveringDeletes.partition(_.isDv)
@@ -440,8 +350,6 @@ object TombstoneRewrite {
   * distinct keys, which already had to fit in task memory to be written.
   */
 object EqDeletes {
-  import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-
   /** Delete-file opens — instrumentation for tests asserting the
     * once-per-scan loading contract.
     */
@@ -479,188 +387,176 @@ object EqDeletes {
   }
 }
 
-/** One SPLIT of a data file read positionally: the row groups whose byte
-  * midpoint falls in `[splitStart, splitEnd)` (parquet-mr's standard
-  * split-to-row-group assignment), minus tombstoned positions, minus rows
-  * whose key appears in an APPLICABLE equality delete (one with a newer
-  * sequence number than this file), optionally extended with the
-  * `_file`/`_pos` metadata columns (in `metaCols` order, appended after
-  * the data columns). The defaults cover the whole file. Each split's
-  * starting row position comes from the footer's row-group row counts —
-  * exact by the parquet spec — so a heavily tombstoned 1 GB file reads as
-  * ~8 parallel tasks instead of one (Iceberg plans MoR reads the same
-  * way); the planner stays O(files) because byte boundaries need no
-  * footer IO, only the tasks (which must open the footer anyway) do.
+/** One partition of a [[LakeMixedBatch]] that reads through the delete
+  * mask: Spark's file partition `inner`, read by the batch's merge-on-read
+  * factory. A file with positional tombstones, or any file of a read that
+  * requests `_file`/`_pos`/lineage columns, reads one split per partition:
+  * `dataPath` is its path as the manifest holds it, `deletes` its covering
+  * tombstones, `firstRowId`/`addedSeq` its lineage (0 = pre-lineage).
+  * Files that need only the equality-delete anti-filter, or nothing, pack
+  * several to a partition and leave those empty. `eqDeletePaths` names the
+  * broadcast key arrays to anti-filter with.
   */
-final case class PositionalInputPartition(
-    dataPath: String,
-    deletes: Seq[DeleteSlice],
-    physDataSchemaJson: String,
-    metaCols: Seq[String],
+final case class MorInputPartition(
+    inner: FilePartition,
     eqDeletePaths: Seq[String] = Nil,
-    eqKeySchemaJson: String = "",
-    splitStart: Long = 0L,
-    splitEnd: Long = Long.MaxValue,
-    // row lineage: the file's reserved id base (0 = pre-lineage), its
-    // commit sequence, and whether it carries materialized lineage columns
+    dataPath: String = "",
+    deletes: Seq[DeleteSlice] = Nil,
     firstRowId: Long = 0L,
-    addedSeq: Long = 0L,
-    lineageCols: Boolean = false,
-    // pushed data filters (PHYSICAL names) for row-group stats pruning —
-    // best-effort ONLY: the scan reports every filter as post-scan, so a
-    // kept group's non-matching rows still die in Spark's Filter above
-    filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil)
-  extends InputPartition
-
-/** A delegate parquet split of an EQ-ONLY dirty file (equality deletes
-  * apply, no positional tombstones): the inner partition keeps the
-  * delegate's split planning, pushed filters and row-group pruning — eq
-  * filtering needs no position counter, so unlike positional tombstones it
-  * costs neither pushdown nor whole-file reads. Every such split reads
-  * through the scan's one eq-delete factory (requested ∪ key columns);
-  * `eqDeletePaths` names the broadcast key arrays to anti-filter with,
-  * `outLen` the requested-column prefix to emit.
-  */
-final case class EqFilteredInputPartition(
-    inner: InputPartition,
-    eqDeletePaths: Seq[String],
-    keySchemaJson: String,
-    unionSchemaJson: String,
-    outLen: Int) extends InputPartition {
+    addedSeq: Long = 0L)
+  extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** Dispatches positional partitions to the row reader, eq-filtered
-  * partitions to the eq-delete delegate reader wrapped with the key
-  * anti-filter, and everything else to the delegated parquet factory.
-  * Spark requires every partition of one scan to agree on columnar support
-  * (DataSourceV2ScanExecBase), so when a scan mixes clean files with dirty
-  * ones (`forceRows`), clean partitions read through the delegate's
-  * ROW-based parquet reader — they keep split planning and row-group
-  * pruning, only losing vectorization until compaction folds the deletes
-  * away. `eqKeys` is the once-per-scan broadcast of delete-file key arrays,
-  * `conf` the once-per-scan broadcast of the Hadoop conf.
+/** The columns of a batch's merge-on-read reads. Spark's parquet reader
+  * returns `read`: the requested columns (its first `outLen`), then what
+  * the delete mask needs besides — the equality-delete `keys` not among
+  * them, the materialized lineage columns, and Spark's row-index column,
+  * which carries each row's ordinal in its file. The readers emit the
+  * requested columns followed by `metaCols`.
+  */
+final case class MorLayout(read: StructType, outLen: Int, keys: StructType,
+    metaCols: Seq[String]) {
+  private def ordinal(name: String): Int = read.fieldNames.indexOf(name)
+  def rowIndex: Int = ordinal(MorLayout.RowIndex.name)
+  def rid: Int = ordinal(RowLineage.Rid)
+  def rseq: Int = ordinal(RowLineage.Rseq)
+  def out: StructType =
+    StructType(read.fields.take(outLen) ++ metaCols.map(LakeMetaCols.fieldOf))
+
+  /** A row's equality-delete key, as the broadcast key arrays hold it. */
+  def keyProjection: UnsafeProjection = UnsafeProjection.create(keys.fields.map { f =>
+    BoundReference(read.fieldIndex(f.name), f.dataType, f.nullable): Expression
+  })
+
+  /** Does the read fetch a stored column beyond the requested ones? The
+    * row index is generated by the reader, not stored.
+    */
+  def readsExtraColumns: Boolean =
+    read.fields.drop(outLen).exists(_.name != MorLayout.RowIndex.name)
+}
+
+object MorLayout {
+  /** Spark's parquet readers fill this column with the row's ordinal in its
+    * file when a read schema names it. The files do not hold it, so it must
+    * be nullable: Spark fails a missing non-nullable column.
+    */
+  val RowIndex: StructField = StructField(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)
+
+  def of(required: StructType, keys: StructType, lineage: Boolean, rowIndex: Boolean,
+      metaCols: Seq[String]): MorLayout = {
+    val extra = keys.fields.filterNot(f => required.fieldNames.contains(f.name)) ++
+      (if (lineage) Seq(RowLineage.RidField, RowLineage.RseqField) else Nil) ++
+      (if (rowIndex) Seq(RowIndex) else Nil)
+    MorLayout(StructType(required.fields ++ extra), required.length, keys, metaCols)
+  }
+}
+
+/** The reader factory of a [[LakeMixedBatch]]: a [[MorInputPartition]]
+  * reads through Spark's parquet factory over the batch's [[MorLayout]]
+  * (`mor`), with the delete mask on top; any other partition is clean and
+  * reads through `clean`. Spark requires every partition of one scan to
+  * agree on columnar support, so `columnar` is decided once per batch.
+  * `conf` is the merge-on-read read's broadcast conf, which tombstone loads
+  * reuse; `eqKeys` the once-per-scan broadcast of delete-file key arrays.
   */
 final class LakeReaderFactory(
-    conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
-    delegate: Option[PartitionReaderFactory],
-    forceRows: Boolean,
-    eqDelegate: Option[PartitionReaderFactory] = None,
-    eqKeys: org.apache.spark.broadcast.Broadcast[Map[String, Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]] = null,
-    // true ⇒ EVERY partition of this scan reads vectorized (decided at
-    // planning: flat schemas + delegate support) — Spark requires the
-    // whole scan to agree, so this is all-or-nothing by construction
-    columnar: Boolean = false)
+    clean: PartitionReaderFactory,
+    mor: PartitionReaderFactory,
+    layout: MorLayout,
+    conf: Broadcast[SerializableConfiguration],
+    eqKeys: Broadcast[Map[String, Array[UnsafeRow]]],
+    columnar: Boolean)
   extends PartitionReaderFactory {
 
-  private def keySetOf(paths: Seq[String]) = {
-    val set = new java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow]()
-    paths.foreach(p => eqKeys.value.getOrElse(p, Array.empty).foreach(set.add))
-    set
+  private def maskOf(p: MorInputPartition): MorMask = {
+    val keys =
+      if (p.eqDeletePaths.isEmpty) null
+      else {
+        val set = new java.util.HashSet[UnsafeRow]()
+        p.eqDeletePaths.foreach(k => eqKeys.value.getOrElse(k, Array.empty).foreach(set.add))
+        set
+      }
+    new MorMask(p, layout, conf.value.value, keys)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
-    case pp: PositionalInputPartition =>
-      new PositionalRowReader(pp, conf.value.value,
-        if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
-    case ep: EqFilteredInputPartition =>
-      new EqFilteredRowReader(eqDelegate.get.createReader(ep.inner), ep,
-        keySetOf(ep.eqDeletePaths))
-    case other => delegate.get.createReader(other)
+    case m: MorInputPartition => new MorRowReader(mor.createReader(m.inner), m, layout, maskOf(m))
+    case other => clean.createReader(other)
   }
-  override def createColumnarReader(p: InputPartition) = p match {
-    case pp: PositionalInputPartition =>
-      new PositionalColumnarReader(pp, conf.value.value,
-        if (pp.eqDeletePaths.isEmpty) null else keySetOf(pp.eqDeletePaths))
-    case ep: EqFilteredInputPartition =>
-      new EqFilteredColumnarReader(
-        eqDelegate.get.createColumnarReader(ep.inner), ep,
-        keySetOf(ep.eqDeletePaths))
-    case other => delegate.get.createColumnarReader(other)
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = p match {
+    case m: MorInputPartition =>
+      new MorColumnarReader(mor.createColumnarReader(m.inner), m, layout, maskOf(m))
+    case other => clean.createColumnarReader(other)
   }
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: PositionalInputPartition | _: EqFilteredInputPartition => columnar
-    case other =>
-      (columnar || !forceRows) && delegate.exists(_.supportColumnarReads(other))
-  }
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
 }
 
-/** Applies the equality-delete key anti-filter above a delegate parquet
-  * row reader, then projects away any key columns the query didn't ask
-  * for. The delegate did its own filter pushdown and row-group pruning —
-  * this wrapper only drops overwritten key versions.
+/** The delete mask of one [[MorInputPartition]], shared by its row and
+  * columnar readers: positional tombstones (loaded when the first row asks,
+  * so a split whose row groups all prune opens no delete file), equality-
+  * delete keys, and the lineage values rows inherit.
   */
-final class EqFilteredRowReader(
-    inner: PartitionReader[InternalRow],
-    part: EqFilteredInputPartition,
-    eqKeys: java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow])
-  extends PartitionReader[InternalRow] {
+final class MorMask(part: MorInputPartition, layout: MorLayout, conf: Configuration,
+    eqKeys: java.util.HashSet[UnsafeRow]) {
+  var tombstonedRows = 0L
+  var eqDeletedRows = 0L
 
-  import org.apache.spark.sql.catalyst.expressions.BoundReference
+  private lazy val deleted: Array[Long] =
+    PositionalParquet.deletedPositions(part.dataPath, part.deletes, conf)
+  private val keyOf: UnsafeProjection =
+    if (eqKeys == null || eqKeys.isEmpty) null else layout.keyProjection
 
-  private val unionSchema =
-    DataType.fromJson(part.unionSchemaJson).asInstanceOf[StructType]
-  private val keySchema =
-    DataType.fromJson(part.keySchemaJson).asInstanceOf[StructType]
-  private val rowKeyProj = UnsafeProjection.create(keySchema.fields.map { f =>
-    val i = unionSchema.fieldIndex(f.name)
-    BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-  })
-  // identity when the query already asked for every union column
-  private val outProj =
-    if (part.outLen == unionSchema.length) null
-    else UnsafeProjection.create(unionSchema.fields.take(part.outLen).zipWithIndex.map {
-      case (f, i) => BoundReference(i, f.dataType, f.nullable):
-        org.apache.spark.sql.catalyst.expressions.Expression
-    })
+  /** Nothing in the partition can be deleted. */
+  val clean: Boolean = part.deletes.isEmpty && keyOf == null
+  def hasKeys: Boolean = keyOf != null
 
-  private var current: InternalRow = _
-  private var eqDeletedRows = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LakeScanMetrics.Value("eqDeletedRows", eqDeletedRows))
-
-  override def next(): Boolean = {
-    while (inner.next()) {
-      val row = inner.get()
-      if (!eqKeys.contains(rowKeyProj(row))) {
-        current = if (outProj == null) row else outProj(row)
-        return true
-      }
-      eqDeletedRows += 1
+  /** The first tombstoned position at or after `pos`, Long.MaxValue if none. */
+  def nextTombstone(pos: Long): Long =
+    if (part.deletes.isEmpty) Long.MaxValue
+    else {
+      val i = java.util.Arrays.binarySearch(deleted, pos)
+      val at = if (i >= 0) i else -i - 1
+      if (at < deleted.length) deleted(at) else Long.MaxValue
     }
-    false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = inner.close()
-}
 
-/** One contiguous stretch of surviving row groups in a positional split:
-  * byte range (covering exactly their midpoints), footer-exact starting
-  * row ordinal, expected row count.
-  */
-final case class GroupRun(byteStart: Long, byteEnd: Long, startPos: Long, rows: Long)
+  /** Does `row`, at file ordinal `pos`, survive? Counts the rows it drops. */
+  def keeps(row: InternalRow, pos: Long): Boolean =
+    if (nextTombstone(pos) == pos) { tombstonedRows += 1; false }
+    else if (keyOf != null && eqKeys.contains(keyOf(row))) { eqDeletedRows += 1; false }
+    else true
+
+  /** The `_row_id` a row at `pos` inherits when it holds none: the file's
+    * reserved range, -1 for a pre-lineage file.
+    */
+  def inheritedRowId(pos: Long): Long = if (part.firstRowId > 0) part.firstRowId + pos else -1L
+  /** The `_last_updated_seq` a row inherits: the file's, -1 if unknown. */
+  def inheritedSeq: Long = if (part.addedSeq > 0) part.addedSeq else -1L
+
+  def metrics: Array[CustomTaskMetric] =
+    Array(LakeScanMetrics.Value("tombstonedRows", tombstonedRows),
+      LakeScanMetrics.Value("eqDeletedRows", eqDeletedRows))
+}
 
 /** Driver-aggregated (summed) scan metrics the MoR readers report per
   * task — surfaced in the Spark UI's SQL node, the operational answer to
   * "how much delete debt is this table carrying" at 100 TB: tombstoned
-  * rows actually skipped, rows dropped by equality-delete keys, row
-  * groups pruned by pushed-filter stats, and the columnar reader's
-  * pass-through vs compacted batch split (pass-through should dominate
-  * under sparse deletes — if compaction dominates, run
+  * rows actually skipped, rows dropped by equality-delete keys, and the
+  * columnar reader's pass-through vs compacted batch split (pass-through
+  * should dominate under sparse deletes — if compaction dominates, run
   * rewrite_position_delete_files). One driver metric rides along: 1 when
-  * the scan's conf broadcast was an earlier scan's, 0 when it made one.
+  * every conf broadcast the scan used was an earlier scan's, 0 otherwise.
   */
 object LakeScanMetrics {
-  import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
+  import org.apache.spark.sql.connector.metric.CustomMetric
 
   // each metric is its own ZERO-ARG top-level class: Spark re-instantiates
   // the class reflectively on the driver to aggregate task values for the
   // UI — a parameterized class fails that lookup (silently, per metric)
   val all: Array[CustomMetric] = Array(new TombstonedRowsMetric,
-    new EqDeletedRowsMetric, new RowGroupsPrunedMetric,
-    new BatchesPassthroughMetric, new BatchesCompactedMetric,
-    new ConfBroadcastReusedMetric)
+    new EqDeletedRowsMetric, new BatchesPassthroughMetric,
+    new BatchesCompactedMetric, new ConfBroadcastReusedMetric)
 
   final case class Value(name: String, value: Long) extends CustomTaskMetric
 }
@@ -672,10 +568,6 @@ final class TombstonedRowsMetric extends org.apache.spark.sql.connector.metric.C
 final class EqDeletedRowsMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "eqDeletedRows"
   override def description(): String = "MoR rows dropped by equality-delete keys"
-}
-final class RowGroupsPrunedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = "rowGroupsPruned"
-  override def description(): String = "row groups pruned by pushed-filter stats"
 }
 final class BatchesPassthroughMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "batchesPassthrough"
@@ -690,180 +582,68 @@ final class ConfBroadcastReusedMetric extends org.apache.spark.sql.connector.met
   override def description(): String = "scan conf broadcast reused from an earlier scan"
 }
 
-/** Shared split planning for the row and columnar positional readers:
-  * resolve the split's byte range to whole row groups (parquet-mr's
-  * midpoint rule), compute each group's exact starting row ordinal from
-  * the footer's row counts, skip groups the pushed filters provably
-  * cannot match (best-effort — Spark's Filter sits above), coalesce the
-  * survivors into contiguous byte-range runs, and load only the runs'
-  * tombstone range.
+/** Row-mode merge-on-read: the rows of Spark's parquet row reader that the
+  * mask keeps, with the requested metadata columns appended — `_file` the
+  * manifest's path, `_pos` the row index, `_row_id`/`_last_updated_seq`
+  * the file's materialized value where there is one, else the inherited
+  * one (NULL for pre-lineage files).
   */
-object PositionalRuns {
-  def plan(part: PositionalInputPartition,
-      conf: Configuration): (Seq[GroupRun], Array[Long], Long) = {
-    // stats rendered only for the columns the pushed filters reference
-    val statCols: Set[String] =
-      part.filters.flatMap(_.references.map(_.name).toSeq).toSet
-    val layout = PositionalParquet.rowGroupStats(part.dataPath, conf, statCols)
-    val starts = layout.scanLeft(0L)(_ + _._2)
-    val indexed = layout.zipWithIndex.map { case ((mid, rows, pseudo), i) =>
-      (mid, rows, pseudo, starts(i))
-    }
-    val mine = indexed.filter(g => g._1 >= part.splitStart && g._1 < part.splitEnd)
-    val selected = mine.filter(g =>
-      part.filters.forall(FilePruner.mayMatch(_, g._3)))
-    PositionalParquet.rowGroupsPruned.addAndGet(mine.size - selected.size)
-    // coalesce groups adjacent IN THE FILE (consecutive layout index ⇔
-    // consecutive start positions) into one reader range each
-    val runs = selected.foldLeft(Vector.empty[(GroupRun, Long)]) {
-      case (acc :+ ((run, endPos)), g) if g._4 == endPos =>
-        acc :+ (run.copy(byteEnd = g._1 + 1, rows = run.rows + g._2), g._4 + g._2)
-      case (acc, g) =>
-        acc :+ (GroupRun(g._1, g._1 + 1, g._4, g._2), g._4 + g._2)
-    }.map(_._1)
-    val deleted: Array[Long] =
-      if (runs.isEmpty) Array.emptyLongArray
-      else PositionalParquet.deletedPositions(part.dataPath, part.deletes, conf,
-        posRange = Some((runs.head.startPos, runs.last.startPos + runs.last.rows)))
-    (runs, deleted, (mine.size - selected.size).toLong)
-  }
-}
-
-final class PositionalRowReader(
-    part: PositionalInputPartition,
-    conf: Configuration,
-    eqKeys: java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = null)
+final class MorRowReader(
+    inner: PartitionReader[InternalRow],
+    part: MorInputPartition,
+    layout: MorLayout,
+    mask: MorMask)
   extends PartitionReader[InternalRow] {
 
-  import org.apache.spark.sql.catalyst.expressions.BoundReference
-
-  private val outSchema =
-    DataType.fromJson(part.physDataSchemaJson).asInstanceOf[StructType]
-  // equality-delete keys may not be in the requested projection: read the
-  // union, emit only the requested prefix
-  private val keySchema: StructType =
-    if (part.eqDeletePaths.isEmpty) new StructType()
-    else DataType.fromJson(part.eqKeySchemaJson).asInstanceOf[StructType]
-  // lineage-requesting reads of a MATERIALIZED file also read the
-  // _graft_rid/_graft_rseq columns (absent columns clip to null — which
-  // the inherit rules below turn back into computed values)
-  private val needLineageCols =
-    part.lineageCols && part.metaCols.exists(LakeMetaCols.isLineage)
-  private val readSchema = StructType(outSchema.fields ++
-    keySchema.fields.filterNot(f => outSchema.fieldNames.contains(f.name)) ++
-    (if (needLineageCols) Seq(RowLineage.RidField, RowLineage.RseqField) else Nil))
-  private val ridCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rid) else -1
-  private val rseqCol = if (needLineageCols) readSchema.fieldIndex(RowLineage.Rseq) else -1
-
-  private val (runs, deleted, prunedGroups) = PositionalRuns.plan(part, conf)
-  private var tombstonedRows = 0L
-  private var eqDeletedRows = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(LakeScanMetrics.Value("tombstonedRows", tombstonedRows),
-      LakeScanMetrics.Value("eqDeletedRows", eqDeletedRows),
-      LakeScanMetrics.Value("rowGroupsPruned", prunedGroups))
-
-  private val rowKeyProj =
-    if (eqKeys == null || eqKeys.isEmpty) null
-    else UnsafeProjection.create(keySchema.fields.map { f =>
-      val i = readSchema.fieldIndex(f.name)
-      BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-    })
-
-  // one reader per contiguous run of surviving row groups, opened lazily
-  private var runIdx = -1
-  private var reader: ParquetReader[InternalRow] = _
-  private var runRowsRead = 0L
-
-  private def advanceRun(): Boolean = {
-    runIdx += 1
-    if (runIdx >= runs.length) false
-    else {
-      val r = runs(runIdx)
-      reader = PositionalParquet.open(part.dataPath, readSchema, conf,
-        fileRange = Some((r.byteStart, r.byteEnd)))
-      pos = r.startPos - 1L
-      runRowsRead = 0L
-      true
-    }
-  }
-
-  // appended metadata values: constant _file (+ _last_updated_seq when not
-  // materialized), running _pos, per-row lineage
-  private val metaRow = new GenericInternalRow(part.metaCols.length)
-  part.metaCols.zipWithIndex.foreach {
-    case (LakeMetaCols.File, i) => metaRow.update(i, UTF8String.fromString(part.dataPath))
-    case (LakeMetaCols.LastSeq, i) if !needLineageCols =>
-      metaRow.update(i, if (part.addedSeq > 0) part.addedSeq else null)
-    case _ => ()
-  }
-  private val posIdx = part.metaCols.indexOf(LakeMetaCols.Pos)
-  private val rowIdIdx = part.metaCols.indexOf(LakeMetaCols.RowId)
-  private val seqIdx = part.metaCols.indexOf(LakeMetaCols.LastSeq)
+  private val rowIndex = layout.rowIndex
+  private val rid = layout.rid
+  private val rseq = layout.rseq
+  private val metaCols = layout.metaCols.toArray
+  private val file = UTF8String.fromString(part.dataPath)
+  private val meta = new GenericInternalRow(metaCols.length)
   private val joined = new JoinedRow
-  // output = requested data columns (the readSchema prefix) + metadata cols
-  private val toUnsafe = UnsafeProjection.create(
-    outSchema.fields.zipWithIndex.map { case (f, i) =>
-      BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
-    } ++ part.metaCols.zipWithIndex.map { case (m, j) =>
-      val f = LakeMetaCols.fieldOf(m)
-      BoundReference(readSchema.length + j, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
+  // output = the requested prefix of the read, then the metadata columns;
+  // rows pass as read when that is the whole read
+  private val project: UnsafeProjection =
+    if (metaCols.isEmpty && layout.read.length == layout.outLen) null
+    else UnsafeProjection.create(layout.out.fields.zipWithIndex.map { case (f, i) =>
+      val at = if (i < layout.outLen) i else layout.read.length + i - layout.outLen
+      BoundReference(at, f.dataType, f.nullable): Expression
     })
-
-  private var pos = -1L
-  private var delIdx = 0
   private var current: InternalRow = _
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] = mask.metrics
+
+  private def lineage(row: InternalRow, col: Int, inherited: Long): Any =
+    if (col >= 0 && !row.isNullAt(col)) row.getLong(col)
+    else if (inherited >= 0) inherited
+    else null
+
   override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !advanceRun()) return false
-      val row = reader.read()
-      if (row == null) {
-        // self-verifying: the reader's internal row-group selection MUST
-        // agree with the footer-derived start position — a short or long
-        // read means positions were wrong, which must fail loudly, never
-        // return rows with silently shifted _pos/tombstone alignment
-        if (runRowsRead != runs(runIdx).rows) throw new IllegalStateException(
-          s"positional run [${runs(runIdx).byteStart},${runs(runIdx).byteEnd}) of " +
-            s"${part.dataPath} read $runRowsRead rows, footer says ${runs(runIdx).rows}")
-        reader.close()
-        reader = null
-      } else {
-        pos += 1
-        runRowsRead += 1
-        while (delIdx < deleted.length && deleted(delIdx) < pos) delIdx += 1
-        if (delIdx < deleted.length && deleted(delIdx) == pos) {
-          delIdx += 1 // position-tombstoned: skip
-          tombstonedRows += 1
-        } else if (rowKeyProj != null && eqKeys.contains(rowKeyProj(row))) {
-          // key-tombstoned by a newer equality delete: skip
-          eqDeletedRows += 1
-        } else {
-          if (posIdx >= 0) metaRow.update(posIdx, pos)
-          if (rowIdIdx >= 0) {
-            // materialized value wins; NULL inherits the file's range
-            val rid =
-              if (ridCol >= 0 && !row.isNullAt(ridCol)) row.getLong(ridCol)
-              else if (part.firstRowId > 0) part.firstRowId + pos
-              else -1L
-            metaRow.update(rowIdIdx, if (rid >= 0) rid else null)
+    while (inner.next()) {
+      val row = inner.get()
+      val pos = if (rowIndex >= 0) row.getLong(rowIndex) else -1L
+      if (mask.clean || mask.keeps(row, pos)) {
+        if (project == null) current = row
+        else {
+          var j = 0
+          while (j < metaCols.length) {
+            meta.update(j, metaCols(j) match {
+              case LakeMetaCols.File => file
+              case LakeMetaCols.Pos => pos
+              case LakeMetaCols.RowId => lineage(row, rid, mask.inheritedRowId(pos))
+              case LakeMetaCols.LastSeq => lineage(row, rseq, mask.inheritedSeq)
+            })
+            j += 1
           }
-          if (seqIdx >= 0 && needLineageCols) {
-            val rseq =
-              if (rseqCol >= 0 && !row.isNullAt(rseqCol)) row.getLong(rseqCol)
-              else if (part.addedSeq > 0) part.addedSeq
-              else -1L
-            metaRow.update(seqIdx, if (rseq >= 0) rseq else null)
-          }
-          current = toUnsafe(joined(row, metaRow))
-          return true
+          current = project(joined(row, meta))
         }
+        return true
       }
     }
     false
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = inner.close()
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.connector.read.LocalScan
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 

@@ -619,8 +619,9 @@ final case class TableMeta(
     c.set("graft.write.compression",
       properties.getOrElse("write.parquet.compression-codec", "snappy"))
     // Iceberg's write.parquet.row-group-size-bytes: row-group granularity
-    // bounds both the vectorized reader's batch memory and the positional
-    // split-parallel reader's per-task unit of work
+    // bounds both the vectorized reader's batch memory and the unit a
+    // parquet split reads (a split reads the row groups it holds the
+    // midpoint of)
     properties.get("write.parquet.row-group-size-bytes")
       .foreach(v => c.set("graft.write.rowgroup-bytes", v))
     // SHREDDED VARIANT STATS ([[VariantShred]]): resolve logical column
@@ -1475,7 +1476,7 @@ object VariantShred extends org.apache.spark.internal.Logging {
   *
   * Using Spark's keys means ZERO custom read-path code at any scale:
   * every reader in the engine — the delegated vectorized/row parquet
-  * scans, both positional (merge-on-read) readers, and the V1 reads
+  * scans, the merge-on-read readers over them, and the V1 reads
   * inside CoW rewrites — consumes the requested schema's metadata and
   * fills missing columns with the folded literal natively
   * (`ParquetRowConverter.applyExistenceDefaultValuesToRow`, the

@@ -40,7 +40,7 @@ object AnnIndex {
     * the same expression the build used (a query-planning constant, like
     * every ANN library's query hash).
     */
-  def queryKeys(s: SparkSession, emb: DataFrame, queryVecId: Long,
+  def queryKeys(emb: DataFrame, queryVecId: Long,
       bands: Int = 16, bitsPerBand: Int = 4): Seq[(Int, Int)] =
     emb.filter(col("vec_id") === queryVecId)
       .select(posexplode(srpBands(col("embedding"), bands, bitsPerBand)).as(Seq("band", "bv")))
@@ -54,7 +54,7 @@ object AnnIndex {
   def probeSrpIndex(s: SparkSession, indexTable: String, emb: DataFrame,
       queryVecId: Long, k: Int = 10,
       bands: Int = 16, bitsPerBand: Int = 4): DataFrame = {
-    val keys = queryKeys(s, emb, queryVecId, bands, bitsPerBand)
+    val keys = queryKeys(emb, queryVecId, bands, bitsPerBand)
     val bucketFilter = keys.map { case (b, v) => col("band") === b && col("bv") === v }
       .reduce(_ || _)
     val q = broadcast(

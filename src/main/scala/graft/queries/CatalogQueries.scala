@@ -146,9 +146,9 @@ object CatalogQueries {
       // predicate excluded. The Spark side builds the table shape the r8
       // read-path work targets — ONE sorted file with many small row
       // groups, position-tombstoned — so a hash match proves the whole
-      // stack at once: byte-range split planning, footer-exact start
-      // ordinals, row-group stats pruning under the range predicate, and
-      // the vectorized batch reader's tombstone compaction.
+      // stack at once: byte-range split planning, row-index positions,
+      // row-group stats pruning under the range predicate, and the
+      // vectorized batch reader's tombstone compaction.
       """SELECT CAST(l_partkey % 10 AS BIGINT) AS bucket,
         |  CAST(count(*) AS BIGINT) AS n,
         |  sum(l_quantity) AS qty, round(sum(l_extendedprice), 2) AS rev
@@ -283,7 +283,7 @@ object CatalogQueries {
       // re-parse at 100 TB. The lifecycle covers write-through (CTAS into
       // the lake), typed path extraction under filter/aggregate, and a
       // MoR DELETE over the variant table (tombstoned variant files read
-      // through the positional row readers). The oracle replays the same
+      // through the merge-on-read row reader). The oracle replays the same
       // shredding from the raw JSON strings with DuckDB's json functions.
       """WITH shredded AS (
         |  SELECT event_type, event_id,

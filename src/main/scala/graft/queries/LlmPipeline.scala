@@ -2284,7 +2284,7 @@ object LlmPipeline {
           coalesce(size(col("cov")), lit(0)).cast("long").as("n_removed"),
           {
             val covSafe = coalesce(col("cov"), array().cast("array<int>"))
-            val keptArr = filter(col("w"), (tok, i) => !array_contains(covSafe, i))
+            val keptArr = filter(col("w"), (_, i) => !array_contains(covSafe, i))
             when(size(keptArr) === 0, lit(null).cast("string"))
               .otherwise(md5(array_join(keptArr, " "))).as("kept_md5")
           })

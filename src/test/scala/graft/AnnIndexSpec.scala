@@ -28,7 +28,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("probe scan is partition-pruned to exactly the query's bucket files") {
     AnnIndex.buildSrpIndex(spark, emb, table)
-    val keys = AnnIndex.queryKeys(spark, emb, queryVecId = 0L).toSet
+    val keys = AnnIndex.queryKeys(emb, queryVecId = 0L).toSet
     val t = spark.sessionState.catalogManager.catalog("lake")
       .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
       .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(

@@ -163,10 +163,22 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(spark.table(t).count() == expect.size)
     assert(spark.sql(s"SELECT count(*) FROM $t WHERE id <> _pos").head().getLong(0) == 0,
       "footer-exact positions must align with DV bitmaps across splits")
-    PositionalParquet.rowGroupsPruned.set(0L)
-    val r = spark.sql(s"SELECT id FROM $t WHERE id BETWEEN 30000 AND 30100").collect()
+    val q = spark.sql(s"SELECT id FROM $t WHERE id BETWEEN 30000 AND 30100")
+    val r = q.collect()
     assert(r.length == expect.count(i => i >= 30000 && i <= 30100))
-    assert(PositionalParquet.rowGroupsPruned.get() > 0)
+    // the groups the range misses are pruned: the scan reads at most the
+    // two groups a ~100-id range can span
+    val groupRows = {
+      import scala.jdk.CollectionConverters._
+      val f = PositionalParquet.openFooter(new org.apache.hadoop.fs.Path(
+        lakeMeta(t).currentFiles.head.path), spark.sessionState.newHadoopConf())
+      try f.getFooter.getBlocks.asScala.map(_.getRowCount) finally f.close()
+    }
+    assert(groupRows.size > 2)
+    val m = q.queryExecution.executedPlan
+      .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }.head
+      .metrics.map { case (k, v) => k -> v.value }
+    assert(m("numOutputRows") + m("tombstonedRows") <= 2 * groupRows.max, s"read $m")
     spark.sql(s"DROP TABLE $t")
   }
 

@@ -27,6 +27,22 @@ class MergeOnReadSpec extends AnyFunSuite {
       .asInstanceOf[LakeTable].meta
   }
 
+  /** Row counts of `path`'s row groups, from its footer. */
+  private def rowGroupRows(path: String): Seq[Long] = {
+    import scala.jdk.CollectionConverters._
+    val r = PositionalParquet.openFooter(new org.apache.hadoop.fs.Path(path),
+      spark.sessionState.newHadoopConf())
+    try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq finally r.close()
+  }
+
+  /** The lake scan's SQL metrics after `q` ran. */
+  private def scanMetrics(q: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    q.collect()
+    q.queryExecution.executedPlan.collect { case b: BatchScanExec => b }.head
+      .metrics.map { case (k, m) => k -> m.value }.toMap
+  }
+
   test("_file/_pos metadata columns: queryable, unique per row, stable across files") {
     val t = s"lake.mor.${uniq("meta")}"
     spark.sql(s"CREATE TABLE $t (id INT, v STRING)")
@@ -467,9 +483,9 @@ class MergeOnReadSpec extends AnyFunSuite {
     val meta0 = lakeMeta(t)
     assert(meta0.currentFiles.size == 1, s"${meta0.currentFiles.size} files")
     val file = meta0.currentFiles.head
-    val layout = PositionalParquet.rowGroupLayout(file.path, spark.sessionState.newHadoopConf())
+    val layout = rowGroupRows(file.path)
     assert(layout.size >= 4, s"need a multi-row-group file, got ${layout.size} groups")
-    assert(layout.map(_._2).sum == 100000L)
+    assert(layout.sum == 100000L)
 
     spark.sql(s"DELETE FROM $t WHERE id % 97 = 0") // tombstones across every group
     val expect = (0L until 100000L).filterNot(_ % 97 == 0)
@@ -482,10 +498,11 @@ class MergeOnReadSpec extends AnyFunSuite {
       val df = spark.table(t)
       val parts = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
         .flatMap(_.inputPartitions)
-      val posParts = parts.collect { case p: PositionalInputPartition => p }
+      val posParts = parts.collect { case p: MorInputPartition if p.dataPath.nonEmpty => p }
       assert(posParts.size >= 4,
         s"dirty file must read split-parallel, got ${posParts.size} positional partition(s)")
-      assert(posParts.map(p => (p.splitStart, p.splitEnd)).distinct.size == posParts.size)
+      assert(posParts.map(p => (p.inner.files.head.start, p.inner.files.head.length))
+        .distinct.size == posParts.size)
       // row-group-level parallelism with EXACT positions: the file was
       // written in id order, so every live row must satisfy _pos == id —
       // any split whose footer-derived start position is off by even one
@@ -510,21 +527,22 @@ class MergeOnReadSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, " +
       "concat('v', repeat('x', 64), id) FROM range(0, 100000)")
     spark.sql(s"DELETE FROM $t WHERE id % 97 = 0") // dirty → positional reads
-    val nGroups = PositionalParquet.rowGroupLayout(
-      lakeMeta(t).currentFiles.head.path, spark.sessionState.newHadoopConf()).size
+    val groupRows = rowGroupRows(lakeMeta(t).currentFiles.head.path)
+    val nGroups = groupRows.size
     assert(nGroups >= 4)
 
-    PositionalParquet.rowGroupsPruned.set(0L)
-    val rows = spark.sql(s"SELECT id, _pos FROM $t WHERE id BETWEEN 50000 AND 50100")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val q = spark.sql(s"SELECT id, _pos FROM $t WHERE id BETWEEN 50000 AND 50100")
+    val rows = q.collect().map(r => (r.getLong(0), r.getLong(1)))
     val expect = (50000L to 50100L).filterNot(_ % 97 == 0)
     assert(rows.map(_._1).sorted.sameElements(expect), s"got ${rows.length} rows")
     // positions survive group skipping: the file is id-ordered, so _pos == id
     assert(rows.forall { case (id, p) => id == p },
       "skipped row groups must not shift the position counter")
-    assert(PositionalParquet.rowGroupsPruned.get() >= nGroups - 3,
-      s"a ~100-id range over $nGroups groups must prune most of them, " +
-        s"pruned ${PositionalParquet.rowGroupsPruned.get()}")
+    // the groups the range misses are pruned: the scan reads at most the
+    // two groups a ~100-id range can span
+    val m = scanMetrics(q)
+    assert(m("numOutputRows") + m("tombstonedRows") <= 2 * groupRows.max,
+      s"a ~100-id range over $nGroups groups must prune most of them, read $m")
     // an unfiltered aggregate still sees every live row (no over-pruning)
     assert(spark.table(t).count() == 100000 - (0L until 100000L).count(_ % 97 == 0))
     spark.sql(s"DROP TABLE $t")
@@ -616,7 +634,7 @@ class MergeOnReadSpec extends AnyFunSuite {
     }
     // answers hash-identical to the row reader (the A/B semantics pin)
     val colSum = spark.sql(s"SELECT sum(st.a) AS s, sum(size(emb)) AS e FROM $t").head()
-    System.setProperty("graft.mor.columnar", "false")
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
     try {
       spark.sql(s"REFRESH TABLE $t")
       val rowRows = spark.sql(s"SELECT id, emb, tags, st, aa FROM $t").collect()
@@ -624,7 +642,7 @@ class MergeOnReadSpec extends AnyFunSuite {
         "columnar and row positional readers must agree bit-for-bit")
       val rowSum = spark.sql(s"SELECT sum(st.a) AS s, sum(size(emb)) AS e FROM $t").head()
       assert(rowSum == colSum)
-    } finally System.clearProperty("graft.mor.columnar")
+    } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
     spark.sql(s"DROP TABLE $t")
   }
 
@@ -671,9 +689,10 @@ class MergeOnReadSpec extends AnyFunSuite {
     val m1 = metricsOf(spark.table(t).select("id", "v"))
     assert(m1("tombstonedRows") == 500L, s"got $m1")
     assert(m1("batchesPassthrough") + m1("batchesCompacted") > 0, s"got $m1")
-    // a narrow range prunes most row groups and reports it
+    // a narrow range prunes most row groups: it reads at most the two it spans
     val m2 = metricsOf(spark.table(t).where("id BETWEEN 1000 AND 1199").select("id"))
-    assert(m2("rowGroupsPruned") > 0, s"got $m2")
+    val groupRows = rowGroupRows(lakeMeta(t).currentFiles.head.path)
+    assert(m2("numOutputRows") + m2("tombstonedRows") <= 2 * groupRows.max, s"got $m2")
     assert(m2("tombstonedRows") > 0 && m2("tombstonedRows") < 50,
       s"only the SURVIVING groups' tombstones count, got $m2")
     spark.sql(s"DROP TABLE $t")
@@ -697,6 +716,34 @@ class MergeOnReadSpec extends AnyFunSuite {
     val rows = spark.sql(s"SELECT _pos, v FROM $t WHERE id >= 40").collect()
     assert(rows.length == 10)
     assert(rows.map(_.getString(1)).toSet == (40 until 50).map(i => s"v$i").toSet)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("input_file_name() names the file on merge-on-read reads") {
+    val t = s"lake.mor.${uniq("ifn")}"
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING, n INT) " +
+      "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, concat('a', id), 1 FROM range(0, 1000)")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, concat('b', id), 1 FROM range(1000, 2000)")
+    def qualified(p: String): String = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(path).toUri.toString
+    }
+    val Seq(first, second) = lakeMeta(t).currentFiles.sortBy(_.firstRowId).map(f => qualified(f.path))
+    def rowsByName(sql: String): Map[String, Long] =
+      spark.sql(sql).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    spark.sql(s"DELETE FROM $t WHERE k = 5") // tombstones the first file
+    assert(rowsByName(s"SELECT input_file_name(), count(*) FROM $t GROUP BY 1") ==
+      Map(first -> 999L, second -> 1000L), "a tombstoned file")
+    assert(rowsByName(s"SELECT input_file_name(), count(_pos) FROM $t GROUP BY 1") ==
+      Map(first -> 999L, second -> 1000L), "a _pos read")
+
+    // an upsert epoch writes equality deletes for its keys: the older
+    // files keep their rows minus the overwritten ones, the new file the rest
+    graft.catalog.ScanPlanningSpec.upsert(t, Seq((1500L until 1510L).map(k => UpsRow(k, s"c$k", 2))))
+    val eq = rowsByName(s"SELECT input_file_name(), count(*) FROM $t WHERE n = 1 GROUP BY 1")
+    assert(eq == Map(first -> 999L, second -> 990L), "an equality-deleted file")
     spark.sql(s"DROP TABLE $t")
   }
 }

@@ -71,11 +71,11 @@ class RowLineageSpec extends AnyFunSuite {
     def read() = spark.sql(s"SELECT k, _row_id, _last_updated_seq FROM $t ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val columnar = read()
-    System.setProperty("graft.mor.columnar", "false")
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
     try {
       val rowMode = read()
       assert(columnar == rowMode)
-    } finally System.clearProperty("graft.mor.columnar")
+    } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
     assert(columnar.length == 500 - 56)
     spark.sql(s"DROP TABLE $t")
   }
@@ -99,10 +99,61 @@ class RowLineageSpec extends AnyFunSuite {
     val plan = exec.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
       s"materialized-lineage scan must stay vectorized:\n$plan")
-    System.setProperty("graft.mor.columnar", "false")
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
     try assert(columnar == read(), "row and columnar lineage must agree on materialized files")
-    finally System.clearProperty("graft.mor.columnar")
+    finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
     assert(columnar.length == 400 - 45 - 58 + 7) // 0..399 minus %9 (45), minus %7 (58), %63 double-counted (7)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("a filtered read of _file, _pos and lineage over clean, tombstoned and compacted files") {
+    val t = tbl("mix")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) TBLPROPERTIES (" +
+      "'write.delete.mode'='merge-on-read','write.parquet.row-group-size-bytes'='4096')")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, concat('a', id) FROM range(0, 400)")
+    spark.sql(s"DELETE FROM $t WHERE k % 9 = 0")
+    val carried = spark.sql(s"SELECT k, _row_id, _last_updated_seq FROM $t").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    graft.catalog.LakeMaintenance.compact(spark, t) // materializes lineage
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, concat('b', id) FROM range(400, 800)")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id, concat('c', id) FROM range(800, 1200)")
+    spark.sql(s"DELETE FROM $t WHERE k >= 800 AND k % 7 = 0")
+    val fs = filesOf(t)
+    assert(fs.length == 3 && fs.count(_._4) == 1, s"one compacted file and two appends: ${fs.toSeq}")
+    val compacted = fs.find(_._4).get._1
+    // appends reserve ascending ranges: the clean file, then the tombstoned one
+    val Array(clean, tombstoned) = fs.filterNot(_._4).sortBy(_._3)
+
+    def q() = spark.sql(s"SELECT k, _file, _pos, _row_id, _last_updated_seq FROM $t " +
+      "WHERE k BETWEEN 300 AND 900")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      assert((1 to 4).forall(!r.isNullAt(_)), s"no NULL metadata: $r")
+      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))
+    }.sortBy(_._1).toSeq
+    val vq = q()
+    val vectorized = rows(vq)
+    assert(vq.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      s"the mixed lineage scan must read vectorized:\n${vq.queryExecution.executedPlan}")
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    val rowMode = try rows(q()) finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    assert(vectorized == rowMode, "row and columnar readers must agree")
+
+    val keys = (300L to 900L).filterNot(k => (k < 400 && k % 9 == 0) || (k >= 800 && k % 7 == 0))
+    assert(vectorized.map(_._1) == keys)
+    // the compacted file's rows keep the ids and sequences they had
+    vectorized.filter(_._1 < 400).foreach { case (k, f, _, rid, seq) =>
+      assert(f == compacted && (rid, seq) == carried(k), s"row $k")
+    }
+    // appended rows: _pos is the ordinal in the id-ordered file and
+    // _row_id the file's range base plus it; one sequence per file
+    for ((file, lo, hi) <- Seq((clean, 400L, 800L), (tombstoned, 800L, 1200L))) {
+      val rs = vectorized.filter(r => r._1 >= lo && r._1 < hi)
+      assert(rs.nonEmpty && rs.forall(r => r._2 == file._1 && r._3 == r._1 - lo &&
+        r._4 == file._3 + r._3), s"rows of ${file._1}")
+      assert(rs.map(_._5).distinct.size == 1)
+    }
+    val seqOf = (lo: Long) => vectorized.find(_._1 >= lo).get._5
+    assert(carried.values.map(_._2).max < seqOf(400L) && seqOf(400L) < seqOf(800L))
     spark.sql(s"DROP TABLE $t")
   }
 

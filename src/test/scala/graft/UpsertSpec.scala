@@ -344,10 +344,10 @@ class UpsertSpec extends AnyFunSuite {
     val parts = df2.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
       .flatMap(_.inputPartitions)
     assert(parts.nonEmpty)
-    assert(!parts.exists(_.isInstanceOf[graft.catalog.PositionalInputPartition]),
-      "eq-only files must not use the whole-file positional reader")
-    assert(parts.exists(_.isInstanceOf[graft.catalog.EqFilteredInputPartition]),
-      "pre-upsert files must read through the eq-filtered delegate path")
+    assert(!parts.exists { case m: graft.catalog.MorInputPartition => m.dataPath.nonEmpty
+      case _ => false }, "eq-only files must not use the whole-file positional reader")
+    assert(parts.exists { case m: graft.catalog.MorInputPartition => m.eqDeletePaths.nonEmpty
+      case _ => false }, "pre-upsert files must read through the eq-filtered delegate path")
     // flat schema ⇒ the eq-filtered path reads VECTORIZED (batch-level
     // key anti-filter over the delegate's columnar reader); the EXECUTED
     // df's final plan shows the transition (AQE inserts it per stage)

@@ -103,11 +103,11 @@ class LakeFilterParamsSpec extends AnyFunSuite {
 
   test("a second point or range read over a tombstoned row-mode scan compiles nothing") {
     val t = bucketed(mor = true)
-    // keeps every tombstoned file on the row reader, so the filter sits
-    // directly on the scan (as MergeOnReadSpec's row reference does)
-    System.setProperty("graft.mor.columnar", "false")
+    // keeps every file on the row reader, so the filter sits directly on
+    // the scan (as MergeOnReadSpec's row reference does)
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
     try secondReadsCompileNothing(t, tombstoned = true, rowMode = true)
-    finally System.clearProperty("graft.mor.columnar")
+    finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
     spark.sql(s"DROP TABLE $t")
   }
 

@@ -48,8 +48,10 @@ class PositionalConfSpec extends AnyFunSuite {
         StructType(Seq(StructField("id", LongType))), conf)
       var n = 0
       try while (r.read() != null) n += 1 finally r.close()
+      val footer = PositionalParquet.openFooter(new org.apache.hadoop.fs.Path(dataPath), conf)
+      val groups = try footer.getRowGroups.size finally footer.close()
       (PositionalParquet.deletedPositions(dataPath, Seq(DeleteSlice(deletePath)), conf).toSeq,
-        PositionalParquet.rowGroupStats(dataPath, conf).size, n,
+        groups, n,
         FooterStats.entry(dataPath, StructType(Seq(StructField("id", LongType))).json, conf))
     }
     assert(positions == Seq(3L, 7L) && groups == 1 && rows == 1000)
@@ -64,8 +66,8 @@ class PositionalConfSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $t (id BIGINT) TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
     spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ id FROM range(0, 100)")
     spark.sql(s"DELETE FROM $t WHERE id % 10 = 3")
-    // every file is dirty, so the factory holds no delegate parquet factory
-    // (which carries the session's SQL conf by design)
+    // Spark's parquet factory carries the session's SQL conf as every clean
+    // scan's does; the Hadoop conf must ride the broadcast, not the factory
     def factoryBytes(): Int = {
       val df = spark.table(t)
       assert(df.count() == 90L)
@@ -80,8 +82,9 @@ class PositionalConfSpec extends AnyFunSuite {
     }
     val before = factoryBytes()
     val pad = "x" * 200000
-    spark.conf.set("graft.test.pad", pad)
-    val after = try factoryBytes() finally spark.conf.unset("graft.test.pad")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("graft.test.pad", pad)
+    val after = try factoryBytes() finally hadoopConf.unset("graft.test.pad")
     assert(after - before < pad.length / 10, s"factory grew from $before to $after bytes")
     spark.sql(s"DROP TABLE $t")
   }

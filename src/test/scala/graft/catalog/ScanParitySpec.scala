@@ -108,8 +108,10 @@ class ScanParitySpec extends AnyFunSuite {
     val files = lt.meta.currentFiles
     val imported = files.filter(_.path.contains("ext ")).map(_.path)
     assert(imported.size == 1)
-    assert(PositionalParquet.rowGroupLayout(imported.head,
-      spark.sessionState.newHadoopConf()).size > 1, "the imported file needs several row groups")
+    val footer = PositionalParquet.openFooter(new org.apache.hadoop.fs.Path(imported.head),
+      spark.sessionState.newHadoopConf())
+    try assert(footer.getRowGroups.size > 1, "the imported file needs several row groups")
+    finally footer.close()
 
     withSmallSplits {
       val exprs = Seq(ce.IsNotNull(col("id", LongType)),
@@ -161,11 +163,10 @@ class ScanParitySpec extends AnyFunSuite {
       val clean = lt.meta.currentFiles.filterNot(_.path == target)
       val mixed = lakeScan(lt, lt.schema()).toBatch
       assert(mixed.isInstanceOf[LakeMixedBatch])
-      val (positional, delegated) = mixed.planInputPartitions().toSeq
-        .partition(_.isInstanceOf[PositionalInputPartition])
-      assert(positional.map(_.asInstanceOf[PositionalInputPartition].dataPath).distinct ==
-        Seq(target))
-      assert(splits(delegated) == planned(parquetTableScan(lt, clean, lt.schema())))
+      val parts = mixed.planInputPartitions().toSeq.map(_.asInstanceOf[MorInputPartition])
+      val (positional, delegated) = parts.partition(_.dataPath.nonEmpty)
+      assert(positional.map(_.dataPath).distinct == Seq(target))
+      assert(splits(delegated.map(_.inner)) == planned(parquetTableScan(lt, clean, lt.schema())))
     }
     assert(spark.table(t).count() == 2999L)
     spark.sql(s"DROP TABLE $t")
@@ -185,12 +186,12 @@ class ScanParitySpec extends AnyFunSuite {
       val batch = lakeScan(lt, required).toBatch
       assert(batch.isInstanceOf[LakeMixedBatch])
       val (eq, clean) = batch.planInputPartitions().toSeq
-        .partition(_.isInstanceOf[EqFilteredInputPartition])
-      assert(eq.map(_.asInstanceOf[EqFilteredInputPartition].eqDeletePaths).distinct.size == 1,
+        .partition(_.isInstanceOf[MorInputPartition])
+      assert(eq.map(_.asInstanceOf[MorInputPartition].eqDeletePaths).distinct.size == 1,
         "one upsert epoch makes one equality-delete group")
       assert(splits(clean) == planned(parquetTableScan(lt, newer, required)))
       // the eq group reads requested ∪ key columns; splits don't depend on them
-      assert(splits(eq.map(_.asInstanceOf[EqFilteredInputPartition].inner)) ==
+      assert(splits(eq.map(_.asInstanceOf[MorInputPartition].inner)) ==
         planned(parquetTableScan(lt, older, StructType(lt.schema().filter(_.name != "n")))))
     }
     assert(spark.table(t).count() == 2000L)

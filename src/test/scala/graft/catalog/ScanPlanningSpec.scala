@@ -73,7 +73,7 @@ class ScanPlanningSpec extends AnyFunSuite {
   private def paths(b: org.apache.spark.sql.connector.read.Batch): Set[String] =
     b.planInputPartitions().flatMap {
       case fp: FilePartition => fp.files.map(_.toPath.toString).toSeq
-      case pp: PositionalInputPartition => Seq(qualified(pp.dataPath))
+      case m: MorInputPartition => m.inner.files.map(_.toPath.toString).toSeq
       case other => fail(s"unexpected partition $other")
     }.toSet
 
@@ -127,7 +127,7 @@ class ScanPlanningSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT v FROM $t")
     val (plan, broadcasts) = freshShape(broadcastsDuring(df.queryExecution.executedPlan))
     val parts = plan.collect { case b: BatchScanExec => b }.flatMap(_.inputPartitions)
-    val groups = parts.collect { case e: EqFilteredInputPartition => e.eqDeletePaths }.distinct
+    val groups = parts.collect { case m: MorInputPartition => m.eqDeletePaths }.distinct
     assert(groups.size == 2, s"expected two equality-delete groups, got $groups")
     // the scan's conf, the equality-delete groups' conf, and the one
     // broadcast of the delete files' keys
